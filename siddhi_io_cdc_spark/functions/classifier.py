@@ -96,10 +96,6 @@ def fast_sigmoid(z: Column) -> Column:
     return F.lit(0.5) + z / (F.lit(2.0) * (F.lit(1.0) + F.abs(z)))
 
 
-def _fast_sigmoid_py(z: float) -> float:
-    return 0.5 + z / (2.0 * (1.0 + abs(z)))
-
-
 def _round9(x: float) -> float:
     """Round a collected scalar to 9 decimals HALF-AWAY-FROM-ZERO on its
     shortest decimal repr — the same rule as Spark's ``F.round`` (Java

@@ -142,18 +142,6 @@ def token_shingle_hashes(col: Column | str, k: int = 5) -> Column:
     return F.array_distinct(shingles)
 
 
-def char_ngram_hashes(col: Column | str, n: int = 3) -> Column:
-    """Distinct 64-bit hashes of character n-grams of the normalized text."""
-    norm = normalize_text(col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(norm) - n + 1, F.lit(1))),
-        lambda i: F.xxhash64(norm.substr(i, F.lit(n))),
-    )
-    return F.array_distinct(grams)
-
-
-
-
 def _band_keys(sig: Column, bands: int, rows_per_band: int) -> Column:
     """Array of (band, bkey) structs: each band's key is a rolling
     ``xxhash64(acc, x)`` combine over its signature slice — no string

@@ -23,15 +23,13 @@ any size joins against any depth of history without a range explosion.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from siddhi_io_cdc_spark.operators.mutate import rekey_deletes
+from siddhi_io_cdc_spark.operators.mutate import rekey_deletes, swap_partitions
 
 __all__ = [
     "changelog_history",
@@ -143,33 +141,25 @@ def merge_history_into_parquet(
         return
 
     touched = [r[0] for r in new_events.select(bucket_expr.alias("b")).distinct().collect()]
-    # mergeSchema: survives additive evolution of the value columns (same
-    # single-footer-sample hazard as the bucketed merge store).
-    stored = (
-        spark.read.option("mergeSchema", "true").parquet(target_path)
-        .where(F.col("__bucket").isin(touched))
-        .drop("__bucket")
-    )
-    # A stored version is its opening event; tombstones were deletes.
-    old_events = stored.select(
-        *keys,
-        *value_cols,
-        F.when(F.col("is_deleted"), F.lit("delete")).otherwise(F.lit("insert")).alias("__op"),
-        F.col("valid_from").alias("__seq"),
-    )
-    merged = _derive(old_events.unionByName(new_events))
-    staging = target_path + ".stage-" + uuid.uuid4().hex
-    merged.write.partitionBy("__bucket").parquet(staging)
-    try:
-        (
-            spark.read.parquet(staging)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__bucket")
-            .parquet(target_path)
+
+    def merged_buckets() -> DataFrame:
+        # mergeSchema: survives additive evolution of the value columns (same
+        # single-footer-sample hazard as the bucketed merge store).
+        stored = (
+            spark.read.option("mergeSchema", "true").parquet(target_path)
+            .where(F.col("__bucket").isin(touched))
+            .drop("__bucket")
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        # A stored version is its opening event; tombstones were deletes.
+        old_events = stored.select(
+            *keys,
+            *value_cols,
+            F.when(F.col("is_deleted"), F.lit("delete")).otherwise(F.lit("insert")).alias("__op"),
+            F.col("valid_from").alias("__seq"),
+        )
+        return _derive(old_events.unionByName(new_events))
+
+    swap_partitions(spark, target_path, "__bucket", touched, merged_buckets)
 
 
 def foreach_batch_history(

@@ -22,7 +22,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -221,6 +221,91 @@ def merge_into_parquet(
 
 
 BUCKET_COL = "__bucket"
+#: Prefix of the aside directory a partition swap parks live partitions in;
+#: Spark's file listing skips names that start with ``_``.
+_SWAP_PREFIX = "_swap-"
+
+
+def _fs(spark, path: str):
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src.toString()} -> {dst.toString()} failed")
+
+
+def swap_partitions(
+    spark,
+    path: str,
+    part_col: str,
+    touched: Sequence[int],
+    replacement: Callable[[], DataFrame],
+) -> None:
+    """Replace the ``touched`` partitions of the partitioned parquet table
+    at ``path`` with the rows ``replacement()`` returns (rows carry
+    ``part_col``).
+
+    The rows are written ONCE, to a sibling staging directory, under a
+    ``rebalance`` hint on ``part_col``: each partition's rows meet in one
+    writer task, so each partition is one file (AQE splits a partition
+    only past its advisory partition size, so a huge bucket still
+    parallelizes). Then, per partition, through the Hadoop FileSystem API
+    (local, hdfs:// and s3a:// paths alike): the live ``part=b`` is renamed
+    aside into ``{path}/_swap-<uuid>/`` and the staged ``part=b``, if the
+    replacement has rows there, is renamed into place. A touched partition
+    with no staged rows is thereby emptied. The aside directory is dropped
+    once every swap is done. A table left with no partition at all keeps
+    one zero-row partition so its schema stays readable.
+
+    Crash-safety: the call first restores every ``_swap-*/part=b`` whose
+    live ``part=b`` is missing (a crash between the two renames), then
+    drops the ``_swap-*`` directories. ``replacement`` is a builder called
+    only after that recovery, so a scan of ``path`` inside it lists the
+    restored partitions; re-running the interrupted batch converges.
+    """
+    touched_names = {f"{part_col}={b}" for b in touched}
+    if not touched_names:
+        return
+    fs, root, jvm = _fs(spark, path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    root = fs.makeQualified(root)
+    entries = {st.getPath().getName() for st in fs.listStatus(root)}
+    for aside in sorted(e for e in entries if e.startswith(_SWAP_PREFIX)):
+        for st in fs.listStatus(Path(root, aside)):
+            name = st.getPath().getName()
+            if name not in entries:
+                _rename(fs, st.getPath(), Path(root, name))
+                entries.add(name)
+        fs.delete(Path(root, aside), True)
+    live = {e for e in entries if e.startswith(part_col + "=")}
+
+    rows = replacement()
+    staging = Path(root.toString() + ".stage-" + uuid.uuid4().hex)
+    try:
+        rows.hint("rebalance", part_col).write.partitionBy(part_col).parquet(staging.toString())
+        staged = {
+            st.getPath().getName()
+            for st in fs.listStatus(staging)
+            if st.getPath().getName().startswith(part_col + "=")
+        }
+        aside = Path(root, _SWAP_PREFIX + uuid.uuid4().hex)
+        fs.mkdirs(aside)
+        for name in sorted(touched_names | staged):
+            if name in live:
+                _rename(fs, Path(root, name), Path(aside, name))
+            if name in staged:
+                _rename(fs, Path(staging, name), Path(root, name))
+        fs.delete(aside, True)
+        if not staged and live <= touched_names:
+            # No lineage to the (now-deleted) old files: fresh empty frame.
+            spark.createDataFrame([], rows.drop(part_col).schema).write.parquet(
+                Path(root, f"{part_col}={min(touched)}").toString()
+            )
+    finally:
+        fs.delete(staging, True)
 
 
 def merge_into_bucketed_parquet(
@@ -237,14 +322,15 @@ def merge_into_bucketed_parquet(
     """Partition-pruned merge: the scale-correct parquet mutation store.
 
     The table is laid out hash-bucketed on the merge key
-    (``{target}/__bucket=k/``). A micro-batch touches only the buckets its
-    keys hash into, so per batch we: (1) read ONLY those partitions
-    (partition pruning on the bucket column), (2) apply the changelog to
-    that slice, (3) rewrite ONLY those partitions via dynamic partition
-    overwrite. I/O per batch is O(touched buckets), not O(table) — the plain
-    -parquet equivalent of a lakehouse ``MERGE INTO``; with Delta/Iceberg
-    this whole function collapses into their merge statement behind the same
-    call signature.
+    (``{target}/__bucket=k/``, one file per bucket). A micro-batch touches
+    only the buckets its keys hash into, so per batch we: (1) read ONLY
+    those partitions (partition pruning on the bucket column), (2) apply
+    the changelog to that slice, (3) write the merged slice once and swap
+    each touched bucket directory in by rename (:func:`swap_partitions`).
+    I/O per batch is O(touched buckets), not O(table) — the plain-parquet
+    equivalent of a lakehouse ``MERGE INTO``; with Delta/Iceberg this whole
+    function collapses into their merge statement behind the same call
+    signature.
     """
     keys = list(key)
     # Touched-bucket discovery must see the REAL delete keys (they live in
@@ -259,59 +345,36 @@ def merge_into_bucketed_parquet(
             ]
         empty = spark.createDataFrame([], batch_df.select(*table_columns).schema)
         merged = apply_changelog(empty, batch_df, key=keys, seq_col=seq_col, op_col=op_col)
-        merged.withColumn(BUCKET_COL, bucket_expr).write.partitionBy(BUCKET_COL).parquet(
-            target_path
+        (
+            merged.withColumn(BUCKET_COL, bucket_expr)
+            .hint("rebalance", BUCKET_COL)
+            .write.partitionBy(BUCKET_COL)
+            .parquet(target_path)
         )
         return
 
     touched = [
         r[0] for r in batch_df.select(bucket_expr.alias("b")).distinct().collect()
     ]  # ≤ num_buckets small ints — a driver-safe collect
-    # mergeSchema: after additive evolution, buckets untouched since the
-    # evolution lack the new column in their footers; a single-footer sample
-    # would silently DROP that column (and a later merge would then erase its
-    # values). The union schema costs one footer read per file of the pruned
-    # buckets only.
-    target = (
-        spark.read.option("mergeSchema", "true").parquet(target_path)
-        .where(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
-        .drop(BUCKET_COL)
-    )
-    if evolve:
-        target, batch_df = evolve_target_schema(target, batch_df, op_col=op_col)
-    merged = apply_changelog(target, batch_df, key=keys, seq_col=seq_col, op_col=op_col)
-    # Stage the merged buckets first: Spark cannot overwrite partitions it is
-    # lazily reading from (self-overwrite). The staging write is O(touched
-    # buckets), so the partition-pruned cost model holds.
-    staging = target_path + ".stage-" + uuid.uuid4().hex
-    merged.withColumn(BUCKET_COL, bucket_expr).write.partitionBy(BUCKET_COL).parquet(staging)
-    try:
-        present = {
-            int(os.path.basename(d).split("=", 1)[1])
-            for d in (os.listdir(staging) if os.path.isdir(staging) else [])
-            if d.startswith(BUCKET_COL + "=")
-        }
-        if present:
-            (
-                spark.read.parquet(staging)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(BUCKET_COL)
-                .parquet(target_path)
-            )
-        # Dynamic overwrite cannot write an EMPTY partition: a bucket whose
-        # rows were all deleted keeps its stale files. Drop those directories.
-        for b in set(touched) - present:
-            shutil.rmtree(os.path.join(target_path, f"{BUCKET_COL}={b}"), ignore_errors=True)
-        # A fully-emptied store must stay readable: keep one zero-row bucket
-        # dir so the parquet schema survives.
-        if not any(d.startswith(BUCKET_COL + "=") for d in os.listdir(target_path)):
-            # No lineage to the (now-deleted) target files: fresh empty frame.
-            spark.createDataFrame([], merged.schema).write.parquet(
-                os.path.join(target_path, f"{BUCKET_COL}=0")
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+
+    def merged_buckets() -> DataFrame:
+        # mergeSchema: after additive evolution, buckets untouched since the
+        # evolution lack the new column in their footers; a single-footer
+        # sample would silently DROP that column (and a later merge would
+        # then erase its values). The union schema costs one footer read
+        # per file — one file per bucket.
+        target = (
+            spark.read.option("mergeSchema", "true").parquet(target_path)
+            .where(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
+            .drop(BUCKET_COL)
+        )
+        events = batch_df
+        if evolve:
+            target, events = evolve_target_schema(target, events, op_col=op_col)
+        merged = apply_changelog(target, events, key=keys, seq_col=seq_col, op_col=op_col)
+        return merged.withColumn(BUCKET_COL, bucket_expr)
+
+    swap_partitions(spark, target_path, BUCKET_COL, touched, merged_buckets)
 
 
 def read_bucketed_store(spark, target_path: str) -> DataFrame:

@@ -45,8 +45,3 @@ def get_spark(app_name: str = "siddhi-io-cdc-spark", shuffle_partitions: int | N
         )
     )
     return builder.getOrCreate()
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Load one of the driver-generated parquet tables (TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

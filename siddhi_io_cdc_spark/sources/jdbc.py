@@ -17,9 +17,9 @@ onto ``spark.read.jdbc``:
   ``<dbName>.recordSelectQuery`` YAML override
   (``PollingStrategy.java:127-205``).
 
-The SQL/plan builders below are pure (unit-testable without a database); the
-thin ``read_*`` wrappers execute them. They share offset semantics with the
-parquet-backed ``cdc-poll`` stream reader (``sources/polling.py``).
+The SQL/plan builders below are pure (unit-testable without a database);
+callers hand them to ``spark.read.jdbc``. They share offset semantics with
+the parquet-backed ``cdc-poll`` stream reader (``sources/polling.py``).
 """
 
 from __future__ import annotations
@@ -94,46 +94,3 @@ def _sql_lit(v) -> str:
     if isinstance(v, (int, float)):
         return str(v)
     return "'" + str(v).replace("'", "''") + "'"
-
-
-def jdbc_options(url: str, username: str | None, password: str | None, extra: dict | None = None) -> dict:
-    opts = dict(extra or {})
-    if username is not None:
-        opts["user"] = username
-    if password is not None:
-        opts["password"] = password
-    opts["url"] = url
-    return opts
-
-
-def read_current_offset(spark, url: str, table: str, polling_column: str, username=None, password=None, options=None):
-    """Live seed read: current max polling-column value or the -1 sentinel."""
-    df = spark.read.format("jdbc").options(
-        **jdbc_options(url, username, password, options),
-        dbtable=max_offset_query(table, polling_column),
-    ).load()
-    row = df.first()
-    return EMPTY_SENTINEL if row is None or row[0] is None else row[0]
-
-
-def read_increment(
-    spark,
-    url: str,
-    table: str,
-    polling_column: str,
-    low,
-    high,
-    columns: Sequence[str] | None = None,
-    num_partitions: int = 4,
-    username=None,
-    password=None,
-    options=None,
-):
-    """Read the (low, high] increment in parallel range partitions."""
-    preds = range_predicates(polling_column, low, high, num_partitions)
-    return spark.read.jdbc(
-        url=url,
-        table=incremental_query(table, polling_column, columns),
-        predicates=preds,
-        properties={k: str(v) for k, v in jdbc_options(url, username, password, options).items()},
-    )

@@ -50,10 +50,10 @@ from pyspark.sql import functions as F
 
 from siddhi_io_cdc_spark.functions.text import normalize_text
 from siddhi_io_cdc_spark.functions.similarity import _hadoop_read_text
+from siddhi_io_cdc_spark.operators.mutate import swap_partitions
 from siddhi_io_cdc_spark.streaming.ivf_index import (
     _hadoop_delete,
     _hadoop_exists,
-    _hadoop_list_dirs,
     _hadoop_write_text,
     _marker_path,
 )
@@ -214,38 +214,29 @@ def read_bm25_stats(spark, index_path: str) -> tuple[int, int]:
     return n, t
 
 
-def _merge_partitioned(
+def _swap_doc_rows(
     spark,
     path: str,
     part_col: str,
     touched: list[int],
-    replacement: DataFrame,
+    batch_ids: DataFrame,
+    id_col: str,
+    new_rows: DataFrame,
 ) -> None:
-    """Replace the touched partitions of ``path`` with ``replacement``
-    (already carrying ``part_col``): stage → dynamic partition overwrite →
-    drop emptied partition dirs. Same shape as the IVF applier's swap."""
-    import uuid
+    """Replace the batch docs' rows in the touched partitions of ``path``:
+    drop every stored row of the batch's docs (anti-join on the doc id —
+    covers removed terms), add ``new_rows`` (carrying ``part_col``), and
+    swap the partitions in (:func:`...mutate.swap_partitions`)."""
 
-    staging = path + ".stage-" + uuid.uuid4().hex
-    replacement.write.partitionBy(part_col).parquet(staging)
-    try:
-        present = {
-            int(d.split("=", 1)[1])
-            for d in _hadoop_list_dirs(spark, staging)
-            if d.startswith(part_col + "=")
-        }
-        if present:
-            (
-                spark.read.parquet(staging)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(part_col)
-                .parquet(path)
-            )
-        for b in set(touched) - present:
-            _hadoop_delete(spark, path + f"/{part_col}={b}")
-    finally:
-        _hadoop_delete(spark, staging)
+    def rows() -> DataFrame:
+        kept = (
+            spark.read.parquet(path)
+            .where(F.col(part_col).isin(touched))  # partition-pruned read
+            .join(F.broadcast(batch_ids), id_col, "left_anti")
+        )
+        return kept.unionByName(new_rows)
+
+    swap_partitions(spark, path, part_col, touched, rows)
 
 
 def apply_changelog_bm25(
@@ -353,19 +344,8 @@ def apply_changelog_bm25(
             .agg(F.count(F.lit(1)).alias("tf"))
             .withColumn(TBUCKET_COL, _tbucket(F.col("term"), nbuckets))
         )
-        target = (
-            spark.read.parquet(base + "/postings")
-            .where(F.col(TBUCKET_COL).isin(touched_t))
-        )
-        # Drop every surviving posting of the batch's docs (anti-join on the
-        # doc id — covers removed terms), then add the new rows.
-        kept = target.join(F.broadcast(batch_ids), "doc_id", "left_anti")
-        _merge_partitioned(
-            spark,
-            base + "/postings",
-            TBUCKET_COL,
-            touched_t,
-            kept.unionByName(new_tf),
+        _swap_doc_rows(
+            spark, base + "/postings", TBUCKET_COL, touched_t, batch_ids, "doc_id", new_tf
         )
 
     # docs/ table: replace the batch docs' rows in their doc buckets. Every
@@ -392,13 +372,8 @@ def apply_changelog_bm25(
         ).distinct().collect()
     ]
     if touched_d:
-        dtarget = (
-            spark.read.parquet(base + "/docs")
-            .where(F.col(DBUCKET_COL).isin(touched_d))
-        )
-        dkept = dtarget.join(F.broadcast(batch_ids), "doc_id", "left_anti")
-        _merge_partitioned(
-            spark, base + "/docs", DBUCKET_COL, touched_d, dkept.unionByName(new_dl)
+        _swap_doc_rows(
+            spark, base + "/docs", DBUCKET_COL, touched_d, batch_ids, "doc_id", new_dl
         )
 
     _write_stats(spark, base)

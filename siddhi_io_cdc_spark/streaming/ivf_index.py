@@ -11,8 +11,8 @@ Composes the two existing patterns:
   rebuild over the current table state — pinned by
   ``tests/test_ivf_maintenance.py``);
 - the partition-pruned merge of ``operators/mutate.py:
-  merge_into_bucketed_parquet`` (read only touched partitions, stage, swap
-  via dynamic partition overwrite, clear emptied partitions), with one
+  merge_into_bucketed_parquet`` (read only touched partitions, write them
+  once, swap each in by rename via ``swap_partitions``), with one
   IVF-specific twist: the partition key is SEMANTIC — ``cell =
   ivf_assign(embedding)`` — so an update can MOVE a row between
   partitions. The touched set is therefore cells of the AFTER images plus
@@ -34,7 +34,6 @@ index can live on s3a:// / hdfs:// as well as local paths.
 from __future__ import annotations
 
 import json
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,15 +43,9 @@ from siddhi_io_cdc_spark.functions.similarity import (
     _hadoop_write_text,
     ivf_assign,
 )
-from siddhi_io_cdc_spark.operators.mutate import apply_changelog
+from siddhi_io_cdc_spark.operators.mutate import _fs, apply_changelog, swap_partitions
 
 CELL_COL = "cell"
-
-
-def _fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
 
 
 def _hadoop_exists(spark, path: str) -> bool:
@@ -187,40 +180,18 @@ def apply_changelog_ivf(
             _hadoop_write_text(spark, _marker_path(index_path, batch_id), "done")
         return
 
-    target = (
-        spark.read.parquet(index_path)
-        .where(F.col(CELL_COL).isin(touched))  # partition-pruned read
-        .drop(CELL_COL)
-    )
-    merged = apply_changelog(
-        target, batch_df, key=[id_col], seq_col=seq_col, op_col=op_col
-    )
-    merged_cells = merged.withColumn(CELL_COL, ivf_assign(F.col(vec_col), centroids))
+    def merged_cells() -> DataFrame:
+        target = (
+            spark.read.parquet(index_path)
+            .where(F.col(CELL_COL).isin(touched))  # partition-pruned read
+            .drop(CELL_COL)
+        )
+        merged = apply_changelog(
+            target, batch_df, key=[id_col], seq_col=seq_col, op_col=op_col
+        )
+        return merged.withColumn(CELL_COL, ivf_assign(F.col(vec_col), centroids))
 
-    # Stage first: the merged plan lazily reads the very files the dynamic
-    # overwrite replaces (self-overwrite), same as the bucketed merge store.
-    staging = index_path.rstrip("/") + ".stage-" + uuid.uuid4().hex
-    merged_cells.write.partitionBy(CELL_COL).parquet(staging)
-    try:
-        present = {
-            int(d.split("=", 1)[1])
-            for d in _hadoop_list_dirs(spark, staging)
-            if d.startswith(CELL_COL + "=")
-        }
-        if present:
-            (
-                spark.read.parquet(staging)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(CELL_COL)
-                .parquet(index_path)
-            )
-        # Dynamic overwrite cannot write an EMPTY partition: a cell whose
-        # rows were all deleted keeps its stale files — drop the directory.
-        for c in set(touched) - present:
-            _hadoop_delete(spark, index_path.rstrip("/") + f"/{CELL_COL}={c}")
-    finally:
-        _hadoop_delete(spark, staging)
+    swap_partitions(spark, index_path.rstrip("/"), CELL_COL, touched, merged_cells)
     if batch_id is not None:
         _hadoop_write_text(spark, _marker_path(index_path, batch_id), "done")
 

@@ -64,7 +64,7 @@ from siddhi_io_cdc_spark.functions.similarity import (
     _hadoop_read_text,
     _hadoop_write_text,
 )
-from siddhi_io_cdc_spark.streaming.bm25_index import _merge_partitioned
+from siddhi_io_cdc_spark.streaming.bm25_index import _swap_doc_rows
 from siddhi_io_cdc_spark.streaming.ivf_index import (
     _hadoop_delete,
     _hadoop_exists,
@@ -305,14 +305,8 @@ def apply_changelog_ngram(
     })
 
     if touched:
-        target = (
-            spark.read.parquet(base + "/grams")
-            .where(F.col(GBUCKET_COL).isin(touched))
-        )
-        kept = target.join(F.broadcast(batch_ids), id_col, "left_anti")
-        _merge_partitioned(
-            spark, base + "/grams", GBUCKET_COL, touched,
-            kept.unionByName(new_tf),
+        _swap_doc_rows(
+            spark, base + "/grams", GBUCKET_COL, touched, batch_ids, id_col, new_tf
         )
 
     # roster: replace the batch docs' rows in their doc buckets (deletes
@@ -336,14 +330,8 @@ def apply_changelog_ngram(
         ).distinct().collect()
     ]
     if touched_d:
-        dtarget = (
-            spark.read.parquet(base + "/docs")
-            .where(F.col(DBUCKET_COL).isin(touched_d))
-        )
-        dkept = dtarget.join(F.broadcast(batch_ids), id_col, "left_anti")
-        _merge_partitioned(
-            spark, base + "/docs", DBUCKET_COL, touched_d,
-            dkept.unionByName(new_roster),
+        _swap_doc_rows(
+            spark, base + "/docs", DBUCKET_COL, touched_d, batch_ids, id_col, new_roster
         )
 
     if batch_id is not None:

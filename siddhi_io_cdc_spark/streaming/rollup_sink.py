@@ -24,13 +24,12 @@ stream equivalence test pins store state == one-shot batch rollup.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from siddhi_io_cdc_spark.operators.mutate import swap_partitions
 from siddhi_io_cdc_spark.plans.rollup import _check_granularities
 
 BUCKET_COL = "__bucket"
@@ -82,33 +81,26 @@ def merge_rollup_batch(
         return
 
     touched = [r[0] for r in partials.select(bucket_expr.alias("b")).distinct().collect()]
-    existing = (
-        spark.read.parquet(store_path)
-        .where(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
-        .drop(BUCKET_COL)
-    )
-    merged = (
-        existing.unionByName(partials)
-        .groupBy(*group_cols)
-        .agg(
-            F.sum("__sum").cast("decimal(38,2)").alias("__sum"),
-            F.sum("__cnt").alias("__cnt"),
-            F.min("__min").alias("__min"),
-            F.max("__max").alias("__max"),
+
+    def merged_buckets() -> DataFrame:
+        existing = (
+            spark.read.parquet(store_path)
+            .where(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
+            .drop(BUCKET_COL)
         )
-    )
-    staging = store_path + ".stage-" + uuid.uuid4().hex
-    merged.withColumn(BUCKET_COL, bucket_expr).write.partitionBy(BUCKET_COL).parquet(staging)
-    try:
-        (
-            spark.read.parquet(staging)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(store_path)
+        merged = (
+            existing.unionByName(partials)
+            .groupBy(*group_cols)
+            .agg(
+                F.sum("__sum").cast("decimal(38,2)").alias("__sum"),
+                F.sum("__cnt").alias("__cnt"),
+                F.min("__min").alias("__min"),
+                F.max("__max").alias("__max"),
+            )
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        return merged.withColumn(BUCKET_COL, bucket_expr)
+
+    swap_partitions(spark, store_path, BUCKET_COL, touched, merged_buckets)
 
 
 def foreach_batch_rollup(

@@ -434,15 +434,6 @@ def foreach_batch_bloom(spark, path: str, **kwargs):
     return _apply
 
 
-def foreach_batch_hll(spark, path: str, **kwargs):
-    """``writeStream.foreachBatch`` adapter for :func:`apply_changelog_hll`."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_changelog_hll(spark, batch_df, path, batch_id=batch_id, **kwargs)
-
-    return _apply
-
-
 def write_qhist_state(
     spark,
     df: DataFrame,

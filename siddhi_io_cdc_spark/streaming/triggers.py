@@ -33,16 +33,3 @@ def cron_run(writer, timeout: float | None = None) -> None:
     """
     query = writer.trigger(availableNow=True).start()
     query.awaitTermination(timeout)
-
-
-def validate_polling_options(
-    polling_interval: float = 1.0,
-    cron_expression: str | None = None,
-    wait_on_missed_record: bool = False,
-) -> None:
-    """Mode-parameter validation (T13, CDCSource.java:804-823)."""
-    if polling_interval < 0:
-        raise ValueError("polling.interval must be >= 0")
-    if cron_expression is not None and wait_on_missed_record:
-        # CDCSource.java:804-807: cron and missed-record wait cannot combine.
-        raise ValueError("cron.expression cannot be used with wait.on.missed.record")

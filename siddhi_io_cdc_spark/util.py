@@ -3,8 +3,12 @@
 from __future__ import annotations
 
 import contextlib
+import logging
+import os
 
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 # Cache-lifetime bookkeeping for multi-reference pipelines (minhash/simhash/
 # n-gram/embedding near-dup): those operators MUST persist intermediates that
@@ -115,11 +119,30 @@ def aqe_off(spark):
 #: decompressed text it predicts, so 32 KiB of estimate per core ≈ a few
 #: hundred KiB of real per-core work — comfortably above the measured
 #: shuffle tax, comfortably below the measured serialization cliff.
-#: Production override: SPARK_GRAFT_FANOUT_MIN_SLOT_KIB (KiB per slot).
-MIN_FAN_OUT_BYTES_PER_SLOT = (
-    int(__import__("os").environ.get("SPARK_GRAFT_FANOUT_MIN_SLOT_KIB", "32"))
-    * 1024
-)
+#: Production override: SPARK_GRAFT_FANOUT_MIN_SLOT_KIB (KiB per slot), read
+#: when :func:`fan_out` is called.
+MIN_FAN_OUT_BYTES_PER_SLOT = 32 * 1024
+
+
+def _min_fan_out_bytes_per_slot() -> int:
+    """``SPARK_GRAFT_FANOUT_MIN_SLOT_KIB`` in bytes if set, else
+    ``MIN_FAN_OUT_BYTES_PER_SLOT``. A malformed value (``64k``, empty,
+    negative) falls back to that 32 KiB default with a warning rather than
+    failing the caller."""
+    raw = os.environ.get("SPARK_GRAFT_FANOUT_MIN_SLOT_KIB")
+    if raw is None:
+        return MIN_FAN_OUT_BYTES_PER_SLOT
+    try:
+        kib = int(raw)
+    except ValueError:
+        kib = -1
+    if kib < 0:
+        _log.warning(
+            "SPARK_GRAFT_FANOUT_MIN_SLOT_KIB=%r is not a non-negative integer "
+            "(KiB per slot); using the default of 32", raw,
+        )
+        return MIN_FAN_OUT_BYTES_PER_SLOT
+    return kib * 1024
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
@@ -157,12 +180,11 @@ def fan_out(
     costs more scheduling than the narrow compute it parallelizes. Unknown
     sizes (no stats) widen as before — the conservative choice for the
     scale this engine targets. ``min_bytes_per_slot=None`` (default) reads
-    ``MIN_FAN_OUT_BYTES_PER_SLOT`` at CALL time, so the threshold stays
-    env-tunable (a definition-time default froze the constant into the
-    signature and silently ignored overrides).
+    ``SPARK_GRAFT_FANOUT_MIN_SLOT_KIB`` (else ``MIN_FAN_OUT_BYTES_PER_SLOT``)
+    at CALL time, so the threshold stays tunable after import.
     """
     if min_bytes_per_slot is None:
-        min_bytes_per_slot = MIN_FAN_OUT_BYTES_PER_SLOT
+        min_bytes_per_slot = _min_fan_out_bytes_per_slot()
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     size = _plan_size_bytes(df)
     if size is not None and size < parts * min_bytes_per_slot:

@@ -988,6 +988,27 @@ def test_fan_out_threshold_resolves_at_call_time(spark, tmp_path, monkeypatch):
     assert fan_out(mid, num_partitions=parts).rdd.getNumPartitions() == parts
 
 
+def test_fan_out_env_threshold_read_at_call_time(spark, monkeypatch, caplog):
+    """SPARK_GRAFT_FANOUT_MIN_SLOT_KIB is read when fan_out is CALLED, so
+    setting it after import takes effect; a malformed value falls back to
+    the 32 KiB default with a warning instead of raising."""
+    import logging
+
+    from siddhi_io_cdc_spark.util import fan_out
+
+    parts = spark.sparkContext.defaultParallelism * 4
+    df = spark.range(2000)  # 16 KB estimate: below 32 KiB x parts, above 0
+    assert df.rdd.getNumPartitions() < parts
+
+    monkeypatch.setenv("SPARK_GRAFT_FANOUT_MIN_SLOT_KIB", "0")
+    assert fan_out(df, num_partitions=parts).rdd.getNumPartitions() == parts
+
+    monkeypatch.setenv("SPARK_GRAFT_FANOUT_MIN_SLOT_KIB", "64k")
+    with caplog.at_level(logging.WARNING, logger="siddhi_io_cdc_spark.util"):
+        assert fan_out(df, num_partitions=parts) is df  # default 32 KiB
+    assert "SPARK_GRAFT_FANOUT_MIN_SLOT_KIB" in caplog.text
+
+
 def test_knn_join_exact_is_centroid_independent(spark, sf_dir):
     """nprobe == nlist makes the cell-blocked kNN join exact: every query
     probes every cell, the candidate set is the whole corpus, and the

@@ -122,7 +122,7 @@ def test_ivf_maintenance_replay_idempotent_and_marker(spark, tmp_path):
 
 
 def test_ivf_maintenance_crash_half_committed_converges(spark, tmp_path):
-    """Simulate a crash where the dynamic overwrite committed only SOME
+    """Simulate a crash where the partition swap committed only SOME
     touched cells (no marker): restore a subset of cell dirs from a
     pre-batch snapshot, replay, assert convergence to the fully-applied
     state."""

@@ -136,6 +136,44 @@ def test_bucketed_merge_rewrites_only_touched_partitions(spark, tmp_path):
         if f not in before or os.path.getmtime(f) != before[f]
     }
     assert len(changed_dirs) == 1  # partition-pruned: one bucket rewritten
+    # Written once under a rebalance on the bucket: one file per bucket,
+    # not one per writer task per batch.
+    for d in glob.glob(f"{target}/__bucket=*"):
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d
+
+
+def test_bucketed_merge_recovers_interrupted_swap(spark, tmp_path):
+    """A crash between the two renames of a bucket swap leaves the live
+    bucket parked under ``_swap-*`` with nothing in its place; re-running
+    the batch must restore it first and converge on latest-op-per-key."""
+    import glob
+
+    from siddhi_io_cdc_spark.operators.mutate import merge_into_bucketed_parquet
+
+    target = os.path.join(str(tmp_path), "store3")
+    schema = "id long, name string, operation string, ts_ms long"
+    seed = [(i, f"name{i}", "insert", 1) for i in range(40)]
+    merge_into_bucketed_parquet(spark, target, spark.createDataFrame(seed, schema),
+                                key=["id"], num_buckets=4)
+    batch = spark.createDataFrame(
+        [(i, f"new{i}", "update", 2) for i in range(0, 40, 3)]
+        + [(i, "", "delete", 3) for i in range(1, 40, 5)]
+        + [(100, "ins", "insert", 2)],
+        schema,
+    )
+    parked = sorted(glob.glob(f"{target}/__bucket=*"))[0]
+    os.makedirs(f"{target}/_swap-deadbeef")
+    os.rename(parked, f"{target}/_swap-deadbeef/{os.path.basename(parked)}")
+
+    merge_into_bucketed_parquet(spark, target, batch, key=["id"], num_buckets=4)
+    expected = {i: f"name{i}" for i in range(40)}
+    expected.update({i: f"new{i}" for i in range(0, 40, 3)})
+    for i in range(1, 40, 5):
+        expected.pop(i)
+    expected[100] = "ins"
+    got = {r["id"]: r["name"] for r in spark.read.parquet(target).collect()}
+    assert got == expected
+    assert not glob.glob(f"{target}/_swap-*")
 
 
 def test_bucketed_merge_delete_empties_bucket(spark, tmp_path):
