@@ -517,6 +517,24 @@ def _check_store_layout(target_path: str, layout: str) -> None:
         )
 
 
+def _check_bucket_count(target_path: str, num_buckets: int) -> None:
+    """Refuse a ``num_buckets`` smaller than the bucketed store's: a key
+    lives in bucket ``xxhash64(key) % num_buckets``, so under a smaller
+    modulus an update lands beside the key's live row instead of replacing
+    it."""
+    if not os.path.isdir(target_path):
+        return
+    prefix = BUCKET_COL + "="
+    present = [int(e[len(prefix):]) for e in os.listdir(target_path) if e.startswith(prefix)]
+    if present and max(present) >= num_buckets:
+        raise ValueError(
+            f"bucketed merge store at {target_path!r} holds {prefix}{max(present)}, "
+            f"so it was written with more than num_buckets={num_buckets} buckets; "
+            f"merging with a different bucket count would duplicate keys. Pass the "
+            f"num_buckets the store was created with."
+        )
+
+
 def foreach_batch_merge(
     spark,
     target_path: str,
@@ -537,11 +555,18 @@ def foreach_batch_merge(
     :func:`merge_into_parquet`, whose full-rewrite-per-batch is only sane
     for tiny tables. Layouts are not interchangeable on disk — pick one per
     target path.
+
+    A bucketed store must be merged with the ``num_buckets`` it was created
+    with. A smaller value is refused with ``ValueError`` when the adapter is
+    built (the store holds a bucket at or above it). A larger value is not
+    detected: the store records no bucket count, and one whose high buckets
+    are all empty looks the same as a smaller store.
     """
     if layout not in ("bucketed", "flat", "delta"):
         raise ValueError(f"layout must be 'bucketed', 'flat' or 'delta', got {layout!r}")
     _check_store_layout(target_path, layout)
     if layout == "bucketed":
+        _check_bucket_count(target_path, num_buckets)
         return foreach_batch_bucketed_merge(
             spark, target_path, key=key, num_buckets=num_buckets,
             seq_col=seq_col, op_col=op_col,

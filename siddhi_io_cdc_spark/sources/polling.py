@@ -32,7 +32,14 @@ Spark streaming source via the PySpark ``DataSource`` API (Spark 4):
 Scale shape: offset discovery reads ONLY the polling column (column pruning +
 parquet statistics); data reads are split into ``numPartitions`` key ranges so
 a large catch-up scan parallelizes across the cluster, and each partition
-yields Arrow record batches (no per-row Python).
+yields Arrow record batches (no per-row Python). The reader caches each
+landing file's polling-column min/max and row count under the file's
+``(size, mtime)`` signature, so a driver-side pass costs one listing of the
+zone plus the footers of new or changed files (a stat-less file's column is
+scanned once, not per trigger) — O(new files) per trigger, not O(zone). A file
+rewritten in place is re-read only if its size or mtime changes. The cache
+lives on the reader object Spark keeps across triggers; a restarted query
+starts with an empty cache and reads every footer once.
 
 The storage backend here is a parquet directory (what the test harness and a
 lakehouse landing zone use). A JDBC backend plugs into the same offset logic
@@ -46,10 +53,14 @@ from __future__ import annotations
 import json
 import time
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
 EMPTY_SENTINEL = -1  # DefaultPollingStrategy.java:121-124
+#: Names pyarrow dataset discovery skips (hidden files, ``_SUCCESS``,
+#: staging dirs); the zone listing skips the same ones.
+_IGNORED_PREFIXES = (".", "_")
 
 
 def _arrow_to_struct(schema):
@@ -120,6 +131,47 @@ def _fragment_stats(md, column):
     return (frag_mn, frag_mx, True)
 
 
+class _FileStats(NamedTuple):
+    """Cached polling-column facts of one landing file."""
+
+    sig: tuple  # (size, mtime_ns) the facts were read under
+    mn: object  # None when the file holds no non-null value
+    mx: object
+    covered: bool  # footer stats cover every row group; else mn/mx were scanned
+    num_rows: int
+
+
+def _read_file_stats(filesystem, path, column):
+    """``(min, max, covered, num_rows)`` of ``column`` in one parquet file,
+    from its footer (:func:`_fragment_stats`). When the footer lacks
+    statistics the file's polling column is scanned instead, so min/max are
+    exact either way."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    with filesystem.open_input_file(path) as f:
+        pf = pq.ParquetFile(f)
+        mn, mx, covered = _fragment_stats(pf.metadata, column)
+        if not covered:
+            col = pc.drop_null(pf.read(columns=[column]).column(0))
+            if len(col):
+                mn, mx = pc.min(col).as_py(), pc.max(col).as_py()
+        return mn, mx, covered, pf.metadata.num_rows
+
+
+def _outside(st, low, high):
+    """True when footer stats prove no row of the file lies in (low, high].
+    Stat-less files and incomparable stats are never excluded."""
+    if not st.covered or st.mn is None:
+        return False
+    try:
+        if low is not None and low != EMPTY_SENTINEL and not st.mx > low:
+            return True  # every row <= low: already delivered
+        return high is not None and st.mn > high  # every row beyond high
+    except TypeError:
+        return False
+
+
 @dataclass
 class RangeScan(InputPartition):
     """One slice of the (low, high] incremental scan: a group of parquet
@@ -169,55 +221,85 @@ class CDCPollStreamReader(DataSourceStreamReader):
 
         return ds.dataset(self.path, format="parquet")
 
+    def _filesystem(self):
+        import pyarrow as pa
+        import pyarrow.fs as pafs
+
+        try:
+            return pafs.FileSystem.from_uri(self.path)
+        except pa.ArrowInvalid:  # a plain local path
+            return pafs.LocalFileSystem(), self.path
+
+    def _zone_stats(self) -> dict:
+        """Per-file polling-column stats of the landing zone, in path order
+        (the order dataset discovery uses). Lists the zone once; a file's
+        footer is read only when the file is new or its ``(size, mtime)``
+        changed since the previous call, and files that are gone drop out.
+        The cache is per reader (created lazily, so readers built without
+        ``__init__`` work too), and Spark keeps the reader across triggers."""
+        import pyarrow.fs as pafs
+
+        filesystem, root = self._filesystem()
+        root = root.rstrip("/")
+        old = getattr(self, "_stats_cache", None) or {}
+        cache = {}
+        infos = filesystem.get_file_info(pafs.FileSelector(root, recursive=True))
+        for info in sorted(infos, key=lambda i: i.path):
+            rel = info.path[len(root) + 1:]
+            if info.type != pafs.FileType.File or any(
+                part.startswith(_IGNORED_PREFIXES) for part in rel.split("/")
+            ):
+                continue
+            sig = (info.size, info.mtime_ns)
+            st = old.get(info.path)
+            if st is None or st.sig != sig:
+                st = _FileStats(sig, *_read_file_stats(filesystem, info.path, self.column))
+            cache[info.path] = st
+        self._stats_cache = cache
+        return cache
+
+    def _coerce_bounds(self, *bounds):
+        """Cast JSON-stringified bounds back to the polling column's type.
+        Only a ``str`` bound needs the table schema, so int offsets skip it."""
+        if not any(isinstance(b, str) for b in bounds):
+            return bounds
+        schema = self._dataset().schema
+        return tuple(_coerce_bound(schema, self.column, b) for b in bounds)
+
     def _col_values(self, low=None, high=None):
         """Polling-column values in ``(low, high]`` — column-pruned, filtered
-        scan. Callers bound ``high`` so this never materializes an unbounded
-        backlog on the driver (the gap path caps at ``maxKeysPerTrigger``)."""
+        scan of only the files whose cached stats can overlap the window
+        (stat-less files always included). Callers bound ``high`` so this
+        never materializes an unbounded backlog on the driver (the gap path
+        caps at ``maxKeysPerTrigger``)."""
+        import pyarrow as pa
         import pyarrow.dataset as ds
 
-        dset = self._dataset()
-        low = _coerce_bound(dset.schema, self.column, low)
-        high = _coerce_bound(dset.schema, self.column, high)
+        low, high = self._coerce_bounds(low, high)
+        paths = [p for p, st in self._zone_stats().items() if not _outside(st, low, high)]
+        if not paths:
+            return pa.chunked_array([], pa.null())
         filt = None
         if low is not None and low != EMPTY_SENTINEL:
             filt = ds.field(self.column) > low
         if high is not None:
             hf = ds.field(self.column) <= high
             filt = hf if filt is None else (filt & hf)
+        dset = ds.dataset(paths, format="parquet", filesystem=self._filesystem()[0])
         return dset.to_table(columns=[self.column], filter=filt).column(0)
 
     def _stats_minmax(self):
-        """(min, max) of the polling column — parquet ROW-GROUP STATISTICS
-        (footer metadata only, no data pages) for every fragment that has
-        them, plus a targeted polling-column scan of ONLY the fragments that
-        lack stats. One legacy stat-less file therefore costs one fragment's
-        single column, not a full-table driver scan (the round-2 all-or-
-        nothing fallback). This keeps offset discovery O(row groups +
-        stat-less-fragment rows): the reference's ``SELECT MAX(col)``
+        """(min, max) of the polling column from the cached per-file stats:
+        parquet ROW-GROUP STATISTICS (footer metadata only, no data pages)
+        for every file that has them, and a one-off polling-column scan of
+        each file that lacks them. The reference's ``SELECT MAX(col)``
         (DefaultPollingStrategy.java:115) becomes a stats lookup. Returns
         (None, None) only when the table has no non-null polling values."""
-        import pyarrow.compute as pc
-
         mn = mx = None
-
-        def merge(lo, hi):
-            nonlocal mn, mx
-            if lo is not None:
-                mn = lo if mn is None else min(mn, lo)
-            if hi is not None:
-                mx = hi if mx is None else max(mx, hi)
-
-        statless = []
-        for frag in self._dataset().get_fragments():
-            frag_mn, frag_mx, covered = _fragment_stats(frag.metadata, self.column)
-            if not covered:
-                statless.append(frag)
-            else:
-                merge(frag_mn, frag_mx)
-        for frag in statless:
-            col = pc.drop_null(frag.to_table(columns=[self.column]).column(0))
-            if len(col):
-                merge(pc.min(col).as_py(), pc.max(col).as_py())
+        for st in self._zone_stats().values():
+            if st.mn is not None:
+                mn = st.mn if mn is None else min(mn, st.mn)
+                mx = st.mx if mx is None else max(mx, st.mx)
         return (mn, mx)
 
     def _coerce_offset(self, last):
@@ -238,13 +320,7 @@ class CDCPollStreamReader(DataSourceStreamReader):
             return None
 
     def _current_max(self):
-        mn, mx = self._stats_minmax()
-        if mx is not None:
-            return mx
-        import pyarrow.compute as pc
-
-        vals = self._col_values()
-        return pc.max(vals).as_py() if len(vals) else None
+        return self._stats_minmax()[1]
 
     # -- offsets ---------------------------------------------------------------
 
@@ -336,13 +412,9 @@ class CDCPollStreamReader(DataSourceStreamReader):
 
         stats_mn, stats_mx = self._stats_minmax()
         if last == EMPTY_SENTINEL:
-            if stats_mn is not None:
-                base = int(stats_mn) - 1
-            else:
-                all_vals = pc.drop_null(self._col_values())
-                if len(all_vals) == 0:
-                    return dict(start)
-                base = int(pc.min(all_vals).as_py()) - 1
+            if stats_mn is None:
+                return dict(start)  # no non-null polling value yet
+            base = int(stats_mn) - 1
         else:
             base = last
         window_hi = base + self.max_keys_per_trigger
@@ -538,22 +610,12 @@ class CDCPollStreamReader(DataSourceStreamReader):
         # passes). Fragments wholly outside (low, high] are pruned by
         # footer statistics on the driver; groups are balanced by row count
         # (greedy LPT).
-        dset = self._dataset()
-        lo_b = _coerce_bound(dset.schema, self.column, low)
-        hi_b = _coerce_bound(dset.schema, self.column, high)
-        keep = []
-        for frag in dset.get_fragments():
-            md = frag.metadata
-            mn, mx, covered = _fragment_stats(md, self.column)
-            if covered and mn is not None:
-                try:
-                    if lo_b is not None and lo_b != EMPTY_SENTINEL and not mx > lo_b:
-                        continue  # every row <= low: already delivered
-                    if hi_b is not None and mn > hi_b:
-                        continue  # every row beyond this batch's high
-                except TypeError:
-                    pass  # incomparable stats: keep (filter decides)
-            keep.append((frag.path, md.num_rows))
+        lo_b, hi_b = self._coerce_bounds(low, high)
+        keep = [
+            (path, st.num_rows)
+            for path, st in self._zone_stats().items()
+            if not _outside(st, lo_b, hi_b)
+        ]
         if not keep:
             return empty
         n = min(self.num_partitions, len(keep))

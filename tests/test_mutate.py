@@ -336,3 +336,22 @@ def test_foreach_batch_merge_refuses_layout_interleave(spark, tmp_path):
     apply_b(batch, 0)
     with pytest.raises(ValueError, match="already uses the 'bucketed' layout"):
         foreach_batch_merge(spark, bucketed, key=["k"], layout="flat")
+
+
+def test_foreach_batch_merge_refuses_fewer_buckets(spark, tmp_path):
+    """A store bootstrapped with the default 64 buckets must not be merged
+    with num_buckets=8: under the smaller modulus updated keys land in other
+    buckets than their live rows and the store keeps both."""
+    import pytest
+
+    from siddhi_io_cdc_spark.operators.mutate import foreach_batch_merge
+
+    store = str(tmp_path / "store")
+    batch = spark.createDataFrame(
+        [(k, "a", 1, "insert") for k in range(20)],
+        "id long, v string, ts_ms long, operation string",
+    )
+    foreach_batch_merge(spark, store, key=["id"])(batch, 0)
+    with pytest.raises(ValueError, match="num_buckets=8"):
+        foreach_batch_merge(spark, store, key=["id"], num_buckets=8)
+    foreach_batch_merge(spark, store, key=["id"], num_buckets=64)

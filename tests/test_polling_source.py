@@ -517,6 +517,7 @@ def _bare_reader(path, column, ordered=False, num_partitions=4):
     r = CDCPollStreamReader.__new__(CDCPollStreamReader)
     r.path = path
     r.column = column
+    r.start_from = "latest"
     r.field_names = [column]
     r.ordered = ordered
     r.num_partitions = num_partitions
@@ -608,6 +609,120 @@ def test_uncastable_offset_raises_instead_of_string_compare(tmp_path):
     reader._prev = {"last": "not-a-timestamp"}
     with pytest.raises(RuntimeError, match="cannot be cast back"):
         reader.latestOffset()
+
+
+def _count_footer_reads(monkeypatch):
+    from siddhi_io_cdc_spark.sources import polling
+
+    reads = []
+    orig = polling._read_file_stats
+
+    def spy(filesystem, path, column):
+        reads.append(os.path.basename(path))
+        return orig(filesystem, path, column)
+
+    monkeypatch.setattr(polling, "_read_file_stats", spy)
+    return reads
+
+
+def _trigger(reader):
+    """One trigger's driver passes: latestOffset, then partitions."""
+    start = dict(reader._prev)
+    end = reader.latestOffset()
+    return end, reader.partitions(start, end)
+
+
+def test_offset_discovery_reads_only_new_footers(tmp_path, monkeypatch):
+    """Per trigger, footers are read for new or changed files only: an
+    unchanged zone costs zero footer reads, k new files cost exactly k."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "zone")
+    os.makedirs(path)
+    for i in range(4):
+        pq.write_table(pa.table({"id": list(range(i * 10 + 1, i * 10 + 11))}),
+                       f"{path}/f{i}.parquet")
+    reads = _count_footer_reads(monkeypatch)
+    reader = _bare_reader(path, "id")
+    reader.initialOffset()
+    assert reader._prev == {"last": 40}
+    assert len(reads) == 4
+
+    reads.clear()
+    end, _ = _trigger(reader)
+    assert end == {"last": 40} and reads == []
+
+    pq.write_table(pa.table({"id": [41, 42]}), f"{path}/f4.parquet")
+    pq.write_table(pa.table({"id": [43]}), f"{path}/f5.parquet")
+    end, parts = _trigger(reader)
+    assert end == {"last": 43}
+    assert sorted(reads) == ["f4.parquet", "f5.parquet"]
+    kept = sorted(os.path.basename(p) for part in parts for p in part.paths)
+    assert kept == ["f4.parquet", "f5.parquet"]
+
+
+def test_offset_cache_rereads_changed_and_drops_deleted_files(tmp_path, monkeypatch):
+    """A file rewritten in place (new size) is re-read, so the offset and
+    the fragment pruning see its new max; a deleted file leaves no entry."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "zone")
+    os.makedirs(path)
+    pq.write_table(pa.table({"id": [1, 2, 3]}), f"{path}/a.parquet")
+    pq.write_table(pa.table({"id": [4, 5]}), f"{path}/b.parquet")
+    reads = _count_footer_reads(monkeypatch)
+    reader = _bare_reader(path, "id")
+    reader.initialOffset()
+    reads.clear()
+
+    pq.write_table(pa.table({"id": list(range(1, 101))}), f"{path}/a.parquet")
+    assert reader._current_max() == 100
+    assert reads == ["a.parquet"]
+    parts = reader.partitions({"last": 5}, {"last": 100})
+    assert [os.path.basename(p) for part in parts for p in part.paths] == ["a.parquet"]
+
+    os.remove(f"{path}/a.parquet")
+    assert reader._stats_minmax() == (4, 5)
+    assert [os.path.basename(p) for p in reader._stats_cache] == ["b.parquet"]
+
+    # Each reader has its own cache, even when built without __init__.
+    other = _bare_reader(str(tmp_path / "other"), "id")
+    os.makedirs(other.path)
+    pq.write_table(pa.table({"id": [7]}), f"{other.path}/c.parquet")
+    assert other._current_max() == 7 and reader._current_max() == 5
+
+
+def test_gap_scan_reads_only_overlapping_files(tmp_path, monkeypatch):
+    """The gap-wait contiguity scan opens only files whose cached [min, max]
+    can overlap the window, plus every stat-less file."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "zone")
+    os.makedirs(path)
+    pq.write_table(pa.table({"id": list(range(1, 101))}), f"{path}/old.parquet")
+    pq.write_table(pa.table({"id": [101, 102, 104]}), f"{path}/new.parquet")
+    pq.write_table(pa.table({"id": [90]}), f"{path}/nostats.parquet",
+                   write_statistics=False)
+    reader = _bare_reader(path, "id")
+    reader.wait_on_missed = True
+    reader.missed_timeout = 1e9
+
+    scanned = []
+    orig = pads.dataset
+
+    def spy(source, *a, **k):
+        if isinstance(source, list):
+            scanned.append(sorted(os.path.basename(p) for p in source))
+        return orig(source, *a, **k)
+
+    monkeypatch.setattr(pads, "dataset", spy)
+    off = reader._advance({"last": 100})
+    assert off["last"] == 102 and off["gap_next"] == 103
+    assert scanned == [["new.parquet", "nostats.parquet"]]
 
 
 def test_gap_wait_timeout_per_gap_cycles(spark, tmp_path):
