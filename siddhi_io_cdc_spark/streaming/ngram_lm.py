@@ -70,6 +70,7 @@ from siddhi_io_cdc_spark.streaming.ivf_index import (
     _hadoop_exists,
     _marker_path,
 )
+from siddhi_io_cdc_spark.streaming.mor import _has_parquet
 
 GBUCKET_COL = "gbucket"
 DBUCKET_COL = "dbucket"
@@ -166,12 +167,18 @@ def write_ngram_state(
         _hadoop_delete(spark, base + "/_delta")
         _hadoop_delete(spark, base + "/_tomb")
     tf = _doc_gram_tf(df, n, id_col, text_col)
+    grams = base + "/grams"
     (
         tf.withColumn(GBUCKET_COL, _gbucket(n, nbuckets))
         .write.mode("overwrite")
         .partitionBy(GBUCKET_COL)
-        .parquet(base + "/grams")
+        .parquet(grams)
     )
+    if not _has_parquet(spark, grams):
+        # no document has n tokens: a partitioned write of an empty frame
+        # leaves no data files, and a later read would fail schema
+        # inference — keep one schema-bearing empty file in a bucket dir
+        tf.limit(0).coalesce(1).write.parquet(f"{grams}/{GBUCKET_COL}=0")
     # roster via LEFT join from the full document set: a sub-n-token
     # document still exists (serving scores it NULL, a later update may
     # grow it) so it needs an n_ngrams=0 row.

@@ -153,3 +153,22 @@ def test_update_below_n_tokens_and_foreach_adapter(spark, corpus0, tmp_path):
     # none of doc 1's old grams survive in the counts
     leftover = read_ngram_counts(spark, path).where(F.col("w1") == "alpha")
     assert leftover.count() == 0
+
+
+def test_state_over_gramless_corpus_reads_empty_then_grows(spark, tmp_path):
+    """Every document shorter than n: the state holds no gram rows but
+    still reads (as empty), and a later batch that adds grams matches a
+    rebuild."""
+    path = str(tmp_path / "lm")
+    short = spark.createDataFrame([(1, "solo"), (2, "lone")], "doc_id bigint, text string")
+    write_ngram_state(spark, short, path, n=2, nbuckets=4, doc_buckets=2)
+    assert _counts(spark, path) == []
+    grow = spark.createDataFrame([(1, "solo act solo", "solo", "update", 50)], SCHEMA)
+    apply_changelog_ngram(spark, grow, path, batch_id=1)
+    fresh = str(tmp_path / "fresh")
+    write_ngram_state(
+        spark,
+        spark.createDataFrame([(1, "solo act solo"), (2, "lone")], "doc_id bigint, text string"),
+        fresh, n=2, nbuckets=4, doc_buckets=2,
+    )
+    assert _counts(spark, path) == _counts(spark, fresh) != []

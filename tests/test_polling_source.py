@@ -725,6 +725,72 @@ def test_gap_scan_reads_only_overlapping_files(tmp_path, monkeypatch):
     assert scanned == [["new.parquet", "nostats.parquet"]]
 
 
+def _zone_of(tmp_path, rows_per_file):
+    """A landing zone with one file per entry of ``rows_per_file``, ids
+    consecutive from 1; returns (path, total rows)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "zone")
+    os.makedirs(path)
+    nxt = 1
+    for i, n in enumerate(rows_per_file):
+        pq.write_table(pa.table({"id": list(range(nxt, nxt + n))}), f"{path}/f{i:02d}.parquet")
+        nxt += n
+    return path, nxt - 1
+
+
+def _group_paths(parts):
+    groups = [part.paths for part in parts]
+    flat = [p for g in groups for p in g]
+    assert len(flat) == len(set(flat)), "each file in exactly one group"
+    return groups, flat
+
+
+def test_small_window_is_one_read_task(tmp_path):
+    """A live-tail-sized window (12 files, 1,800 rows) is one task even with
+    numPartitions=4: every file in one group, and its read is the window."""
+    path, total = _zone_of(tmp_path, [150] * 12)
+    reader = _bare_reader(path, "id", num_partitions=4)
+    parts = reader.partitions({"last": 0}, {"last": total})
+    groups, flat = _group_paths(parts)
+    assert len(groups) == 1 and len(flat) == 12
+    rows = [v for batch in reader.read(parts[0]) for v in batch.column(0).to_pylist()]
+    assert sorted(rows) == list(range(1, total + 1))
+
+
+@pytest.mark.parametrize(
+    "rows_per_file, num_partitions, want",
+    [([10_000] * 8, 4, 4),  # numPartitions caps the groups
+     ([2_500] * 10, 8, 3)],  # ceil(25,000 / ROWS_PER_READ_TASK)
+)
+def test_read_groups_follow_window_rows(tmp_path, rows_per_file, num_partitions, want):
+    """The group count is min(numPartitions, files, ceil(rows / 10,000))."""
+    from siddhi_io_cdc_spark.sources.polling import ROWS_PER_READ_TASK
+
+    assert ROWS_PER_READ_TASK == 10_000
+    path, total = _zone_of(tmp_path, rows_per_file)
+    reader = _bare_reader(path, "id", num_partitions=num_partitions)
+    groups, flat = _group_paths(reader.partitions({"last": -1}, {"last": total}))
+    assert len(groups) == want and len(flat) == len(rows_per_file)
+
+
+@pytest.mark.parametrize("option", ["numPartitions", "maxKeysPerTrigger"])
+@pytest.mark.parametrize("value", ["0", "-2"])
+def test_non_positive_count_option_is_rejected(option, value):
+    """numPartitions and maxKeysPerTrigger below 1 fail when the reader is
+    built (i.e. at .start()), naming the option and its value, instead of
+    failing later in partitions() or stalling the stream silently."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from siddhi_io_cdc_spark.sources.polling import CDCPollStreamReader
+
+    schema = StructType([StructField("id", LongType())])
+    options = {"path": "/unused", "pollingColumn": "id", option: value}
+    with pytest.raises(ValueError, match=rf"{option}.*{value}"):
+        CDCPollStreamReader(schema, options)
+
+
 def test_gap_wait_timeout_per_gap_cycles(spark, tmp_path):
     """Reference semantics (WaitOnMissingRecordPollingStrategy.java:117-141):
     each gap waits its OWN timeout. The first timeout releases only the
