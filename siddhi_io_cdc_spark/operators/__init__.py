@@ -30,12 +30,10 @@ from siddhi_io_cdc_spark.operators.mutate import (
     apply_changelog,
     delete_on,
     evolve_target_schema,
-    foreach_batch_bucketed_merge,
     foreach_batch_merge,
     insert_into,
     merge_into_bucketed_parquet,
     merge_into_delta,
-    merge_into_parquet,
     read_bucketed_store,
     update_on,
 )
@@ -67,11 +65,9 @@ __all__ = [
     "delete_on",
     "evolve_target_schema",
     "insert_into",
-    "merge_into_parquet",
     "merge_into_bucketed_parquet",
     "merge_into_delta",
     "read_bucketed_store",
-    "foreach_batch_bucketed_merge",
     "foreach_batch_merge",
     "update_on",
 ]

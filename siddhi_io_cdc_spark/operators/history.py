@@ -22,7 +22,6 @@ any size joins against any depth of history without a range explosion.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -96,13 +95,16 @@ def merge_history_into_parquet(
     micro-batches (``writeStream.foreachBatch`` body — see
     :func:`foreach_batch_history`).
 
-    Layout: hash-bucketed on the key (``{target}/__bucket=k/``) like the
-    mutation store. Per batch: (1) read ONLY the buckets the batch's keys
-    hash into, (2) convert those stored versions back to events (a version
-    IS its opening event: ``valid_from`` = seq, tombstone = delete), (3)
-    re-derive history over old+new events for the touched keys, (4) rewrite
-    only those buckets. Versions are deduplicated on ``(key, valid_from)``
-    first, which makes replay after a checkpoint restart idempotent.
+    Layout: hash-bucketed on the key (``{target}/__bucket=k/``, one file
+    per bucket) like the mutation store, and written the same way, through
+    :func:`...mutate.swap_partitions`. Per batch: (1) read ONLY the buckets
+    the batch's keys hash into, (2) convert those stored versions back to
+    events (a version IS its opening event: ``valid_from`` = seq, tombstone
+    = delete), (3) re-derive history over old+new events for the touched
+    keys, (4) rewrite only those buckets. A missing store is created from
+    the batch's history alone. Versions are deduplicated on
+    ``(key, valid_from)`` first, which makes replay after a checkpoint
+    restart idempotent.
 
     I/O per batch is O(touched buckets + batch); the per-key re-derivation
     is the same one-ordered-pass plan as :func:`changelog_history` — history
@@ -136,20 +138,9 @@ def merge_history_into_parquet(
         )
         return h.withColumn("__bucket", bucket_expr)
 
-    if not os.path.exists(target_path):
-        _derive(new_events).write.partitionBy("__bucket").parquet(target_path)
-        return
-
-    touched = [r[0] for r in new_events.select(bucket_expr.alias("b")).distinct().collect()]
-
-    def merged_buckets() -> DataFrame:
-        # mergeSchema: survives additive evolution of the value columns (same
-        # single-footer-sample hazard as the bucketed merge store).
-        stored = (
-            spark.read.option("mergeSchema", "true").parquet(target_path)
-            .where(F.col("__bucket").isin(touched))
-            .drop("__bucket")
-        )
+    def merged_buckets(stored: DataFrame | None) -> DataFrame:
+        if stored is None:
+            return _derive(new_events)
         # A stored version is its opening event; tombstones were deletes.
         old_events = stored.select(
             *keys,
@@ -159,7 +150,7 @@ def merge_history_into_parquet(
         )
         return _derive(old_events.unionByName(new_events))
 
-    swap_partitions(spark, target_path, "__bucket", touched, merged_buckets)
+    swap_partitions(spark, target_path, "__bucket", new_events.select(bucket_expr), merged_buckets)
 
 
 def foreach_batch_history(

@@ -10,17 +10,21 @@ store (SURVEY.md §2.4):
 Spark-first restatement: the *logic* is a keyed merge expressed as DataFrame
 joins (anti-join + union — Catalyst broadcasts the small change-set side
 automatically, so the target table is never shuffled); the *storage* is
-pluggable. Here we ship a parquet-directory implementation (atomic
-swap-on-write) because this container has no Delta/Iceberg; on a real
-lakehouse the same plan feeds ``DeltaTable.merge`` / ``MERGE INTO`` and the
-physical commit becomes transactional. Streaming entry points wrap the batch
-logic in ``foreachBatch`` — replay-idempotent because the merge is keyed.
+pluggable. This container has no Delta/Iceberg, so the shipped store is a
+hash-bucketed parquet directory. :func:`swap_partitions` is the one code
+path that reads, creates and rewrites such a store — this merge store, the
+SCD2 history store, the rollup sink and the IVF / BM25 / n-gram indexes
+all go through it: it reads only the touched partitions, writes their
+replacement once and swaps each in by rename. On a real lakehouse the same
+plan feeds ``DeltaTable.merge`` / ``MERGE INTO`` (:func:`merge_into_delta`)
+and the physical commit becomes transactional. Streaming entry points wrap
+the batch logic in ``foreachBatch`` — replay-idempotent because the merge
+is keyed.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 from collections.abc import Callable, Sequence
 
@@ -132,13 +136,25 @@ def evolve_target_schema(
     return target, events
 
 
+def _latest_per_key(
+    events: DataFrame, keys: list[str], row_cols: Sequence[str], seq_col: str, op_col: str
+) -> DataFrame:
+    """One row per key: its last event by ``(seq_col, op_col)``, as the key
+    columns, that event's op as ``__op``, and the non-key ``row_cols``."""
+    vals = [c for c in row_cols if c not in keys]
+    return (
+        events.groupBy(*keys)
+        .agg(F.max(F.struct(F.col(seq_col), F.col(op_col), *vals)).alias("__last"))
+        .select(*keys, F.col(f"__last.{op_col}").alias("__op"), *[F.col(f"__last.{c}").alias(c) for c in vals])
+    )
+
+
 def apply_changelog(
     target: DataFrame,
     events: DataFrame,
     key: Sequence[str],
     seq_col: str = "ts_ms",
     op_col: str = "operation",
-    broadcast_events: bool = True,
 ) -> DataFrame:
     """Materialize flattened CDC events onto a table (CDC apply).
 
@@ -148,76 +164,22 @@ def apply_changelog(
     insert/update → row replaced/added. Unaffected target rows pass through.
 
     This is the batch-idempotent core that ``foreachBatch`` re-runs safely on
-    replay. Scale shape: a micro-batch change-set is ≪ target, so the two
-    joins broadcast it and the target scan stays shuffle-free. For a huge
-    BACKFILL change-set pass ``broadcast_events=False`` — the joins become
-    shuffled hash joins (AQE still broadcasts if the aggregated set turns
-    out small) instead of OOMing the driver with a forced broadcast.
+    replay. Scale shape: a micro-batch change-set is ≪ target, so the
+    anti-join broadcasts it and the target scan stays shuffle-free.
     """
     keys = list(key)
     row_cols = target.columns
-    events = rekey_deletes(events, keys, op_col)
-    w_latest = (
-        events.groupBy(*keys)
-        .agg(F.max(F.struct(F.col(seq_col), F.col(op_col), *[c for c in row_cols if c not in keys])).alias("__last"))
-        .select(*keys, F.col(f"__last.{op_col}").alias("__op"), *[F.col(f"__last.{c}").alias(c) for c in row_cols if c not in keys])
-    )
-    maybe_bcast = F.broadcast if broadcast_events else (lambda d: d)
-    survivors = target.join(maybe_bcast(w_latest.select(*keys)), on=keys, how="left_anti")
-    upserts = w_latest.filter(F.col("__op") != F.lit("delete")).select(*row_cols)
+    latest = _latest_per_key(rekey_deletes(events, keys, op_col), keys, row_cols, seq_col, op_col)
+    survivors = target.join(F.broadcast(latest.select(*keys)), on=keys, how="left_anti")
+    upserts = latest.filter(F.col("__op") != F.lit("delete")).select(*row_cols)
     return survivors.unionByName(upserts)
 
 
 # ---------------------------------------------------------------------------
-# Parquet-backed table store (the container has no Delta; swap-on-write keeps
-# batch application atomic enough for tests — a lakehouse MERGE replaces this
-# wholesale in production).
+# Bucketed parquet stores (the container has no Delta): every hash- or
+# cell-partitioned store of the package is read, created and rewritten
+# through swap_partitions; a lakehouse MERGE replaces it in production.
 # ---------------------------------------------------------------------------
-
-
-def merge_into_parquet(
-    spark,
-    target_path: str,
-    batch_df: DataFrame,
-    key: Sequence[str],
-    seq_col: str = "ts_ms",
-    op_col: str = "operation",
-    table_columns: Sequence[str] | None = None,
-    evolve: bool = False,
-) -> None:
-    """Apply one micro-batch of flattened CDC events to a parquet table.
-
-    Crash-safety: the merged output is written to a SIBLING directory of
-    ``target_path`` (same filesystem → both swap steps are atomic renames,
-    not copy+delete), and a crash between the two renames is recoverable —
-    the next call restores the retained ``.old-`` directory. A missing
-    target bootstraps from the batch itself (first ``foreach_batch_merge``
-    call against a table that does not exist yet).
-    """
-    target_path = os.path.abspath(target_path)
-    _recover_interrupted_swap(target_path)
-    exists = os.path.exists(target_path)
-    if not exists:
-        if table_columns is None:
-            meta = {op_col, seq_col, "operation", "source_ts_ms", "ts_ms"}
-            table_columns = [
-                c for c in batch_df.columns if c not in meta and not c.startswith("before_")
-            ]
-        target = spark.createDataFrame([], batch_df.select(*table_columns).schema)
-    else:
-        target = spark.read.parquet(target_path)
-    if evolve:
-        target, batch_df = evolve_target_schema(target, batch_df, op_col=op_col)
-    merged = apply_changelog(target, batch_df, key=key, seq_col=seq_col, op_col=op_col)
-    tmp = target_path + ".tmp-" + uuid.uuid4().hex
-    merged.write.mode("overwrite").parquet(tmp)
-    if exists:
-        swap_old = target_path + ".old-" + uuid.uuid4().hex
-        os.rename(target_path, swap_old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(swap_old, ignore_errors=True)
-    else:
-        os.rename(tmp, target_path)
 
 
 BUCKET_COL = "__bucket"
@@ -241,38 +203,44 @@ def swap_partitions(
     spark,
     path: str,
     part_col: str,
-    touched: Sequence[int],
-    replacement: Callable[[], DataFrame],
+    touched: DataFrame,
+    merge: Callable[[DataFrame | None], DataFrame],
 ) -> None:
-    """Replace the ``touched`` partitions of the partitioned parquet table
-    at ``path`` with the rows ``replacement()`` returns (rows carry
-    ``part_col``).
+    """Rewrite the partitions of the parquet table at ``path`` (partitioned
+    on ``part_col``) that ``touched`` names, with the rows ``merge`` returns.
 
-    The rows are written ONCE, to a sibling staging directory, under a
-    ``rebalance`` hint on ``part_col``: each partition's rows meet in one
-    writer task, so each partition is one file (AQE splits a partition
-    only past its advisory partition size, so a huge bucket still
-    parallelizes). Then, per partition, through the Hadoop FileSystem API
-    (local, hdfs:// and s3a:// paths alike): the live ``part=b`` is renamed
-    aside into ``{path}/_swap-<uuid>/`` and the staged ``part=b``, if the
-    replacement has rows there, is renamed into place. A touched partition
-    with no staged rows is thereby emptied. The aside directory is dropped
-    once every swap is done. A table left with no partition at all keeps
-    one zero-row partition so its schema stays readable.
+    ``touched`` is a one-column frame of the partition values the batch
+    touches (NULLs ignored). ``merge(current)`` gets the live rows of those
+    partitions, ``part_col`` included, read with the union schema
+    (``mergeSchema``: partitions written before an additive schema change
+    lack the new column in their footers, and a single-footer sample would
+    drop it); it returns the replacement rows, each carrying ``part_col``.
+    With no store at ``path`` (no partition), ``merge(None)`` creates it:
+    ``touched`` is then not collected.
+
+    The replacement is written ONCE, to a sibling staging directory, under
+    a ``rebalance`` hint on ``part_col``: each partition's rows meet in one
+    writer task, so each partition is one file (AQE splits a partition only
+    past its advisory partition size, so a huge one still parallelizes). A
+    new store's staging directory is renamed into place whole. Otherwise,
+    per partition, through the Hadoop FileSystem API (local, hdfs:// and
+    s3a:// paths alike): the live ``part=b`` is renamed aside into
+    ``{path}/_swap-<uuid>/`` and the staged ``part=b``, if the replacement
+    has rows there, is renamed into place; a touched partition with no
+    staged rows is thereby emptied. The aside directory is dropped once
+    every swap is done. A table that would be left with no partition at
+    all keeps one zero-row partition, so its schema stays readable.
 
     Crash-safety: the call first restores every ``_swap-*/part=b`` whose
     live ``part=b`` is missing (a crash between the two renames), then
-    drops the ``_swap-*`` directories. ``replacement`` is a builder called
-    only after that recovery, so a scan of ``path`` inside it lists the
-    restored partitions; re-running the interrupted batch converges.
+    drops the ``_swap-*`` directories; ``current`` is read after that, so
+    re-running the interrupted batch converges.
     """
-    touched_names = {f"{part_col}={b}" for b in touched}
-    if not touched_names:
-        return
     fs, root, jvm = _fs(spark, path)
     Path = jvm.org.apache.hadoop.fs.Path
     root = fs.makeQualified(root)
-    entries = {st.getPath().getName() for st in fs.listStatus(root)}
+    exists = fs.exists(root)
+    entries = {st.getPath().getName() for st in fs.listStatus(root)} if exists else set()
     for aside in sorted(e for e in entries if e.startswith(_SWAP_PREFIX)):
         for st in fs.listStatus(Path(root, aside)):
             name = st.getPath().getName()
@@ -282,7 +250,17 @@ def swap_partitions(
         fs.delete(Path(root, aside), True)
     live = {e for e in entries if e.startswith(part_col + "=")}
 
-    rows = replacement()
+    touched_values, current = [], None
+    if live:
+        touched_values = [r[0] for r in touched.distinct().collect() if r[0] is not None]
+        if not touched_values:
+            return
+        current = (
+            spark.read.option("mergeSchema", "true").parquet(path)
+            .where(F.col(part_col).isin(touched_values))  # partition-pruned scan
+        )
+    touched_names = {f"{part_col}={v}" for v in touched_values}
+    rows = merge(current)
     staging = Path(root.toString() + ".stage-" + uuid.uuid4().hex)
     try:
         rows.hint("rebalance", part_col).write.partitionBy(part_col).parquet(staging.toString())
@@ -291,6 +269,17 @@ def swap_partitions(
             for st in fs.listStatus(staging)
             if st.getPath().getName().startswith(part_col + "=")
         }
+        if not staged and live <= touched_names:
+            # The table keeps one zero-row partition, so its schema stays
+            # readable; a fresh empty frame does not re-run the merge plan.
+            keep = f"{part_col}={min(touched_values, default=0)}"
+            spark.createDataFrame([], rows.drop(part_col).schema).write.parquet(
+                Path(staging, keep).toString()
+            )
+            staged = {keep}
+        if not exists:
+            _rename(fs, staging, root)
+            return
         aside = Path(root, _SWAP_PREFIX + uuid.uuid4().hex)
         fs.mkdirs(aside)
         for name in sorted(touched_names | staged):
@@ -299,11 +288,6 @@ def swap_partitions(
             if name in staged:
                 _rename(fs, Path(staging, name), Path(root, name))
         fs.delete(aside, True)
-        if not staged and live <= touched_names:
-            # No lineage to the (now-deleted) old files: fresh empty frame.
-            spark.createDataFrame([], rows.drop(part_col).schema).write.parquet(
-                Path(root, f"{part_col}={min(touched)}").toString()
-            )
     finally:
         fs.delete(staging, True)
 
@@ -316,18 +300,18 @@ def merge_into_bucketed_parquet(
     num_buckets: int = 64,
     seq_col: str = "ts_ms",
     op_col: str = "operation",
-    table_columns: Sequence[str] | None = None,
     evolve: bool = False,
 ) -> None:
     """Partition-pruned merge: the scale-correct parquet mutation store.
 
     The table is laid out hash-bucketed on the merge key
     (``{target}/__bucket=k/``, one file per bucket). A micro-batch touches
-    only the buckets its keys hash into, so per batch we: (1) read ONLY
-    those partitions (partition pruning on the bucket column), (2) apply
-    the changelog to that slice, (3) write the merged slice once and swap
-    each touched bucket directory in by rename (:func:`swap_partitions`).
-    I/O per batch is O(touched buckets), not O(table) — the plain-parquet
+    only the buckets its keys hash into, so per batch
+    :func:`swap_partitions` reads ONLY those partitions, this function
+    applies the changelog to that slice, and the merged slice is written
+    once and each touched bucket directory swapped in by rename. A missing
+    target bootstraps from the batch itself (its row-image columns). I/O
+    per batch is O(touched buckets), not O(table) — the plain-parquet
     equivalent of a lakehouse ``MERGE INTO``; with Delta/Iceberg this whole
     function collapses into their merge statement behind the same call
     signature.
@@ -337,44 +321,21 @@ def merge_into_bucketed_parquet(
     # the before image) or a delete's bucket is never read/rewritten.
     batch_df = rekey_deletes(batch_df, keys, op_col)
     bucket_expr = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets))
-    if not os.path.exists(target_path):
-        if table_columns is None:
+
+    def merged_buckets(target: DataFrame | None) -> DataFrame:
+        if target is None:
             meta = {op_col, seq_col, "operation", "source_ts_ms", "ts_ms"}
-            table_columns = [
-                c for c in batch_df.columns if c not in meta and not c.startswith("before_")
-            ]
-        empty = spark.createDataFrame([], batch_df.select(*table_columns).schema)
-        merged = apply_changelog(empty, batch_df, key=keys, seq_col=seq_col, op_col=op_col)
-        (
-            merged.withColumn(BUCKET_COL, bucket_expr)
-            .hint("rebalance", BUCKET_COL)
-            .write.partitionBy(BUCKET_COL)
-            .parquet(target_path)
-        )
-        return
-
-    touched = [
-        r[0] for r in batch_df.select(bucket_expr.alias("b")).distinct().collect()
-    ]  # ≤ num_buckets small ints — a driver-safe collect
-
-    def merged_buckets() -> DataFrame:
-        # mergeSchema: after additive evolution, buckets untouched since the
-        # evolution lack the new column in their footers; a single-footer
-        # sample would silently DROP that column (and a later merge would
-        # then erase its values). The union schema costs one footer read
-        # per file — one file per bucket.
-        target = (
-            spark.read.option("mergeSchema", "true").parquet(target_path)
-            .where(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
-            .drop(BUCKET_COL)
-        )
+            cols = [c for c in batch_df.columns if c not in meta and not c.startswith("before_")]
+            target = spark.createDataFrame([], batch_df.select(*cols).schema)
+        else:
+            target = target.drop(BUCKET_COL)
         events = batch_df
         if evolve:
             target, events = evolve_target_schema(target, events, op_col=op_col)
         merged = apply_changelog(target, events, key=keys, seq_col=seq_col, op_col=op_col)
         return merged.withColumn(BUCKET_COL, bucket_expr)
 
-    swap_partitions(spark, target_path, BUCKET_COL, touched, merged_buckets)
+    swap_partitions(spark, target_path, BUCKET_COL, batch_df.select(bucket_expr), merged_buckets)
 
 
 def read_bucketed_store(spark, target_path: str) -> DataFrame:
@@ -387,35 +348,6 @@ def read_bucketed_store(spark, target_path: str) -> DataFrame:
     scan — and yields NULLs for pre-evolution rows.
     """
     return spark.read.option("mergeSchema", "true").parquet(target_path).drop(BUCKET_COL)
-
-
-def foreach_batch_bucketed_merge(
-    spark, target_path: str, key: Sequence[str], num_buckets: int = 64,
-    seq_col: str = "ts_ms", op_col: str = "operation",
-):
-    """``writeStream.foreachBatch`` adapter for :func:`merge_into_bucketed_parquet`."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        merge_into_bucketed_parquet(
-            spark, target_path, batch_df, key=key, num_buckets=num_buckets,
-            seq_col=seq_col, op_col=op_col,
-        )
-
-    return _apply
-
-
-def _recover_interrupted_swap(target_path: str) -> None:
-    """If a crash left ``.old-*`` behind with no live target, restore it."""
-    if os.path.exists(target_path):
-        return
-    parent, base = os.path.split(target_path)
-    if not os.path.isdir(parent):
-        return
-    leftovers = sorted(d for d in os.listdir(parent) if d.startswith(base + ".old-"))
-    if leftovers:
-        os.rename(os.path.join(parent, leftovers[0]), target_path)
-        for d in leftovers[1:]:
-            shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
 
 
 def merge_into_delta(
@@ -453,19 +385,7 @@ def merge_into_delta(
         c for c in events.columns
         if c not in (op_col, seq_col, "source_ts_ms") and not c.startswith("before_")
     ]
-    latest = (
-        events.groupBy(*keys)
-        .agg(
-            F.max(
-                F.struct(F.col(seq_col), F.col(op_col), *[c for c in row_cols if c not in keys])
-            ).alias("__last")
-        )
-        .select(
-            *keys,
-            F.col(f"__last.{op_col}").alias("__op"),
-            *[F.col(f"__last.{c}").alias(c) for c in row_cols if c not in keys],
-        )
-    )
+    latest = _latest_per_key(events, keys, row_cols, seq_col, op_col)
     if not DeltaTable.isDeltaTable(spark, target_path):
         latest.filter(F.col("__op") != "delete").drop("__op").write.format("delta").save(
             target_path
@@ -486,11 +406,10 @@ def merge_into_delta(
 
 
 def _detect_store_layout(target_path: str) -> str | None:
-    """Which merge-store layout lives at ``target_path``: 'bucketed', 'flat',
-    'delta', or None for absent/empty. Layouts are not interchangeable on
-    disk (a flat store is read with plain ``spark.read.parquet``, a bucketed
-    one only via :func:`read_bucketed_store`), so writers must refuse to
-    interleave them."""
+    """Which merge-store layout lives at ``target_path``: 'bucketed',
+    'delta', 'flat' (a plain parquet directory, which no writer here
+    produces), or None for absent/empty. Layouts are not interchangeable on
+    disk, so writers must refuse to write into another one."""
     if not os.path.isdir(target_path):
         return None
     entries = os.listdir(target_path)
@@ -509,11 +428,9 @@ def _check_store_layout(target_path: str, layout: str) -> None:
         raise ValueError(
             f"merge store at {target_path!r} already uses the {existing!r} "
             f"layout; refusing to write {layout!r} into it — the layouts "
-            f"are not interchangeable on disk. Pass layout={existing!r} to "
-            f"keep the existing store, or point the stream at a new "
-            f"target_path. (The default layout changed from 'flat' to "
-            f"'bucketed'; checkpointed streams resuming an old flat store "
-            f"must opt into layout='flat' explicitly.)"
+            f"are not interchangeable on disk. Open the store with the "
+            f"layout it was written in, or point the stream at a new "
+            f"target_path."
         )
 
 
@@ -547,14 +464,15 @@ def foreach_batch_merge(
     """``writeStream.foreachBatch`` adapter for the merge store backends.
 
     Default ``layout="bucketed"`` routes to
-    :func:`merge_into_bucketed_parquet` — the scale-correct plain-parquet
-    store whose per-batch I/O is O(touched buckets); read it back with
+    :func:`merge_into_bucketed_parquet` — the plain-parquet store whose
+    per-batch I/O is O(touched buckets); read it back with
     :func:`read_bucketed_store`. ``layout="delta"`` routes to
     :func:`merge_into_delta` (transactional ``MERGE INTO``; needs
-    delta-spark). ``layout="flat"`` is an explicit opt-in to
-    :func:`merge_into_parquet`, whose full-rewrite-per-batch is only sane
-    for tiny tables. Layouts are not interchangeable on disk — pick one per
-    target path.
+    delta-spark). Any other layout raises ``ValueError``. Both merges are
+    keyed on the latest event per key, so a replayed batch converges on
+    the same store. Layouts are not interchangeable on disk: an existing
+    store in another layout, a plain parquet directory included, is
+    refused with ``ValueError`` when the adapter is built.
 
     A bucketed store must be merged with the ``num_buckets`` it was created
     with. A smaller value is refused with ``ValueError`` when the adapter is
@@ -562,15 +480,9 @@ def foreach_batch_merge(
     detected: the store records no bucket count, and one whose high buckets
     are all empty looks the same as a smaller store.
     """
-    if layout not in ("bucketed", "flat", "delta"):
-        raise ValueError(f"layout must be 'bucketed', 'flat' or 'delta', got {layout!r}")
+    if layout not in ("bucketed", "delta"):
+        raise ValueError(f"layout must be 'bucketed' or 'delta', got {layout!r}")
     _check_store_layout(target_path, layout)
-    if layout == "bucketed":
-        _check_bucket_count(target_path, num_buckets)
-        return foreach_batch_bucketed_merge(
-            spark, target_path, key=key, num_buckets=num_buckets,
-            seq_col=seq_col, op_col=op_col,
-        )
     if layout == "delta":
 
         def _apply_delta(batch_df: DataFrame, batch_id: int) -> None:
@@ -579,8 +491,12 @@ def foreach_batch_merge(
             )
 
         return _apply_delta
+    _check_bucket_count(target_path, num_buckets)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        merge_into_parquet(spark, target_path, batch_df, key=key, seq_col=seq_col, op_col=op_col)
+        merge_into_bucketed_parquet(
+            spark, target_path, batch_df, key=key, num_buckets=num_buckets,
+            seq_col=seq_col, op_col=op_col,
+        )
 
     return _apply

@@ -218,23 +218,21 @@ def _swap_doc_rows(
     spark,
     path: str,
     part_col: str,
-    touched: list[int],
+    touched: DataFrame,
     batch_ids: DataFrame,
     id_col: str,
     new_rows: DataFrame,
 ) -> None:
-    """Replace the batch docs' rows in the touched partitions of ``path``:
-    drop every stored row of the batch's docs (anti-join on the doc id —
-    covers removed terms), add ``new_rows`` (carrying ``part_col``), and
-    swap the partitions in (:func:`...mutate.swap_partitions`)."""
+    """Replace the batch docs' rows in the ``touched`` partitions of
+    ``path``: drop every stored row of the batch's docs (anti-join on the
+    doc id — covers removed terms), add ``new_rows`` (carrying
+    ``part_col``), and swap the partitions in
+    (:func:`...mutate.swap_partitions`)."""
 
-    def rows() -> DataFrame:
-        kept = (
-            spark.read.parquet(path)
-            .where(F.col(part_col).isin(touched))  # partition-pruned read
-            .join(F.broadcast(batch_ids), id_col, "left_anti")
-        )
-        return kept.unionByName(new_rows)
+    def rows(current: DataFrame | None) -> DataFrame:
+        if current is None:
+            return new_rows
+        return current.join(F.broadcast(batch_ids), id_col, "left_anti").unionByName(new_rows)
 
     swap_partitions(spark, path, part_col, touched, rows)
 
@@ -313,12 +311,11 @@ def apply_changelog_bm25(
     )
 
     # Term-bucket touched set: terms of after images (upserts) + terms of
-    # before images (update/delete) — bounded collect of distinct bucket
-    # ids (<= nbuckets small ints), same pattern as the IVF cell collect.
+    # before images (update/delete), the same shape as the IVF cell set.
     after_terms = _doc_terms(
         latest.where(F.col(op_col) != "delete"), text_col, id_col
     )
-    parts = [after_terms.select(_tbucket(F.col("term"), nbuckets).alias("b"))]
+    touched = after_terms.select(_tbucket(F.col("term"), nbuckets).alias("b"))
     if before_text in batch_df.columns:
         # Old-term buckets come from ALL movers in the batch, not just the
         # latest event per key: in an intra-batch chain (update A->B then
@@ -327,30 +324,23 @@ def apply_changelog_bm25(
         # event's before image covers them. The union of every mover's
         # before image is a superset of the pre-batch text's buckets
         # (extra buckets merely widen the touched set), same shape as the
-        # IVF applier's old_cells.
+        # IVF applier's before-image cells.
         old_terms = _doc_terms(movers, before_text, id_col)
-        parts.append(old_terms.select(_tbucket(F.col("term"), nbuckets).alias("b")))
-    touched_t = [
-        r[0]
-        for r in reduce(lambda a, b: a.unionByName(b), parts).distinct().collect()
-        if r[0] is not None
-    ]
+        touched = touched.unionByName(old_terms.select(_tbucket(F.col("term"), nbuckets).alias("b")))
     batch_ids = latest.select(F.col(id_col).alias("doc_id")).distinct()
 
-    if touched_t:
-        # New postings for every non-deleted doc in the batch.
-        new_tf = (
-            after_terms.groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn(TBUCKET_COL, _tbucket(F.col("term"), nbuckets))
-        )
-        _swap_doc_rows(
-            spark, base + "/postings", TBUCKET_COL, touched_t, batch_ids, "doc_id", new_tf
-        )
+    # New postings for every non-deleted doc in the batch.
+    new_tf = (
+        after_terms.groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .withColumn(TBUCKET_COL, _tbucket(F.col("term"), nbuckets))
+    )
+    _swap_doc_rows(spark, base + "/postings", TBUCKET_COL, touched, batch_ids, "doc_id", new_tf)
 
     # docs/ table: replace the batch docs' rows in their doc buckets. Every
     # upserted doc gets a dl row — LEFT join so a doc updated/inserted with
     # token-less text lands as dl=0 (it still counts toward N / avgdl).
+    dbucket = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(doc_buckets)).cast("int")
     upsert_ids = (
         latest.where(F.col(op_col) != "delete")
         .select(F.col(id_col).alias("doc_id"))
@@ -361,20 +351,11 @@ def apply_changelog_bm25(
     new_dl = (
         upsert_ids.join(counted, "doc_id", "left")
         .select("doc_id", F.coalesce(F.col("__c"), F.lit(0)).cast("bigint").alias("dl"))
-        .withColumn(
-            DBUCKET_COL, F.pmod(F.xxhash64(F.col("doc_id")), F.lit(doc_buckets)).cast("int")
-        )
+        .withColumn(DBUCKET_COL, dbucket)
     )
-    touched_d = [
-        r[0]
-        for r in batch_ids.select(
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(doc_buckets)).cast("int").alias("b")
-        ).distinct().collect()
-    ]
-    if touched_d:
-        _swap_doc_rows(
-            spark, base + "/docs", DBUCKET_COL, touched_d, batch_ids, "doc_id", new_dl
-        )
+    _swap_doc_rows(
+        spark, base + "/docs", DBUCKET_COL, batch_ids.select(dbucket), batch_ids, "doc_id", new_dl
+    )
 
     _write_stats(spark, base)
     if batch_id is not None:

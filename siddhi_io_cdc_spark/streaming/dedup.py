@@ -60,10 +60,9 @@ def _recover_interrupted_compact(sub: str) -> None:
     The compaction swap is two renames (``sub -> .old-*`` then
     ``.tmp-* -> sub``); a crash between them leaves ``sub`` absent, which
     the probe path would silently read as an EMPTY index — permanently
-    missing every historical pair. Same marker-free recovery contract as
-    ``operators/mutate.py:_recover_interrupted_swap``: if the live dir is
-    missing but a ``.old-*`` sibling survives, the old dir is still the
-    complete pre-compaction index — restore it. Stale ``.tmp-*`` / extra
+    missing every historical pair. Recovery needs no marker: if the live
+    dir is missing but a ``.old-*`` sibling survives, the old dir is still
+    the complete pre-compaction index — restore it. Stale ``.tmp-*`` / extra
     ``.old-*`` siblings are garbage either way and are removed.
     """
     import shutil
@@ -347,8 +346,7 @@ def compact_lsh_index(spark, store_path: str) -> None:
     a sibling staging directory, and swaps via renames. A crash between the
     two renames leaves the live dir missing — recovered on the next
     compaction OR probe by :func:`_recover_interrupted_compact` (the
-    ``.old-*`` sibling is the complete pre-compaction index), the same
-    contract as ``operators/mutate.py:_recover_interrupted_swap``. Run it as
+    ``.old-*`` sibling is the complete pre-compaction index). Run it as
     a maintenance job between batches (the index is append-only, so any
     consistent snapshot compacts safely).
     """

@@ -149,13 +149,11 @@ def apply_changelog_ivf(
             )
 
     # Touched cells: after-image cells (anything upserted) + before-image
-    # cells (rows leaving a cell via update-move or delete). <= 2*nlist
-    # small ints — a driver-safe collect, same pattern as the merge store.
-    after_cells = (
+    # cells (rows leaving a cell via update-move or delete).
+    cells = (
         batch_df.where(F.col(op_col) != "delete")
         .select(ivf_assign(F.col(vec_col), centroids).alias("c"))
     )
-    cells = after_cells
     if has_old_image:
         movers = batch_df.where(F.col(op_col).isin(*moving_ops))
         # A NULL before image on a moving op is as fatal as a missing
@@ -170,28 +168,17 @@ def apply_changelog_ivf(
                 "cell. Emit whole before images (update projection with "
                 "missing-image gating off) or pre-filter such rows."
             )
-        old_cells = movers.select(
-            ivf_assign(F.col(before_vec), centroids).alias("c")
+        cells = cells.unionByName(
+            movers.select(ivf_assign(F.col(before_vec), centroids).alias("c"))
         )
-        cells = cells.unionByName(old_cells)
-    touched = [r[0] for r in cells.distinct().collect() if r[0] is not None]
-    if not touched:
-        if batch_id is not None:
-            _hadoop_write_text(spark, _marker_path(index_path, batch_id), "done")
-        return
 
-    def merged_cells() -> DataFrame:
-        target = (
-            spark.read.parquet(index_path)
-            .where(F.col(CELL_COL).isin(touched))  # partition-pruned read
-            .drop(CELL_COL)
-        )
+    def merged_cells(target: DataFrame) -> DataFrame:
         merged = apply_changelog(
-            target, batch_df, key=[id_col], seq_col=seq_col, op_col=op_col
+            target.drop(CELL_COL), batch_df, key=[id_col], seq_col=seq_col, op_col=op_col
         )
         return merged.withColumn(CELL_COL, ivf_assign(F.col(vec_col), centroids))
 
-    swap_partitions(spark, index_path.rstrip("/"), CELL_COL, touched, merged_cells)
+    swap_partitions(spark, index_path.rstrip("/"), CELL_COL, cells, merged_cells)
     if batch_id is not None:
         _hadoop_write_text(spark, _marker_path(index_path, batch_id), "done")
 

@@ -299,22 +299,14 @@ def apply_changelog_ngram(
     # A->B then B->C) the pre-batch rows live in buckets derived from A,
     # which only the earliest before image covers; the union over all
     # movers is a superset (extra buckets merely widen the replace), the
-    # same shape as the BM25 applier's old-term set. ONE bounded collect
-    # (<= nbuckets small ints) over the union.
-    buckets = new_tf.select(F.col(GBUCKET_COL).alias("b"))
+    # same shape as the BM25 applier's old-term set.
+    touched = new_tf.select(F.col(GBUCKET_COL).alias("b"))
     if before in batch_df.columns:
         old_tf = _doc_gram_tf(movers, n, id_col, before)
-        buckets = buckets.unionByName(
+        touched = touched.unionByName(
             old_tf.select(_gbucket(n, nbuckets).alias("b"))
         )
-    touched = sorted({
-        r[0] for r in buckets.distinct().collect() if r[0] is not None
-    })
-
-    if touched:
-        _swap_doc_rows(
-            spark, base + "/grams", GBUCKET_COL, touched, batch_ids, id_col, new_tf
-        )
+    _swap_doc_rows(spark, base + "/grams", GBUCKET_COL, touched, batch_ids, id_col, new_tf)
 
     # roster: replace the batch docs' rows in their doc buckets (deletes
     # simply vanish — their ids are anti-joined out and re-add nothing).
@@ -330,16 +322,10 @@ def apply_changelog_ngram(
         )
         .withColumn(DBUCKET_COL, _dbucket(id_col, doc_buckets))
     )
-    touched_d = [
-        r[0]
-        for r in batch_ids.select(
-            _dbucket(id_col, doc_buckets).alias("b")
-        ).distinct().collect()
-    ]
-    if touched_d:
-        _swap_doc_rows(
-            spark, base + "/docs", DBUCKET_COL, touched_d, batch_ids, id_col, new_roster
-        )
+    _swap_doc_rows(
+        spark, base + "/docs", DBUCKET_COL, batch_ids.select(_dbucket(id_col, doc_buckets)),
+        batch_ids, id_col, new_roster,
+    )
 
     if batch_id is not None:
         _hadoop_write_text(spark, _marker_path(base, batch_id), "done")

@@ -9,10 +9,11 @@ per-granularity tables continuously. Here the same contract is:
 
 Each micro-batch is aggregated to finest-tier **partials** (sum/count/
 min/max — all additive/idempotent-mergeable), then additively merged into a
-hash-bucketed parquet store: only the buckets the batch's groups hash into
-are read and rewritten (same partition-pruned layout as
-``operators.mutate.merge_into_bucketed_parquet``), so per-batch I/O is
-O(touched buckets + batch), never O(store). Coarser tiers are derived at
+hash-bucketed parquet store (one file per bucket) through
+``operators.mutate.swap_partitions``, the writer every bucketed store
+shares: only the buckets the batch's groups hash into are read and
+rewritten, so per-batch I/O is O(touched buckets + batch), never O(store);
+the first batch creates the store. Coarser tiers are derived at
 read time by ``read_rollup`` — they re-aggregate the (already tiny) finest
 tier, mirroring how siddhi answers a range query from the right tier.
 
@@ -74,33 +75,23 @@ def merge_rollup_batch(
     group_cols = [*keys, "bucket_start"]
     bucket_expr = F.pmod(F.xxhash64(*[F.col(c) for c in group_cols]), F.lit(num_buckets))
 
-    if not os.path.exists(store_path):
-        partials.withColumn(BUCKET_COL, bucket_expr).write.partitionBy(BUCKET_COL).parquet(
-            store_path
-        )
-        return
-
-    touched = [r[0] for r in partials.select(bucket_expr.alias("b")).distinct().collect()]
-
-    def merged_buckets() -> DataFrame:
-        existing = (
-            spark.read.parquet(store_path)
-            .where(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
-            .drop(BUCKET_COL)
-        )
-        merged = (
-            existing.unionByName(partials)
-            .groupBy(*group_cols)
-            .agg(
-                F.sum("__sum").cast("decimal(38,2)").alias("__sum"),
-                F.sum("__cnt").alias("__cnt"),
-                F.min("__min").alias("__min"),
-                F.max("__max").alias("__max"),
+    def merged_buckets(existing: DataFrame | None) -> DataFrame:
+        merged = partials
+        if existing is not None:
+            merged = (
+                existing.drop(BUCKET_COL)
+                .unionByName(partials)
+                .groupBy(*group_cols)
+                .agg(
+                    F.sum("__sum").cast("decimal(38,2)").alias("__sum"),
+                    F.sum("__cnt").alias("__cnt"),
+                    F.min("__min").alias("__min"),
+                    F.max("__max").alias("__max"),
+                )
             )
-        )
         return merged.withColumn(BUCKET_COL, bucket_expr)
 
-    swap_partitions(spark, store_path, BUCKET_COL, touched, merged_buckets)
+    swap_partitions(spark, store_path, BUCKET_COL, partials.select(bucket_expr), merged_buckets)
 
 
 def foreach_batch_rollup(

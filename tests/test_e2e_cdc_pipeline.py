@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from siddhi_io_cdc_spark.operators.flatten import flatten
-from siddhi_io_cdc_spark.operators.mutate import foreach_batch_bucketed_merge
+from siddhi_io_cdc_spark.operators.mutate import foreach_batch_merge
 from siddhi_io_cdc_spark.plans.rollup import rollup_single_pass
 from siddhi_io_cdc_spark.sources.envelope import read_changelog_stream
 
@@ -58,7 +58,7 @@ def test_capture_shape_apply_aggregate(spark, tmp_path):
     flat = flatten(env, operations=["insert", "update", "delete"])
     q = (
         flat.writeStream.foreachBatch(
-            foreach_batch_bucketed_merge(spark, store, key=["k"], num_buckets=4)
+            foreach_batch_merge(spark, store, key=["k"], num_buckets=4)
         )
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(processingTime="300 milliseconds")
@@ -94,8 +94,7 @@ def test_capture_shape_apply_aggregate(spark, tmp_path):
 
 
 def test_default_merge_adapter_is_bucketed(spark, tmp_path):
-    """foreach_batch_merge defaults to the bucketed (partition-pruned) store;
-    the flat full-rewrite layout is an explicit opt-in."""
+    """foreach_batch_merge defaults to the bucketed (partition-pruned) store."""
     from siddhi_io_cdc_spark.operators.mutate import (
         BUCKET_COL,
         foreach_batch_merge,

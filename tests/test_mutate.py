@@ -1,10 +1,11 @@
 """Mutating query surface — Q1/Q3/Q4 semantics incl. the NULL-update fix
 (siddhi's ``update T on key`` writes the given value including NULL;
-reference usage TestCaseOfCDCListeningMode.java:275-277) and crash-safe
-parquet merge (bootstrap + sibling-tmp swap)."""
+reference usage TestCaseOfCDCListeningMode.java:275-277) and the crash-safe
+bucketed parquet merge store (bootstrap + per-bucket swap)."""
 
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -12,7 +13,8 @@ from siddhi_io_cdc_spark.operators.mutate import (
     apply_changelog,
     delete_on,
     insert_into,
-    merge_into_parquet,
+    merge_into_bucketed_parquet,
+    read_bucketed_store,
     update_on,
 )
 
@@ -49,41 +51,6 @@ def test_insert_and_delete(spark):
     assert insert_into(tgt, src).count() == 4
     left = delete_on(tgt, spark.createDataFrame([("e002",)], "id string"), on=["id"])
     assert sorted(r["id"] for r in left.collect()) == ["e001", "e003"]
-
-
-def test_merge_into_parquet_bootstraps_missing_target(spark, tmp_path):
-    target = os.path.join(str(tmp_path), "login")
-    batch = spark.createDataFrame(
-        [("e001", "alice", "insert", 1), ("e002", "bob", "insert", 2)],
-        "id string, name string, operation string, ts_ms long",
-    )
-    merge_into_parquet(spark, target, batch, key=["id"])
-    got = spark.read.parquet(target)
-    assert sorted(r["id"] for r in got.collect()) == ["e001", "e002"]
-    assert sorted(got.columns) == ["id", "name"]
-
-    # Second batch merges against the bootstrapped table: update + delete.
-    batch2 = spark.createDataFrame(
-        [("e001", "ALICE", "update", 3), ("e002", "bob", "delete", 4)],
-        "id string, name string, operation string, ts_ms long",
-    )
-    merge_into_parquet(spark, target, batch2, key=["id"])
-    assert spark.read.parquet(target).collect() == [Row(id="e001", name="ALICE")]
-
-
-def test_merge_recovers_interrupted_swap(spark, tmp_path):
-    target = os.path.join(str(tmp_path), "tbl")
-    batch = spark.createDataFrame(
-        [("k1", "v1", "insert", 1)], "id string, v string, operation string, ts_ms long"
-    )
-    merge_into_parquet(spark, target, batch, key=["id"])
-    # Simulate a crash between the two swap renames: target gone, .old- left.
-    os.rename(target, target + ".old-deadbeef")
-    batch2 = spark.createDataFrame(
-        [("k2", "v2", "insert", 2)], "id string, v string, operation string, ts_ms long"
-    )
-    merge_into_parquet(spark, target, batch2, key=["id"])
-    assert sorted(r["id"] for r in spark.read.parquet(target).collect()) == ["k1", "k2"]
 
 
 def test_apply_changelog_last_event_wins(spark):
@@ -211,42 +178,11 @@ def test_apply_changelog_deletes_keyed_from_before_image(spark):
     assert out == {1: 10.0, 2: 20.0}  # k=3's delete must not strand a k=0 row
 
 
-def test_merge_evolves_schema_on_new_column(spark, tmp_path):
+def test_bucketed_merge_evolves_schema(spark, tmp_path):
     """Additive evolution: a column appearing mid-stream lands as typed
     NULLs on historical rows; a column dropped upstream reads NULL on new
     rows but keeps historical values."""
     from siddhi_io_cdc_spark.operators.mutate import evolve_target_schema
-
-    target = os.path.join(str(tmp_path), "evolve")
-    b1 = spark.createDataFrame(
-        [("k1", "v1", "insert", 1)], "id string, v string, operation string, ts_ms long"
-    )
-    merge_into_parquet(spark, target, b1, key=["id"])
-    # upstream ALTER TABLE ADD COLUMN w
-    b2 = spark.createDataFrame(
-        [("k2", "v2", 7, "insert", 2)],
-        "id string, v string, w long, operation string, ts_ms long",
-    )
-    merge_into_parquet(spark, target, b2, key=["id"], evolve=True)
-    got = {r.id: (r.v, r.w) for r in spark.read.parquet(target).collect()}
-    assert got == {"k1": ("v1", None), "k2": ("v2", 7)}
-
-    # upstream drops v: new rows get NULL v, k1/k2 keep theirs
-    b3 = spark.createDataFrame(
-        [("k3", 9, "insert", 3)], "id string, w long, operation string, ts_ms long"
-    )
-    merge_into_parquet(spark, target, b3, key=["id"], evolve=True)
-    got = {r.id: (r.v, r.w) for r in spark.read.parquet(target).collect()}
-    assert got == {"k1": ("v1", None), "k2": ("v2", 7), "k3": (None, 9)}
-
-    # pure-projection check, no store: after alignment every target column
-    # is present on the events side (events keep their extra meta columns).
-    t, e = evolve_target_schema(spark.read.parquet(target), b2)
-    assert set(t.columns) <= set(e.columns)
-
-
-def test_bucketed_merge_evolves_schema(spark, tmp_path):
-    from siddhi_io_cdc_spark.operators.mutate import merge_into_bucketed_parquet
 
     target = os.path.join(str(tmp_path), "bevolve")
     b1 = spark.createDataFrame(
@@ -254,12 +190,13 @@ def test_bucketed_merge_evolves_schema(spark, tmp_path):
         "id string, v string, operation string, ts_ms long",
     )
     merge_into_bucketed_parquet(spark, target, b1, key=["id"], num_buckets=4)
+    # A store bootstrapped from a batch keeps its row image, not the meta columns.
+    assert sorted(read_bucketed_store(spark, target).columns) == ["id", "v"]
     b2 = spark.createDataFrame(
         [("k1", "V1", 5, "update", 2), ("k3", "v3", 6, "insert", 2)],
         "id string, v string, w long, operation string, ts_ms long",
     )
     merge_into_bucketed_parquet(spark, target, b2, key=["id"], num_buckets=4, evolve=True)
-    from siddhi_io_cdc_spark.operators.mutate import read_bucketed_store
 
     got = {r.id: (r.v, r.w) for r in read_bucketed_store(spark, target).collect()}
     assert got["k1"] == ("V1", 5) and got["k3"] == ("v3", 6)
@@ -276,6 +213,19 @@ def test_bucketed_merge_evolves_schema(spark, tmp_path):
     merge_into_bucketed_parquet(spark, target, b3, key=["id"], num_buckets=4, evolve=True)
     got = {r.id: (r.v, r.w) for r in read_bucketed_store(spark, target).collect()}
     assert got["k1"] == ("V1", 5) and got["k2"] == ("V2", None) and got["k3"] == ("v3", 6)
+
+    # upstream drops v: the new row gets NULL v, the others keep theirs
+    b4 = spark.createDataFrame(
+        [("k4", 9, "insert", 4)], "id string, w long, operation string, ts_ms long"
+    )
+    merge_into_bucketed_parquet(spark, target, b4, key=["id"], num_buckets=4, evolve=True)
+    got = {r.id: (r.v, r.w) for r in read_bucketed_store(spark, target).collect()}
+    assert got == {"k1": ("V1", 5), "k2": ("V2", None), "k3": ("v3", 6), "k4": (None, 9)}
+
+    # pure-projection check, no store: after alignment every target column
+    # is present on the events side (events keep their extra meta columns).
+    t, e = evolve_target_schema(read_bucketed_store(spark, target), b2)
+    assert set(t.columns) <= set(e.columns)
 
 
 def test_delta_layout_gates_cleanly(spark, tmp_path):
@@ -302,40 +252,79 @@ def test_delta_layout_gates_cleanly(spark, tmp_path):
 
 def test_foreach_batch_merge_refuses_layout_interleave(spark, tmp_path):
     """A checkpointed stream resuming against a store written in another
-    layout must fail fast: flat and bucketed stores are not interchangeable
-    on disk (the default changed to 'bucketed'; silent interleave would
+    layout must fail fast: a plain parquet directory, a bucketed store and
+    a Delta table are not interchangeable on disk (silent interleave would
     corrupt reads)."""
-    import pytest
+    from siddhi_io_cdc_spark.operators.mutate import foreach_batch_merge
 
-    from siddhi_io_cdc_spark.operators.mutate import (
-        foreach_batch_merge,
-        merge_into_parquet,
-    )
-
-    flat = str(tmp_path / "flat_store")
     batch = spark.createDataFrame(
         [(1, "a", 10, "insert")], "k long, v string, ts_ms long, operation string"
     )
-    merge_into_parquet(spark, flat, batch, key=["k"])
-    # Default (bucketed) against an existing flat store: refuse.
+    # A plain parquet directory (written outside the package) is refused.
+    flat = str(tmp_path / "flat_store")
+    batch.drop("operation", "ts_ms").write.parquet(flat)
     with pytest.raises(ValueError, match="already uses the 'flat' layout"):
         foreach_batch_merge(spark, flat, key=["k"])
-    # Explicit matching layout keeps working.
-    apply_fn = foreach_batch_merge(spark, flat, key=["k"], layout="flat")
-    apply_fn(
-        spark.createDataFrame(
-            [(2, "b", 11, "insert")], "k long, v string, ts_ms long, operation string"
-        ),
-        0,
-    )
-    assert spark.read.parquet(flat).count() == 2
+    # The full-rewrite flat layout is gone.
+    with pytest.raises(ValueError, match="layout must be 'bucketed' or 'delta'"):
+        foreach_batch_merge(spark, str(tmp_path / "new_store"), key=["k"], layout="flat")
 
-    # And the mirror case: bucketed store, flat adapter.
+    # A bucketed store opened with another layout.
     bucketed = str(tmp_path / "bucketed_store")
     apply_b = foreach_batch_merge(spark, bucketed, key=["k"], num_buckets=4)
     apply_b(batch, 0)
     with pytest.raises(ValueError, match="already uses the 'bucketed' layout"):
-        foreach_batch_merge(spark, bucketed, key=["k"], layout="flat")
+        foreach_batch_merge(spark, bucketed, key=["k"], layout="delta")
+
+
+@pytest.mark.parametrize("store", ["changelog", "history", "rollup"])
+def test_empty_first_batch_leaves_a_usable_store(spark, tmp_path, store):
+    """A first batch with no surviving rows must create a readable store
+    (one zero-row partition): the next batch merges into it, and the store
+    then holds exactly what that batch alone creates. A created store has
+    one parquet file per bucket."""
+    import glob
+
+    from siddhi_io_cdc_spark.operators.history import merge_history_into_parquet
+    from siddhi_io_cdc_spark.streaming.rollup_sink import merge_rollup_batch
+
+    schema = "id long, v double, operation string, ts_ms long"
+    batch = spark.createDataFrame([(k, float(k), "insert", 2) for k in range(40)], schema)
+    if store == "changelog":
+        empty = spark.createDataFrame([(1, 0.0, "delete", 1)], schema)  # nothing survives
+        merge = lambda p, b: merge_into_bucketed_parquet(spark, p, b, key=["id"], num_buckets=4)
+    elif store == "history":
+        empty = batch.limit(0)
+        merge = lambda p, b: merge_history_into_parquet(spark, p, b, key=["id"], num_buckets=4)
+    else:
+        empty = batch.limit(0)
+        merge = lambda p, b: merge_rollup_batch(
+            spark, p, b, "ts_ms", ["id"], "v", granularity=10, num_buckets=4
+        )
+
+    after_empty, fresh = str(tmp_path / "after_empty"), str(tmp_path / "fresh")
+    merge(after_empty, empty)
+    assert spark.read.parquet(after_empty).count() == 0
+    merge(after_empty, batch)
+    # Without AQE's coalescing, each of the 4 shuffle partitions of a
+    # writer without the rebalance hint would hold rows of every bucket.
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try:
+        merge(fresh, batch)
+    finally:
+        spark.conf.set(key, "true")
+
+    def rows(p):
+        return {tuple(r) for r in spark.read.parquet(p).collect()}
+
+    assert len(rows(fresh)) == 40
+    assert rows(after_empty) == rows(fresh)
+    for p in (after_empty, fresh):
+        buckets = glob.glob(f"{p}/__bucket=*")
+        assert len(buckets) == 4
+        for d in buckets:
+            assert len(glob.glob(f"{d}/*.parquet")) == 1, d
 
 
 def test_foreach_batch_merge_refuses_fewer_buckets(spark, tmp_path):
