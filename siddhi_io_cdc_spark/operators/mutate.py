@@ -11,10 +11,16 @@ Spark-first restatement: the *logic* is a keyed merge expressed as DataFrame
 joins (anti-join + union — Catalyst broadcasts the small change-set side
 automatically, so the target table is never shuffled); the *storage* is
 pluggable. This container has no Delta/Iceberg, so the shipped store is a
-hash-bucketed parquet directory. :func:`swap_partitions` is the one code
-path that reads, creates and rewrites such a store — this merge store, the
+hash-bucketed parquet directory kept merge-on-read by ``streaming/mor.py``:
+:func:`merge_into_bucketed_parquet` writes the bucketed base once, then
+appends each batch's latest row per key as one delta file plus one
+tombstone file and reads no store data; compaction folds the deltas into
+a new base every 16 batches. The store must be read through
+:func:`read_bucketed_store`, which merges base, deltas and tombstones.
+:func:`swap_partitions` is the one code path that reads, creates and
+rewrites a copy-on-write bucketed store — the changelog store's base, the
 SCD2 history store, the rollup sink and the IVF / BM25 / n-gram indexes
-all go through it: it reads only the touched partitions, writes their
+go through it: it reads only the touched partitions, writes their
 replacement once and swaps each in by rename. On a real lakehouse the same
 plan feeds ``DeltaTable.merge`` / ``MERGE INTO`` (:func:`merge_into_delta`)
 and the physical commit becomes transactional. Streaming entry points wrap
@@ -24,7 +30,6 @@ is keyed.
 
 from __future__ import annotations
 
-import os
 import uuid
 from collections.abc import Callable, Sequence
 
@@ -177,8 +182,10 @@ def apply_changelog(
 
 # ---------------------------------------------------------------------------
 # Bucketed parquet stores (the container has no Delta): every hash- or
-# cell-partitioned store of the package is read, created and rewritten
-# through swap_partitions; a lakehouse MERGE replaces it in production.
+# cell-partitioned copy-on-write store of the package is read, created and
+# rewritten through swap_partitions; the changelog merge store is
+# merge-on-read on top of a base it writes that way. A lakehouse MERGE
+# replaces both in production.
 # ---------------------------------------------------------------------------
 
 
@@ -205,9 +212,11 @@ def swap_partitions(
     part_col: str,
     touched: DataFrame,
     merge: Callable[[DataFrame | None], DataFrame],
-) -> None:
+) -> bool:
     """Rewrite the partitions of the parquet table at ``path`` (partitioned
     on ``part_col``) that ``touched`` names, with the rows ``merge`` returns.
+    Returns whether ``merge`` returned any row (False if nothing was
+    touched).
 
     ``touched`` is a one-column frame of the partition values the batch
     touches (NULLs ignored). ``merge(current)`` gets the live rows of those
@@ -254,7 +263,7 @@ def swap_partitions(
     if live:
         touched_values = [r[0] for r in touched.distinct().collect() if r[0] is not None]
         if not touched_values:
-            return
+            return False
         current = (
             spark.read.option("mergeSchema", "true").parquet(path)
             .where(F.col(part_col).isin(touched_values))  # partition-pruned scan
@@ -269,6 +278,7 @@ def swap_partitions(
             for st in fs.listStatus(staging)
             if st.getPath().getName().startswith(part_col + "=")
         }
+        has_rows = bool(staged)
         if not staged and live <= touched_names:
             # The table keeps one zero-row partition, so its schema stays
             # readable; a fresh empty frame does not re-run the merge plan.
@@ -279,7 +289,7 @@ def swap_partitions(
             staged = {keep}
         if not exists:
             _rename(fs, staging, root)
-            return
+            return has_rows
         aside = Path(root, _SWAP_PREFIX + uuid.uuid4().hex)
         fs.mkdirs(aside)
         for name in sorted(touched_names | staged):
@@ -288,6 +298,7 @@ def swap_partitions(
             if name in staged:
                 _rename(fs, Path(staging, name), Path(root, name))
         fs.delete(aside, True)
+        return has_rows
     finally:
         fs.delete(staging, True)
 
@@ -302,52 +313,105 @@ def merge_into_bucketed_parquet(
     op_col: str = "operation",
     evolve: bool = False,
 ) -> None:
-    """Partition-pruned merge: the scale-correct parquet mutation store.
+    """Apply one changelog batch to the bucketed merge store at
+    ``target_path``: a merge-on-read table (``streaming/mor.py``) whose
+    base is hash-bucketed on the merge key, ``{target}/__bucket=k/``, one
+    file per bucket.
 
-    The table is laid out hash-bucketed on the merge key
-    (``{target}/__bucket=k/``, one file per bucket). A micro-batch touches
-    only the buckets its keys hash into, so per batch
-    :func:`swap_partitions` reads ONLY those partitions, this function
-    applies the changelog to that slice, and the merged slice is written
-    once and each touched bucket directory swapped in by rename. A missing
-    target bootstraps from the batch itself (its row-image columns). I/O
-    per batch is O(touched buckets), not O(table) — the plain-parquet
-    equivalent of a lakehouse ``MERGE INTO``; with Delta/Iceberg this whole
-    function collapses into their merge statement behind the same call
-    signature.
+    A missing target bootstraps from the batch itself (its row-image
+    columns): :func:`...streaming.mor.mor_init` stamps ``_mor.json``
+    (key, bucket count, schema) and the base is written once through
+    :func:`swap_partitions`. After that a batch reads no store data: it
+    takes the latest event per key (the :func:`apply_changelog`
+    semantics) and appends them as one delta file, plus one tombstone
+    file of every batch key, at a sequence of its own; every 16th batch
+    folds the deltas into a new base version. I/O per batch is O(batch).
+    A store that holds no row and no delta (its first batch deleted
+    everything) bootstraps again from the next batch.
+
+    ``evolve=True`` aligns the batch with the store as
+    :func:`evolve_target_schema` does. A column new to the store first
+    folds the store into a new base version that has it (typed NULLs on
+    older rows): O(table), once per upstream ``ADD COLUMN``.
+
+    Read the store only with :func:`read_bucketed_store`: the root's
+    bucket directories are the base alone.
     """
-    keys = list(key)
-    # Touched-bucket discovery must see the REAL delete keys (they live in
-    # the before image) or a delete's bucket is never read/rewritten.
-    batch_df = rekey_deletes(batch_df, keys, op_col)
-    bucket_expr = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets))
+    _merge_changelog(spark, target_path, batch_df, list(key), num_buckets, seq_col, op_col, evolve)
 
-    def merged_buckets(target: DataFrame | None) -> DataFrame:
-        if target is None:
-            meta = {op_col, seq_col, "operation", "source_ts_ms", "ts_ms"}
-            cols = [c for c in batch_df.columns if c not in meta and not c.startswith("before_")]
-            target = spark.createDataFrame([], batch_df.select(*cols).schema)
-        else:
-            target = target.drop(BUCKET_COL)
-        events = batch_df
-        if evolve:
-            target, events = evolve_target_schema(target, events, op_col=op_col)
-        merged = apply_changelog(target, events, key=keys, seq_col=seq_col, op_col=op_col)
-        return merged.withColumn(BUCKET_COL, bucket_expr)
 
-    swap_partitions(spark, target_path, BUCKET_COL, batch_df.select(bucket_expr), merged_buckets)
+#: The changelog store's table in its ``_mor.json``. Its first base is the
+#: store root itself; a compaction moves it to ``{path}/changelog__v<k>/``.
+CHANGELOG_TABLE = "changelog"
+
+
+def _merge_changelog(
+    spark, target_path, batch_df, keys, num_buckets, seq_col, op_col, evolve,
+    batch_id=None, expect_epoch=None,
+) -> int | None:
+    """One batch into the changelog store; returns the writer epoch the
+    apply claimed (None for a bootstrap), for ``expect_epoch`` next time."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from siddhi_io_cdc_spark.streaming import mor
+
+    events = rekey_deletes(batch_df, keys, op_col)
+    meta = mor._read_mor(spark, target_path) if mor.is_mor(spark, target_path) else None
+    if meta is None:
+        _check_store_layout(spark, target_path, "bucketed")
+        skip = {op_col, seq_col, "operation", "source_ts_ms", "ts_ms"}
+        fields = [f for f in events.schema if f.name not in skip and not f.name.startswith("before_")]
+    else:
+        spec = meta["tables"][CHANGELOG_TABLE]
+        _check_bucket_count(spec, target_path, num_buckets)
+        fields = [f for f in StructType.fromJson(spec["schema"]) if f.name != BUCKET_COL]
+    schema = StructType([StructField(f.name, f.dataType) for f in fields])
+    if evolve:
+        target, events = evolve_target_schema(spark.createDataFrame([], schema), events, op_col)
+        schema = StructType([StructField(f.name, f.dataType) for f in target.schema])
+    stored = StructType([*schema, StructField(BUCKET_COL, IntegerType())])
+    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)).cast("int")
+    latest = _latest_per_key(events, keys, schema.fieldNames(), seq_col, op_col).select(
+        "__op", *[F.col(f.name).cast(f.dataType) for f in schema]
+    )
+    upserts = latest.where(F.col("__op") != "delete").drop("__op").withColumn(BUCKET_COL, bucket)
+    if meta is None or (spec["empty"] and not meta["high_water"]):
+        spec = {
+            "id_col": keys, "part_col": BUCKET_COL, "base_dir": "", "delta_partitioned": False,
+            "num_buckets": num_buckets, "schema": stored.jsonValue(), "empty": True,
+        }
+        mor.mor_init(spark, target_path, {CHANGELOG_TABLE: spec})
+        # Every bucket is touched, so a base that a crashed bootstrap left
+        # behind is replaced whole.
+        every_bucket = spark.range(num_buckets).select(F.col("id").cast("int"))
+        if swap_partitions(spark, target_path, BUCKET_COL, every_bucket, lambda _: upserts):
+            meta = mor._read_mor(spark, target_path)
+            meta["tables"][CHANGELOG_TABLE]["empty"] = False
+            mor._write_mor(spark, target_path, meta)
+        return None
+    seq, epoch = mor.mor_begin_apply(spark, target_path, batch_id, expect_epoch=expect_epoch)
+    if len(schema) > len(fields):  # evolve added a column
+        mor._compact(spark, target_path, epoch, {CHANGELOG_TABLE: stored})
+    latest.persist()  # the delta and the tombstones: one pass over the batch
+    try:
+        mor.mor_append(spark, target_path, CHANGELOG_TABLE, upserts, latest.select(*keys), seq, epoch=epoch)
+    finally:
+        latest.unpersist()
+    mor.maybe_autocompact(spark, target_path, epoch=epoch)
+    return epoch
 
 
 def read_bucketed_store(spark, target_path: str) -> DataFrame:
-    """Read a bucketed merge store with the UNION schema.
+    """The live rows of a bucketed merge store: its base, plus the deltas
+    appended since the last compaction, minus the rows their tombstones
+    shadow (:func:`...streaming.mor.mor_live`), read with the store's
+    recorded schema (so no footer is opened to infer one). This is the
+    only correct read of the store."""
+    from siddhi_io_cdc_spark.streaming.mor import MOR_META, is_mor, mor_live
 
-    Required after additive evolution: buckets untouched since the new
-    column appeared lack it in their parquet footers, and the default
-    single-footer schema sample would silently drop the column for every
-    row. ``mergeSchema`` reads one footer per file — cheap relative to any
-    scan — and yields NULLs for pre-evolution rows.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(target_path).drop(BUCKET_COL)
+    if not is_mor(spark, target_path):
+        raise ValueError(f"no bucketed merge store at {target_path!r} (no {MOR_META})")
+    return mor_live(spark, target_path, CHANGELOG_TABLE).drop(BUCKET_COL)
 
 
 def merge_into_delta(
@@ -405,50 +469,54 @@ def merge_into_delta(
     )
 
 
-def _detect_store_layout(target_path: str) -> str | None:
-    """Which merge-store layout lives at ``target_path``: 'bucketed',
-    'delta', 'flat' (a plain parquet directory, which no writer here
-    produces), or None for absent/empty. Layouts are not interchangeable on
-    disk, so writers must refuse to write into another one."""
-    if not os.path.isdir(target_path):
+def _detect_store_layout(spark, target_path: str) -> str | None:
+    """Which merge-store layout lives at ``target_path``: 'bucketed' (a
+    ``_mor.json`` pointer), 'delta', 'copy-on-write bucketed' (bucket
+    directories without a pointer: a store written before the bucketed
+    store became merge-on-read), 'flat' (a plain parquet directory, which
+    no writer here produces), or None for absent/empty. Layouts are not
+    interchangeable on disk, so writers must refuse to write into another
+    one. Listed through the Hadoop FileSystem, so any URI scheme works."""
+    from siddhi_io_cdc_spark.streaming.mor import MOR_META
+
+    fs, root, _ = _fs(spark, target_path)
+    if not fs.exists(root):
         return None
-    entries = os.listdir(target_path)
+    entries = {st.getPath().getName() for st in fs.listStatus(root)}
     if "_delta_log" in entries:
         return "delta"
-    if any(e.startswith(BUCKET_COL + "=") for e in entries):
+    if entries & {MOR_META, MOR_META + ".tmp"}:
         return "bucketed"
+    if any(e.startswith(BUCKET_COL + "=") for e in entries):
+        return "copy-on-write bucketed"
     if any(e.endswith(".parquet") for e in entries):
         return "flat"
     return None
 
 
-def _check_store_layout(target_path: str, layout: str) -> None:
-    existing = _detect_store_layout(target_path)
+def _check_store_layout(spark, target_path: str, layout: str) -> None:
+    existing = _detect_store_layout(spark, target_path)
     if existing is not None and existing != layout:
         raise ValueError(
             f"merge store at {target_path!r} already uses the {existing!r} "
             f"layout; refusing to write {layout!r} into it — the layouts "
             f"are not interchangeable on disk. Open the store with the "
             f"layout it was written in, or point the stream at a new "
-            f"target_path."
+            f"target_path (a copy-on-write bucketed store has no writer "
+            f"any more: rebuild it there)."
         )
 
 
-def _check_bucket_count(target_path: str, num_buckets: int) -> None:
-    """Refuse a ``num_buckets`` smaller than the bucketed store's: a key
-    lives in bucket ``xxhash64(key) % num_buckets``, so under a smaller
-    modulus an update lands beside the key's live row instead of replacing
-    it."""
-    if not os.path.isdir(target_path):
-        return
-    prefix = BUCKET_COL + "="
-    present = [int(e[len(prefix):]) for e in os.listdir(target_path) if e.startswith(prefix)]
-    if present and max(present) >= num_buckets:
+def _check_bucket_count(spec: dict, target_path: str, num_buckets: int) -> None:
+    """Refuse a ``num_buckets`` other than the one the store recorded at
+    creation: a key lives in bucket ``xxhash64(key) % num_buckets``, so a
+    compaction under another modulus would scatter the store's buckets."""
+    if spec["num_buckets"] != num_buckets:
         raise ValueError(
-            f"bucketed merge store at {target_path!r} holds {prefix}{max(present)}, "
-            f"so it was written with more than num_buckets={num_buckets} buckets; "
-            f"merging with a different bucket count would duplicate keys. Pass the "
-            f"num_buckets the store was created with."
+            f"bucketed merge store at {target_path!r} was created with "
+            f"num_buckets={spec['num_buckets']}; merging with "
+            f"num_buckets={num_buckets} is refused. Pass the num_buckets "
+            f"the store was created with."
         )
 
 
@@ -464,25 +532,26 @@ def foreach_batch_merge(
     """``writeStream.foreachBatch`` adapter for the merge store backends.
 
     Default ``layout="bucketed"`` routes to
-    :func:`merge_into_bucketed_parquet` — the plain-parquet store whose
-    per-batch I/O is O(touched buckets); read it back with
-    :func:`read_bucketed_store`. ``layout="delta"`` routes to
-    :func:`merge_into_delta` (transactional ``MERGE INTO``; needs
-    delta-spark). Any other layout raises ``ValueError``. Both merges are
-    keyed on the latest event per key, so a replayed batch converges on
-    the same store. Layouts are not interchangeable on disk: an existing
-    store in another layout, a plain parquet directory included, is
-    refused with ``ValueError`` when the adapter is built.
+    :func:`merge_into_bucketed_parquet`, the merge-on-read parquet store
+    whose per-batch I/O is O(batch); read it back with
+    :func:`read_bucketed_store` only. Each batch is appended at the
+    sequence ``_mor.json`` records for the engine's batch id, so a
+    replayed batch overwrites its own delta, and the writer epoch the
+    previous batch claimed fences a second maintainer
+    (:class:`...streaming.mor.MorWriterFenced`). ``layout="delta"`` routes
+    to :func:`merge_into_delta` (transactional ``MERGE INTO``; needs
+    delta-spark). Any other layout raises ``ValueError``. Layouts are not
+    interchangeable on disk: an existing store in another layout, a plain
+    parquet directory or a bucketed store written before the store became
+    merge-on-read included, is refused with ``ValueError`` when the
+    adapter is built.
 
-    A bucketed store must be merged with the ``num_buckets`` it was created
-    with. A smaller value is refused with ``ValueError`` when the adapter is
-    built (the store holds a bucket at or above it). A larger value is not
-    detected: the store records no bucket count, and one whose high buckets
-    are all empty looks the same as a smaller store.
+    A bucketed store records the ``num_buckets`` it was created with; any
+    other value is refused with ``ValueError`` when the adapter is built.
     """
     if layout not in ("bucketed", "delta"):
         raise ValueError(f"layout must be 'bucketed' or 'delta', got {layout!r}")
-    _check_store_layout(target_path, layout)
+    _check_store_layout(spark, target_path, layout)
     if layout == "delta":
 
         def _apply_delta(batch_df: DataFrame, batch_id: int) -> None:
@@ -491,12 +560,17 @@ def foreach_batch_merge(
             )
 
         return _apply_delta
-    _check_bucket_count(target_path, num_buckets)
+    from siddhi_io_cdc_spark.streaming.mor import _read_mor, is_mor
+
+    if is_mor(spark, target_path):
+        spec = _read_mor(spark, target_path)["tables"][CHANGELOG_TABLE]
+        _check_bucket_count(spec, target_path, num_buckets)
+    state = {"epoch": None}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        merge_into_bucketed_parquet(
-            spark, target_path, batch_df, key=key, num_buckets=num_buckets,
-            seq_col=seq_col, op_col=op_col,
+        state["epoch"] = _merge_changelog(
+            spark, target_path, batch_df, list(key), num_buckets, seq_col, op_col,
+            evolve=False, batch_id=batch_id, expect_epoch=state["epoch"],
         )
 
     return _apply

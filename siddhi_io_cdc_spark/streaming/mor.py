@@ -1,4 +1,5 @@
-"""Merge-on-read (MOR) state layout for the CDC-maintained indexes.
+"""Merge-on-read (MOR) state layout for the CDC-maintained indexes and
+the bucketed changelog merge store (``operators/mutate.py``).
 
 Why this exists — the O(batch) bound the appliers claim. The original
 copy-on-write (COW) layout rewrites every *touched* hash-bucket partition
@@ -15,11 +16,19 @@ MOR makes the apply path O(batch) by construction, the same way Delta
 Lake / Iceberg / Hudi merge-on-read tables do:
 
 - **apply** appends two bounded artifacts and never reads base state:
-  ``_delta/<table>/__seq=<k>/`` (the batch's new rows, partitioned by the
-  table's hash bucket so probes still prune) and
+  ``_delta/<table>/__seq=<k>/`` (the batch's new rows) and
   ``_tomb/<table>/__seq=<k>/`` (the batch's key ids — every pre-batch row
   of a batch key is shadowed, covering update-moves, deletes, and
-  intra-batch chains without needing any before-image bucket math).
+  intra-batch chains without needing any before-image bucket math). The
+  delta layout is fixed per table when :func:`mor_init` records it: the
+  index tables partition each delta by their cell / hash bucket, so a
+  probe's partition predicate prunes the deltas as it prunes the base;
+  the changelog store's probes are whole-table reads, and its batch keys
+  spread over every bucket, so a partitioned delta would be one small
+  file per bucket per batch — it writes each delta unpartitioned
+  instead (one file, the bucket an ordinary column). The minor fold
+  writes its delta in the same layout. Keys may be composite
+  (``id_col`` a list).
 - **read** reconstructs the live view: ``base ∪ deltas`` anti-shadowed by
   tombstones — a row written at sequence ``s`` survives iff no tombstone
   for its id carries a sequence ``> s``. One narrow join against the
@@ -137,6 +146,7 @@ import json
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from siddhi_io_cdc_spark.functions.similarity import (
     _hadoop_read_text,
@@ -234,6 +244,45 @@ def is_mor(spark, root: str) -> bool:
     return _hadoop_exists(spark, base) or _hadoop_exists(spark, base + ".tmp")
 
 
+def _id_cols(spec: dict) -> list[str]:
+    ids = spec["id_col"]
+    return [ids] if isinstance(ids, str) else list(ids)
+
+
+def _reader(spark, spec: dict, cols=None, seq=True):
+    """A parquet reader for a table's delta or tombstone area: with its
+    recorded ``schema`` (only ``cols`` of it, plus ``__seq``) when it has
+    one, else inferring one. ``seq=False`` reads a base."""
+    if spec.get("schema") is None:
+        return spark.read
+    schema = StructType.fromJson(spec["schema"])
+    fields = schema.fields if cols is None else [schema[c] for c in cols]
+    if seq:
+        fields = [*fields, StructField(SEQ_COL, LongType())]
+    return spark.read.schema(StructType(fields))
+
+
+def _read_base(spark, root: str, spec: dict) -> DataFrame:
+    base = root.rstrip("/")
+    if spec["base_dir"]:
+        return _reader(spark, spec, seq=False).parquet(base + "/" + spec["base_dir"])
+    # A base at the root itself: read its partition dirs only, since the
+    # next base version (or a crashed compaction's orphan) sits beside them.
+    part = spec["part_col"] + "="
+    dirs = [f"{base}/{d}" for d in _hadoop_list_dirs(spark, base) if d.startswith(part)]
+    return _reader(spark, spec, seq=False).option("basePath", base).parquet(*dirs)
+
+
+def _write_delta(spec: dict, rows: DataFrame, path: str) -> None:
+    """Write one delta (or fold) directory in the table's delta layout. An
+    unpartitioned one goes through a ``rebalance``: AQE sizes those
+    partitions by bytes, so a batch-sized delta is one file."""
+    if spec.get("delta_partitioned", True):
+        rows.write.mode("overwrite").partitionBy(spec["part_col"]).parquet(path)
+    else:
+        rows.hint("rebalance").write.mode("overwrite").parquet(path)
+
+
 def _has_parquet(spark, path: str) -> bool:
     """True if any .parquet leaf exists under ``path`` (an all-empty delta
     area would otherwise fail schema inference)."""
@@ -256,8 +305,17 @@ def mor_init(
     retain_cycles: int = 1,
 ) -> None:
     """Stamp ``root`` as a MOR state. ``tables`` maps table name ->
-    ``{"id_col": ..., "part_col": ...}``; the base directory starts as the
-    table name itself and moves to ``<table>__v<k>`` on compaction.
+    ``{"id_col": ..., "part_col": ...}``; ``id_col`` is one column or a
+    list of them (a composite key). The base directory starts as the
+    table name itself, or as ``base_dir`` if the spec names one (``""``
+    is the root), and moves to ``<table>__v<k>`` on compaction.
+
+    Optional, fixed per table at creation: ``delta_partitioned`` (default
+    True) partitions each delta by ``part_col``, as the index tables need
+    for pruned probes; False writes each delta as one unpartitioned file
+    set with ``part_col`` an ordinary column. ``schema`` (a
+    ``StructType.jsonValue()`` of the live columns, ``part_col`` included)
+    makes every read use it instead of inferring one from a footer.
 
     ``compact_every`` triggers a MAJOR compaction every that many applied
     batches (counted by ``batches_since_compact``, reset at each major).
@@ -277,7 +335,8 @@ def mor_init(
         raise ValueError(f"retain_cycles must be >= 1, got {retain_cycles}")
     meta = {
         "tables": {
-            t: {**spec, "base_dir": t} for t, spec in tables.items()
+            t: {"delta_partitioned": True, "base_dir": t, **spec}
+            for t, spec in tables.items()
         },
         "compacted_through": 0,
         "base_version": 0,
@@ -518,9 +577,11 @@ def mor_append(
 ) -> None:
     """Append one batch's rows + tombstones for ``table`` at ``seq``.
 
-    ``rows`` must carry the table's ``part_col``; ``tomb_ids`` is the
-    (deduped) id column only. Both writes overwrite their ``__seq=<k>``
-    directory, so replaying a batch id is byte-idempotent. O(batch) I/O:
+    ``rows`` must carry the table's ``part_col``; ``tomb_ids`` carries the
+    id column(s). Rows are written in the table's delta layout (see
+    :func:`mor_init`), the tombstones as one file per batch. Both writes
+    overwrite their ``__seq=<k>`` directory, so replaying a batch id is
+    byte-idempotent. O(batch) I/O:
     nothing here reads base state. With ``epoch`` (from
     :func:`mor_begin_apply`) the append re-validates writership first
     and raises :class:`MorWriterFenced` if another writer claimed the
@@ -532,8 +593,9 @@ def mor_append(
     base = root.rstrip("/")
     dpath = base + f"/_delta/{table}/{SEQ_COL}={seq}"
     tpath = base + f"/_tomb/{table}/{SEQ_COL}={seq}"
-    rows.write.mode("overwrite").partitionBy(spec["part_col"]).parquet(dpath)
-    tomb_ids.select(spec["id_col"]).distinct().write.mode("overwrite").parquet(tpath)
+    _write_delta(spec, rows, dpath)
+    # a repeated id only repeats a tombstone; a rebalance makes it one file
+    tomb_ids.select(*_id_cols(spec)).hint("rebalance").write.mode("overwrite").parquet(tpath)
     if extra_json:
         _hadoop_write_text(spark, dpath + "/_extra.json", json.dumps(extra_json))
 
@@ -559,26 +621,23 @@ def mor_live(spark, root: str, table: str) -> DataFrame:
     their sequence, so later tombstones shadow them and compaction-time
     rows never re-shadow themselves.
 
-    Predicates on the table's ``part_col`` prune both the base partitions
-    and each delta's partitions (the delta is partitioned by
-    ``__seq/part_col``); the tombstone join is against a table bounded by
-    the ids changed since the last compaction — small, and AQE broadcasts
-    it.
+    Predicates on the table's ``part_col`` prune the base partitions and,
+    for a partitioned delta layout, each delta's partitions (the delta is
+    partitioned by ``__seq/part_col``); the tombstone join is against a
+    table bounded by the ids changed since the last compaction — small,
+    and AQE broadcasts it. A table with a recorded ``schema`` is read with
+    it, so no footer is opened to infer one.
     """
     meta = _read_mor(spark, root)
     spec = meta["tables"][table]
-    base_dir = root.rstrip("/") + "/" + spec["base_dir"]
     ct = meta["compacted_through"]
     drop = sorted(_drop_seqs(meta))
-    idc = spec["id_col"]
-
-    rows = spark.read.parquet(base_dir).withColumn(
-        SEQ_COL, F.lit(ct).cast("long")
-    )
+    ids = _id_cols(spec)
+    rows = _read_base(spark, root, spec).withColumn(SEQ_COL, F.lit(ct).cast("long"))
     delta_root = root.rstrip("/") + f"/_delta/{table}"
     if _has_parquet(spark, delta_root):
         delta = (
-            spark.read.parquet(delta_root)
+            _reader(spark, spec).parquet(delta_root)
             .where(F.col(SEQ_COL) > ct)
             .withColumn(SEQ_COL, F.col(SEQ_COL).cast("long"))
         )
@@ -590,9 +649,9 @@ def mor_live(spark, root: str, table: str) -> DataFrame:
         # order can differ between base and partition-discovered delta.
         # MOR tables are FIXED-SCHEMA: a delta whose column set drifted
         # from the base (e.g. an applier evolved its projection) must fail
-        # loudly, not silently truncate the new column. Additive evolution,
-        # if ever needed, belongs at compaction: fold to the new schema in
-        # a fresh base version, then re-init deltas — not in the live view.
+        # loudly, not silently truncate the new column. Additive evolution
+        # belongs at compaction (``_compact(schemas=...)``): fold to the
+        # new schema in a fresh base version — not in the live view.
         if set(delta.columns) != set(rows.columns):
             extra = sorted(set(delta.columns) - set(rows.columns))
             missing = sorted(set(rows.columns) - set(delta.columns))
@@ -607,14 +666,14 @@ def mor_live(spark, root: str, table: str) -> DataFrame:
 
     tomb_root = root.rstrip("/") + f"/_tomb/{table}"
     if _has_parquet(spark, tomb_root):
-        tomb = spark.read.parquet(tomb_root).where(F.col(SEQ_COL) > ct)
+        tomb = _reader(spark, spec, ids).parquet(tomb_root).where(F.col(SEQ_COL) > ct)
         if drop:
             tomb = tomb.where(~F.col(SEQ_COL).isin(drop))
-        tmax = tomb.groupBy(idc).agg(
+        tmax = tomb.groupBy(*ids).agg(
             F.max(SEQ_COL).cast("long").alias("__tmax")
         )
         rows = (
-            rows.join(tmax, idc, "left")
+            rows.join(tmax, ids, "left")
             .where(F.col("__tmax").isNull() | (F.col("__tmax") <= F.col(SEQ_COL)))
             .drop("__tmax")
         )
@@ -624,7 +683,11 @@ def mor_live(spark, root: str, table: str) -> DataFrame:
 def mor_compact(spark, root: str, epoch: int | None = None) -> bool:
     """Fold pending deltas into fresh versioned base directories and commit
     via the ``_mor.json`` pointer swap. Returns True if anything was
-    compacted. Crash-safe: before the pointer write the old view is fully
+    compacted. Each new base is written under a ``rebalance`` hint on the
+    table's ``part_col``, so each base partition is one file (until it
+    passes AQE's advisory partition size).
+
+    Crash-safe: before the pointer write the old view is fully
     intact (new dirs are orphans a later pass deletes); after it, new
     readers ignore the superseded dirs, whose deletion is deferred
     ``retain_cycles`` compaction/fold cycles (one ``gc`` generation per
@@ -637,13 +700,23 @@ def mor_compact(spark, root: str, epoch: int | None = None) -> bool:
     ``epoch`` (the maintainer's own auto-compaction) it validates the
     token, and re-validates right before the pointer swap so a takeover
     mid-fold aborts before committing."""
+    return _compact(spark, root, epoch, {})
+
+
+def _compact(spark, root: str, epoch: int | None, schemas: dict[str, StructType]) -> bool:
+    """:func:`mor_compact`, plus additive evolution: ``schemas`` maps a
+    table with a recorded ``schema`` to a wider one (its recorded columns
+    first). The fold writes the new columns as typed NULLs, records the
+    wider schema in the same pointer commit, and runs even with no
+    pending delta."""
     if epoch is None:
         epoch = mor_take_writer(spark, root)
     meta = _read_mor(spark, root)
     _check_epoch(meta, epoch, "mor_compact")
     pend = mor_pending_seqs(spark, root)
-    if not pend:
+    if not pend and not schemas:
         return False
+    horizon = pend[-1] if pend else int(meta["compacted_through"])
     base = root.rstrip("/")
     # age the retained-GC generations: delete every generation past the
     # retention depth (its readers have had retain_cycles full cycles to
@@ -656,10 +729,18 @@ def mor_compact(spark, root: str, epoch: int | None = None) -> bool:
     new_meta = json.loads(json.dumps(meta))  # deep copy
     for t, spec in meta["tables"].items():
         live = mor_live(spark, root, t)
+        if t in schemas:
+            have = set(live.columns)
+            live = live.select(*[
+                F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in schemas[t].fields
+            ])
+            new_meta["tables"][t]["schema"] = schemas[t].jsonValue()
         new_dir = f"{t}__v{new_ver}"
         # GC a stale same-name orphan from a crashed earlier attempt
         _hadoop_delete(spark, base + "/" + new_dir)
-        live.write.partitionBy(spec["part_col"]).parquet(base + "/" + new_dir)
+        part = spec["part_col"]
+        live.hint("rebalance", part).write.partitionBy(part).parquet(base + "/" + new_dir)
         if not _has_parquet(spark, base + "/" + new_dir):
             # the table emptied out entirely: a partitioned write of an
             # empty frame leaves no data files, and a later read would
@@ -669,17 +750,20 @@ def mor_compact(spark, root: str, epoch: int | None = None) -> bool:
             live.limit(0).coalesce(1).write.mode("overwrite").parquet(
                 base + "/" + new_dir
             )
-        old_dirs.append(spec["base_dir"])
+        if spec["base_dir"]:
+            old_dirs.append(spec["base_dir"])
+        else:  # a base at the root itself: its garbage is its partitions
+            old_dirs += [d for d in _hadoop_list_dirs(spark, base) if d.startswith(part + "=")]
         new_meta["tables"][t]["base_dir"] = new_dir
     new_meta["base_version"] = new_ver
-    new_meta["compacted_through"] = pend[-1]
+    new_meta["compacted_through"] = horizon
     # batch_seqs entries at or below the new horizon can never be
     # replayed into the live view again — prune so the map stays bounded
     # by compact_every
     new_meta["batch_seqs"] = {
         k: s
         for k, s in new_meta.get("batch_seqs", {}).items()
-        if int(s) > pend[-1]
+        if int(s) > horizon
     }
     # a COMMITTED fold is fully absorbed by the major compaction (its dir
     # is in pend, its covered dirs sort <= the new horizon for the sweep);
@@ -714,7 +798,7 @@ def mor_compact(spark, root: str, epoch: int | None = None) -> bool:
         for area in ("_delta", "_tomb"):
             for d in _hadoop_list_dirs(spark, base + f"/{area}/{t}"):
                 if d.startswith(SEQ_COL + "="):
-                    if int(d.split("=", 1)[1]) <= pend[-1]:
+                    if int(d.split("=", 1)[1]) <= horizon:
                         deferred.append(f"{area}/{t}/{d}")
     new_meta["gc"] = gens + [sorted(set(deferred))]
     new_meta.pop("gc_deferred", None)  # upgraded to the generation list
@@ -803,26 +887,26 @@ def mor_minor_compact(
     meta.pop("gc_deferred", None)  # upgraded to the generation list
     _write_mor(spark, root, meta)  # declare: readers ignore seq f
     for t, spec in meta["tables"].items():
-        idc = spec["id_col"]
+        ids = _id_cols(spec)
         delta_root = base + f"/_delta/{t}"
         tomb_root = base + f"/_tomb/{t}"
         surv = None
         if _has_parquet(spark, delta_root):
             rows = (
-                spark.read.parquet(delta_root)
+                _reader(spark, spec).parquet(delta_root)
                 .where(F.col(SEQ_COL).isin(pend))
                 .withColumn(SEQ_COL, F.col(SEQ_COL).cast("long"))
             )
             surv = rows
             if _has_parquet(spark, tomb_root):
                 tmax = (
-                    spark.read.parquet(tomb_root)
+                    _reader(spark, spec, ids).parquet(tomb_root)
                     .where(F.col(SEQ_COL).isin(pend))
-                    .groupBy(idc)
+                    .groupBy(*ids)
                     .agg(F.max(SEQ_COL).cast("long").alias("__tmax"))
                 )
                 surv = (
-                    rows.join(tmax, idc, "left")
+                    rows.join(tmax, ids, "left")
                     .where(
                         F.col("__tmax").isNull()
                         | (F.col("__tmax") <= F.col(SEQ_COL))
@@ -832,14 +916,12 @@ def mor_minor_compact(
             out_cols = [c for c in rows.columns if c != SEQ_COL]
             # fold dir was GC'd above if it's a crashed attempt's name; an
             # overwrite keeps this idempotent either way
-            surv.select(*out_cols).write.mode("overwrite").partitionBy(
-                spec["part_col"]
-            ).parquet(delta_root + f"/{SEQ_COL}={f}")
+            _write_delta(spec, surv.select(*out_cols), delta_root + f"/{SEQ_COL}={f}")
         if _has_parquet(spark, tomb_root):
             (
-                spark.read.parquet(tomb_root)
+                _reader(spark, spec, ids).parquet(tomb_root)
                 .where(F.col(SEQ_COL).isin(pend))
-                .select(idc)
+                .select(*ids)
                 .distinct()
                 .write.mode("overwrite")
                 .parquet(tomb_root + f"/{SEQ_COL}={f}")

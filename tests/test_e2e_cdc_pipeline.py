@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from siddhi_io_cdc_spark.operators.flatten import flatten
-from siddhi_io_cdc_spark.operators.mutate import foreach_batch_merge
+from siddhi_io_cdc_spark.operators.mutate import foreach_batch_merge, read_bucketed_store
 from siddhi_io_cdc_spark.plans.rollup import rollup_single_pass
 from siddhi_io_cdc_spark.sources.envelope import read_changelog_stream
 
@@ -66,20 +66,20 @@ def test_capture_shape_apply_aggregate(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        state = {r.k: r.v for r in spark.read.parquet(store).select("k", "v").collect()}
+        state = {r.k: r.v for r in read_bucketed_store(spark, store).select("k", "v").collect()}
         assert state == {1: 10.0, 2: 99.0, 4: 40.0, 5: 50.0, 6: 60.0}
 
         # batch 2: insert k=7, delete k=1 — the stream keeps applying
         _write_events(src, [_event("c", 7, 70.0, ts=20), _event("d", 1, None, ts=21, before={"k": 1, "v": 10.0})])
         q.processAllAvailable()
-        state = {r.k: r.v for r in spark.read.parquet(store).select("k", "v").collect()}
+        state = {r.k: r.v for r in read_bucketed_store(spark, store).select("k", "v").collect()}
         assert state == {2: 99.0, 4: 40.0, 5: 50.0, 6: 60.0, 7: 70.0}
     finally:
         q.stop()
 
     # aggregate the materialized store: rollup at widths 2 and 4 over k
     roll = rollup_single_pass(
-        spark.read.parquet(store).withColumn("one", F.lit("all")),
+        read_bucketed_store(spark, store).withColumn("one", F.lit("all")),
         time_col="k", keys=["one"], value_col="v", granularities=(2, 4),
     )
     got = {

@@ -526,6 +526,41 @@ def test_mor_compaction_of_fully_emptied_table(spark, tmp_path):
     assert got == want
 
 
+def test_mor_compact_writes_one_file_per_partition(spark, tmp_path):
+    """A major compaction writes each base partition as one file, also
+    with AQE's partition coalescing off: a plain partitioned write of the
+    live view (base scan ∪ delta scan) leaves a file per scan task per
+    partition."""
+    import glob
+    import os
+
+    from siddhi_io_cdc_spark.streaming.mor import mor_append, mor_begin_apply, mor_init
+
+    state = str(tmp_path / "mor")
+    schema = "id LONG, p INT, v STRING"
+    base = spark.createDataFrame([(i, i % 4, f"v{i}") for i in range(40)], schema)
+    base.repartition(1).write.partitionBy("p").parquet(state + "/t")
+    mor_init(spark, state, {"t": {"id_col": "id", "part_col": "p"}})
+    batch = spark.createDataFrame(
+        [(i, i % 4, f"w{i}") for i in range(0, 80, 3)], schema
+    ).repartition(4)
+    seq, epoch = mor_begin_apply(spark, state)
+    mor_append(spark, state, "t", batch, batch.select("id"), seq, epoch=epoch)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try:
+        assert mor_compact(spark, state)
+    finally:
+        spark.conf.set(key, "true")
+    parts = glob.glob(state + "/t__v1/p=*")
+    assert len(parts) == 4
+    for d in parts:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, os.listdir(d)
+    want = {i: f"v{i}" for i in range(40)}
+    want.update({i: f"w{i}" for i in range(0, 80, 3)})
+    assert {r.id: r.v for r in mor_live(spark, state, "t").collect()} == want
+
+
 def test_bm25_mor_stats_fold_crash_window(spark, tmp_path):
     """compact_bm25_index folds pending stats deltas into the cache BEFORE
     the pointer swap deletes the delta dirs. Simulate a crash between the

@@ -70,10 +70,11 @@ def test_apply_changelog_last_event_wins(spark):
 
 
 def test_bucketed_merge_rewrites_only_touched_partitions(spark, tmp_path):
+    """A merge into the bucketed store rewrites no base file: it appends
+    one delta file and one tombstone file, and the store reads back
+    merged."""
     import glob
     import time as _time
-
-    from siddhi_io_cdc_spark.operators.mutate import merge_into_bucketed_parquet
 
     target = os.path.join(str(tmp_path), "store")
     seed = spark.createDataFrame(
@@ -81,71 +82,67 @@ def test_bucketed_merge_rewrites_only_touched_partitions(spark, tmp_path):
         "id long, name string, operation string, ts_ms long",
     )
     merge_into_bucketed_parquet(spark, target, seed, key=["id"], num_buckets=8)
-    table = spark.read.parquet(target)
-    assert table.count() == 100
-    assert len(glob.glob(f"{target}/__bucket=*")) > 1
+    assert read_bucketed_store(spark, target).count() == 100
+    buckets = glob.glob(f"{target}/__bucket=*")
+    assert len(buckets) > 1
+    # The bootstrap writes each bucket once, under a rebalance on the
+    # bucket: one file per bucket, not one per writer task.
+    for d in buckets:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d
 
     before = {f: os.path.getmtime(f) for f in glob.glob(f"{target}/__bucket=*/*.parquet")}
     _time.sleep(0.05)
-
-    # One-key update touches exactly one bucket.
     batch = spark.createDataFrame(
-        [(7, "UPDATED", "update", 2)], "id long, name string, operation string, ts_ms long"
+        [(7, "UPDATED", "update", 2), (8, "", "delete", 2), (500, "new", "insert", 2)],
+        "id long, name string, operation string, ts_ms long",
     )
     merge_into_bucketed_parquet(spark, target, batch, key=["id"], num_buckets=8)
-    got = {r["id"]: r["name"] for r in spark.read.parquet(target).collect()}
-    assert got[7] == "UPDATED" and got[8] == "name8" and len(got) == 100
+    got = {r["id"]: r["name"] for r in read_bucketed_store(spark, target).collect()}
+    assert got[7] == "UPDATED" and 8 not in got and got[500] == "new" and len(got) == 100
 
-    after_files = glob.glob(f"{target}/__bucket=*/*.parquet")
-    changed_dirs = {
-        os.path.basename(os.path.dirname(f))
-        for f in after_files
-        if f not in before or os.path.getmtime(f) != before[f]
-    }
-    assert len(changed_dirs) == 1  # partition-pruned: one bucket rewritten
-    # Written once under a rebalance on the bucket: one file per bucket,
-    # not one per writer task per batch.
-    for d in glob.glob(f"{target}/__bucket=*"):
-        assert len(glob.glob(f"{d}/*.parquet")) == 1, d
+    after = {f: os.path.getmtime(f) for f in glob.glob(f"{target}/__bucket=*/*.parquet")}
+    assert after == before  # no base file rewritten
+    assert len(glob.glob(f"{target}/_delta/*/__seq=*/*.parquet")) == 1
+    assert len(glob.glob(f"{target}/_tomb/*/__seq=*/*.parquet")) == 1
 
 
 def test_bucketed_merge_recovers_interrupted_swap(spark, tmp_path):
     """A crash between the two renames of a bucket swap leaves the live
     bucket parked under ``_swap-*`` with nothing in its place; re-running
-    the batch must restore it first and converge on latest-op-per-key."""
+    the batch must restore it first and converge. Driven through the SCD2
+    history store, the bucketed store that still swaps partitions per
+    batch."""
     import glob
 
-    from siddhi_io_cdc_spark.operators.mutate import merge_into_bucketed_parquet
+    from siddhi_io_cdc_spark.operators.history import merge_history_into_parquet
 
-    target = os.path.join(str(tmp_path), "store3")
     schema = "id long, name string, operation string, ts_ms long"
-    seed = [(i, f"name{i}", "insert", 1) for i in range(40)]
-    merge_into_bucketed_parquet(spark, target, spark.createDataFrame(seed, schema),
-                                key=["id"], num_buckets=4)
+    seed = spark.createDataFrame([(i, f"name{i}", "insert", 1) for i in range(40)], schema)
     batch = spark.createDataFrame(
         [(i, f"new{i}", "update", 2) for i in range(0, 40, 3)]
         + [(i, "", "delete", 3) for i in range(1, 40, 5)]
         + [(100, "ins", "insert", 2)],
         schema,
     )
-    parked = sorted(glob.glob(f"{target}/__bucket=*"))[0]
-    os.makedirs(f"{target}/_swap-deadbeef")
-    os.rename(parked, f"{target}/_swap-deadbeef/{os.path.basename(parked)}")
+    crashed, clean = (os.path.join(str(tmp_path), n) for n in ("crashed", "clean"))
+    for target in (crashed, clean):
+        merge_history_into_parquet(spark, target, seed, key=["id"], num_buckets=4)
+    parked = sorted(glob.glob(f"{crashed}/__bucket=*"))[0]
+    os.makedirs(f"{crashed}/_swap-deadbeef")
+    os.rename(parked, f"{crashed}/_swap-deadbeef/{os.path.basename(parked)}")
 
-    merge_into_bucketed_parquet(spark, target, batch, key=["id"], num_buckets=4)
-    expected = {i: f"name{i}" for i in range(40)}
-    expected.update({i: f"new{i}" for i in range(0, 40, 3)})
-    for i in range(1, 40, 5):
-        expected.pop(i)
-    expected[100] = "ins"
-    got = {r["id"]: r["name"] for r in spark.read.parquet(target).collect()}
-    assert got == expected
-    assert not glob.glob(f"{target}/_swap-*")
+    for target in (crashed, clean):
+        merge_history_into_parquet(spark, target, batch, key=["id"], num_buckets=4)
+
+    def rows(p):
+        return {tuple(r) for r in spark.read.parquet(p).collect()}
+
+    assert rows(crashed) == rows(clean)
+    assert len({r[0] for r in rows(clean)}) == 41  # every key has history
+    assert not glob.glob(f"{crashed}/_swap-*")
 
 
 def test_bucketed_merge_delete_empties_bucket(spark, tmp_path):
-    from siddhi_io_cdc_spark.operators.mutate import merge_into_bucketed_parquet
-
     target = os.path.join(str(tmp_path), "store2")
     seed = spark.createDataFrame(
         [(1, "a", "insert", 1), (2, "b", "insert", 1)],
@@ -157,7 +154,7 @@ def test_bucketed_merge_delete_empties_bucket(spark, tmp_path):
         "id long, name string, operation string, ts_ms long",
     )
     merge_into_bucketed_parquet(spark, target, wipe, key=["id"], num_buckets=4)
-    assert spark.read.parquet(target).count() == 0
+    assert read_bucketed_store(spark, target).count() == 0
 
 
 def test_apply_changelog_deletes_keyed_from_before_image(spark):
@@ -269,12 +266,27 @@ def test_foreach_batch_merge_refuses_layout_interleave(spark, tmp_path):
     with pytest.raises(ValueError, match="layout must be 'bucketed' or 'delta'"):
         foreach_batch_merge(spark, str(tmp_path / "new_store"), key=["k"], layout="flat")
 
-    # A bucketed store opened with another layout.
+    # A bucketed store opened with another layout, by path and by URI.
     bucketed = str(tmp_path / "bucketed_store")
     apply_b = foreach_batch_merge(spark, bucketed, key=["k"], num_buckets=4)
     apply_b(batch, 0)
-    with pytest.raises(ValueError, match="already uses the 'bucketed' layout"):
-        foreach_batch_merge(spark, bucketed, key=["k"], layout="delta")
+    for path in (bucketed, "file://" + bucketed):
+        with pytest.raises(ValueError, match="already uses the 'bucketed' layout"):
+            foreach_batch_merge(spark, path, key=["k"], layout="delta")
+    # A copy-on-write bucketed store (bucket directories at the root and no
+    # _mor.json, the layout before the store became merge-on-read) is
+    # refused by every writer and by the reader; nothing migrates it.
+    legacy = str(tmp_path / "cow_store")
+    batch.drop("operation", "ts_ms").withColumn("__bucket", F.lit(0)).write.partitionBy(
+        "__bucket"
+    ).parquet(legacy)
+    for path in (legacy, "file://" + legacy):
+        with pytest.raises(ValueError, match="'copy-on-write bucketed' layout"):
+            foreach_batch_merge(spark, path, key=["k"], num_buckets=4)
+    with pytest.raises(ValueError, match="'copy-on-write bucketed' layout"):
+        merge_into_bucketed_parquet(spark, legacy, batch, key=["k"], num_buckets=4)
+    with pytest.raises(ValueError, match="no bucketed merge store"):
+        read_bucketed_store(spark, legacy)
 
 
 @pytest.mark.parametrize("store", ["changelog", "history", "rollup"])
@@ -329,8 +341,8 @@ def test_empty_first_batch_leaves_a_usable_store(spark, tmp_path, store):
 
 def test_foreach_batch_merge_refuses_fewer_buckets(spark, tmp_path):
     """A store bootstrapped with the default 64 buckets must not be merged
-    with num_buckets=8: under the smaller modulus updated keys land in other
-    buckets than their live rows and the store keeps both."""
+    with num_buckets=8, nor with 128: the store records its bucket count
+    and a key's bucket depends on it."""
     import pytest
 
     from siddhi_io_cdc_spark.operators.mutate import foreach_batch_merge
@@ -343,4 +355,27 @@ def test_foreach_batch_merge_refuses_fewer_buckets(spark, tmp_path):
     foreach_batch_merge(spark, store, key=["id"])(batch, 0)
     with pytest.raises(ValueError, match="num_buckets=8"):
         foreach_batch_merge(spark, store, key=["id"], num_buckets=8)
+    with pytest.raises(ValueError, match="num_buckets=128"):
+        foreach_batch_merge(spark, store, key=["id"], num_buckets=128)
     foreach_batch_merge(spark, store, key=["id"], num_buckets=64)
+
+
+def test_foreach_batch_merge_is_fenced_by_out_of_band_compaction(spark, tmp_path):
+    """The adapter threads each batch's writer epoch into the next batch:
+    a compaction run beside a live stream fences it loudly, and a
+    restarted adapter carries on from the compacted store."""
+    from siddhi_io_cdc_spark.operators.mutate import foreach_batch_merge
+    from siddhi_io_cdc_spark.streaming.mor import MorWriterFenced, mor_compact
+
+    store = str(tmp_path / "store")
+    schema = "id long, v string, ts_ms long, operation string"
+    merge = foreach_batch_merge(spark, store, key=["id"], num_buckets=4)
+    merge(spark.createDataFrame([(k, "a", 1, "insert") for k in range(6)], schema), 0)
+    merge(spark.createDataFrame([(1, "b", 2, "update")], schema), 1)
+    assert mor_compact(spark, store)
+    batch = spark.createDataFrame([(2, "", 3, "delete")], schema)
+    with pytest.raises(MorWriterFenced):
+        merge(batch, 2)
+    foreach_batch_merge(spark, store, key=["id"], num_buckets=4)(batch, 2)
+    got = {r.id: r.v for r in read_bucketed_store(spark, store).collect()}
+    assert got == {0: "a", 1: "b", 3: "a", 4: "a", 5: "a"}
