@@ -42,8 +42,10 @@ under the file's ``(size, mtime)`` signature, so a driver-side pass costs one
 listing of the zone plus the footers of new or changed files (a stat-less
 file's column is scanned once, not per trigger) — O(new files) per trigger,
 not O(zone). A file rewritten in place is re-read only if its size or mtime
-changes. The cache lives on the reader object Spark keeps across triggers; a
-restarted query starts with an empty cache and reads every footer once.
+changes; a file whose footer is not readable yet (still being written) counts
+as not landed until a later trigger reads it. The cache lives on the reader
+object Spark keeps across triggers; a restarted query starts with an empty
+cache and reads every footer once.
 
 The storage backend here is a parquet directory (what the test harness and a
 lakehouse landing zone use). A JDBC backend plugs into the same offset logic
@@ -234,9 +236,12 @@ class CDCPollStreamReader(DataSourceStreamReader):
     # -- storage access (driver side: polling column only) --------------------
 
     def _dataset(self):
+        """The landed files as one Arrow dataset (the table schema's source)."""
         import pyarrow.dataset as ds
 
-        return ds.dataset(self.path, format="parquet")
+        return ds.dataset(
+            list(self._zone_stats()), format="parquet", filesystem=self._filesystem()[0]
+        )
 
     def _filesystem(self):
         import pyarrow as pa
@@ -253,7 +258,11 @@ class CDCPollStreamReader(DataSourceStreamReader):
         footer is read only when the file is new or its ``(size, mtime)``
         changed since the previous call, and files that are gone drop out.
         The cache is per reader (created lazily, so readers built without
-        ``__init__`` work too), and Spark keeps the reader across triggers."""
+        ``__init__`` work too), and Spark keeps the reader across triggers.
+        A file whose footer cannot be read yet (listed while it is still
+        being written) has not landed: it is left out, and read again on
+        the next call."""
+        import pyarrow as pa
         import pyarrow.fs as pafs
 
         filesystem, root = self._filesystem()
@@ -270,7 +279,10 @@ class CDCPollStreamReader(DataSourceStreamReader):
             sig = (info.size, info.mtime_ns)
             st = old.get(info.path)
             if st is None or st.sig != sig:
-                st = _FileStats(sig, *_read_file_stats(filesystem, info.path, self.column))
+                try:
+                    st = _FileStats(sig, *_read_file_stats(filesystem, info.path, self.column))
+                except (pa.ArrowInvalid, OSError):
+                    continue
             cache[info.path] = st
         self._stats_cache = cache
         return cache
@@ -572,6 +584,42 @@ class CDCPollStreamReader(DataSourceStreamReader):
             for lo_i, hi_i in zip(los, his)
         ]
 
+    def _ordered_slices(self, low, high):
+        """Monotone key-range slices of (low, high] for ordered delivery."""
+        if (
+            isinstance(low, int)
+            and isinstance(high, int)
+            and low != EMPTY_SENTINEL
+            and high - low > self.num_partitions
+        ):
+            # Ordered delivery keeps KEY-RANGE slicing: partition ranges
+            # are monotone, so in-order partition consumers see globally
+            # ordered keys. The cost — each slice scans every fragment
+            # that may contain its range — is the price of the ordering
+            # guarantee; the default path never pays it.
+            span = high - low
+            step = span // self.num_partitions
+            parts, lo = [], low
+            for i in range(self.num_partitions):
+                hi = high if i == self.num_partitions - 1 else lo + step
+                parts.append(
+                    RangeScan(self.path, self.column, lo, hi, self.field_names, True)
+                )
+                lo = hi
+            return parts
+        # Ordered delivery outside the exact-int window (timestamp /
+        # decimal polling columns, and the startFrom=earliest catch-up
+        # whose low is the EMPTY sentinel): the fragment-group path
+        # would emit OVERLAPPING key ranges and silently break the
+        # documented global-order guarantee. Derive monotone boundaries
+        # from footer stats instead; when the key domain can't be split
+        # (e.g. string keys), fall back to ONE slice — slower, never
+        # wrong.
+        parts = self._ordered_key_slices(low, high)
+        if parts is not None:
+            return parts
+        return [RangeScan(self.path, self.column, low, high, self.field_names, True)]
+
     def partitions(self, start: dict, end: dict):
         # Learn the true start on checkpoint-replayed batches.
         self._prev = dict(end)
@@ -580,45 +628,23 @@ class CDCPollStreamReader(DataSourceStreamReader):
         empty = [RangeScan(self.path, self.column, None, None, self.field_names, self.ordered)]
         if high is None or high == low:
             return empty
-        if isinstance(low, int) and isinstance(high, int):
-            if high <= low and low != EMPTY_SENTINEL:
-                return empty
-            if (
-                self.ordered
-                and self.num_partitions > 1
-                and low != EMPTY_SENTINEL
-                and high - low > self.num_partitions
-            ):
-                # Ordered delivery keeps KEY-RANGE slicing: partition ranges
-                # are monotone, so in-order partition consumers see globally
-                # ordered keys. The cost — each slice scans every fragment
-                # that may contain its range — is the price of the ordering
-                # guarantee; the default path below never pays it.
-                span = high - low
-                step = span // self.num_partitions
-                parts, lo = [], low
-                for i in range(self.num_partitions):
-                    hi = high if i == self.num_partitions - 1 else lo + step
-                    parts.append(
-                        RangeScan(self.path, self.column, lo, hi, self.field_names, self.ordered)
-                    )
-                    lo = hi
-                return parts
+        if (
+            isinstance(low, int)
+            and isinstance(high, int)
+            and high <= low
+            and low != EMPTY_SENTINEL
+        ):
+            return empty
         if self.ordered and self.num_partitions > 1:
-            # Ordered delivery outside the exact-int window (timestamp /
-            # decimal polling columns, and the startFrom=earliest catch-up
-            # whose low is the EMPTY sentinel): the fragment-group path below
-            # would emit OVERLAPPING key ranges and silently break the
-            # documented global-order guarantee. Derive monotone boundaries
-            # from footer stats instead; when the key domain can't be split
-            # (e.g. string keys), fall back to ONE slice — slower, never
-            # wrong.
-            parts = self._ordered_key_slices(low, high)
-            if parts is not None:
-                return parts
-            return [
-                RangeScan(self.path, self.column, low, high, self.field_names, True)
-            ]
+            # Ordered slices scan the landed files only: a file still being
+            # written is left to a later trigger, as on the default path.
+            landed = list(self._zone_stats())
+            if not landed:
+                return empty
+            parts = self._ordered_slices(low, high)
+            for part in parts:
+                part.paths = landed
+            return parts
         # Default: STORAGE-NATURAL partitioning. One slice = one group of
         # parquet fragments, so a catch-up scan reads every byte exactly
         # once regardless of how keys cluster across files — key-range

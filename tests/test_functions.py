@@ -991,13 +991,13 @@ def test_fan_out_threshold_resolves_at_call_time(spark, tmp_path, monkeypatch):
 def test_fan_out_env_threshold_read_at_call_time(spark, monkeypatch, caplog):
     """SPARK_GRAFT_FANOUT_MIN_SLOT_KIB is read when fan_out is CALLED, so
     setting it after import takes effect; a malformed value falls back to
-    the 32 KiB default with a warning instead of raising."""
+    the default with a warning instead of raising."""
     import logging
 
     from siddhi_io_cdc_spark.util import fan_out
 
     parts = spark.sparkContext.defaultParallelism * 4
-    df = spark.range(2000)  # 16 KB estimate: below 32 KiB x parts, above 0
+    df = spark.range(2000)  # 16 KB estimate: below the default x parts, above 0
     assert df.rdd.getNumPartitions() < parts
 
     monkeypatch.setenv("SPARK_GRAFT_FANOUT_MIN_SLOT_KIB", "0")
@@ -1005,8 +1005,52 @@ def test_fan_out_env_threshold_read_at_call_time(spark, monkeypatch, caplog):
 
     monkeypatch.setenv("SPARK_GRAFT_FANOUT_MIN_SLOT_KIB", "64k")
     with caplog.at_level(logging.WARNING, logger="siddhi_io_cdc_spark.util"):
-        assert fan_out(df, num_partitions=parts) is df  # default 32 KiB
+        assert fan_out(df, num_partitions=parts) is df  # the default
     assert "SPARK_GRAFT_FANOUT_MIN_SLOT_KIB" in caplog.text
+
+
+def test_fan_out_gate_reads_footer_uncompressed_bytes(spark, tmp_path):
+    """The gate's basis for a parquet scan is the footer's uncompressed
+    bytes of the columns the scan reads: a float-array file and a text file
+    of similar in-flight size are measured alike, whatever their codec
+    (Catalyst's compressed estimate is ~7x under for text and ~1x for
+    float arrays)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from siddhi_io_cdc_spark.util import _footer_bytes, _parquet_scans, fan_out
+
+    n = 2000
+    ids = pa.array(range(n), pa.int64())
+    floats = np.random.default_rng(7).random((n, 32), dtype=np.float32)
+    tables = {
+        "vec": pa.table({"id": ids, "vec": pa.array(list(floats), pa.list_(pa.float32()))}),
+        "text": pa.table({"id": ids, "text": [f"lorem ipsum dolor {i} " * 6 for i in range(n)]}),
+    }
+    parts = 4
+    inflight = {}
+    for col, table in tables.items():
+        for codec in ("snappy", "none"):
+            path = str(tmp_path / f"{col}_{codec}.parquet")
+            pq.write_table(table, path, compression=codec)
+            md = pq.read_metadata(path)
+            want = sum(
+                md.row_group(g).column(i).total_uncompressed_size
+                for g in range(md.num_row_groups)
+                for i in range(md.num_columns)
+                if md.row_group(g).column(i).path_in_schema.split(".")[0] == col
+            )
+            df = spark.read.parquet(path).select(col)
+            assert df.rdd.getNumPartitions() < parts
+            assert _footer_bytes(_parquet_scans(df), 1 << 62) == want
+            # the gate widens at exactly that many bytes, and not above
+            assert fan_out(df, parts, want // parts).rdd.getNumPartitions() == parts
+            assert fan_out(df, parts, want // parts + 1) is df
+            inflight[col, codec] = want
+    for col in tables:
+        assert inflight[col, "snappy"] == inflight[col, "none"]
+    assert 0.5 < inflight["text", "none"] / inflight["vec", "none"] < 2
 
 
 def test_knn_join_exact_is_centroid_independent(spark, sf_dir):

@@ -694,6 +694,51 @@ def test_offset_cache_rereads_changed_and_drops_deleted_files(tmp_path, monkeypa
     assert other._current_max() == 7 and reader._current_max() == 5
 
 
+@pytest.mark.parametrize("ordered", [False, True])
+def test_file_still_being_written_is_not_landed_yet(tmp_path, ordered):
+    """A landing file listed while it is still being written (empty, then
+    without its footer) is skipped by the trigger instead of failing it,
+    on the default and on the ordered path; its rows flow on the trigger
+    after the write completes."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def parquet_bytes(ids):
+        buf = io.BytesIO()
+        pq.write_table(pa.table({"id": ids}), buf)
+        return buf.getvalue()
+
+    def land(name, data):
+        with open(f"{path}/{name}", "wb") as f:
+            f.write(data)
+
+    def trigger_rows():
+        end, parts = _trigger(reader)
+        rows = [v for part in parts for b in reader.read(part) for v in b.column(0).to_pylist()]
+        return end, sorted(rows)
+
+    path = str(tmp_path / "zone")
+    os.makedirs(path)
+    land("a.parquet", parquet_bytes([1, 2, 3]))
+    reader = _bare_reader(path, "id", ordered=ordered)
+    reader.initialOffset()
+    assert reader._prev == {"last": 3}
+
+    b, c = parquet_bytes([4, 5, 6]), parquet_bytes([7, 8, 9])
+    for partial in (b"", b[: len(b) // 2]):
+        land("b.parquet", partial)
+        assert trigger_rows() == ({"last": 3}, [])
+        assert [os.path.basename(p) for p in reader._stats_cache] == ["a.parquet"]
+
+    land("b.parquet", b)
+    land("c.parquet", c[: len(c) // 2])
+    assert trigger_rows() == ({"last": 6}, [4, 5, 6])
+    land("c.parquet", c)
+    assert trigger_rows() == ({"last": 9}, [7, 8, 9])
+
+
 def test_gap_scan_reads_only_overlapping_files(tmp_path, monkeypatch):
     """The gap-wait contiguity scan opens only files whose cached [min, max]
     can overlap the window, plus every stat-less file."""
