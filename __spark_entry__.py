@@ -438,8 +438,8 @@ def q_ivf_probe_maintained_mut(spark, sf_dir):
     by pytest parity, and llm_ivf_ann only checks the batch probe):
     build the cell-partitioned index from the full embeddings table, apply
     ONE changelog batch that negates every vec_id%7==0 vector (negation
-    moves the vector's cell — exercising the before-image cell discovery)
-    and deletes every vec_id%11==0 one (%7!=0, so each key carries exactly
+    moves the vector's cell — the tombstone must shadow the old row in its
+    old cell) and deletes every vec_id%11==0 one (%7!=0, so each key carries exactly
     one event), then probe nprobe=4 of nlist=8 cells. The oracle restates
     the probe machinery itself over the post-changelog corpus: centroid
     literals, argmax-dot cell assignment with lowest-index ties, the
@@ -485,19 +485,13 @@ def q_ivf_probe_maintained_mut(spark, sf_dir):
 
 
 def q_ivf_probe_mor(spark, sf_dir):
-    """The maintained IVF index under the MERGE-ON-READ layout (round-12:
-    the apply-curve measurement showed the copy-on-write touched-cell
-    rewrite growing with the corpus — BASELINE.md r12 — so the O(batch)
-    layout is the one that runs at 100 TB, and it needs its own oracle
-    row, not just pytest parity). Same post-changelog corpus as
-    llm_ivf_probe_maintained_mut (negate vec_id%7==0, delete vec_id%11==0
-    with %7!=0), so that row's probe-restatement oracle applies verbatim —
-    but driven through the MOR path end-to-end: the update batch carries
-    NO before images (tombstones shadow by id, the layout's structural
-    advantage), a COMPACTION folds it (pointer-swap commit), and the
-    delete batch stays a pending delta, so the final probe reads
-    compacted-base ∪ delta minus tombstones — every branch of the MOR
-    read path in one driver-checked row."""
+    """The maintained IVF index through every branch of the merge-on-read
+    read path. Same post-changelog corpus as llm_ivf_probe_maintained_mut
+    (negate vec_id%7==0, delete vec_id%11==0 with %7!=0), so that row's
+    probe-restatement oracle applies verbatim — but the update batch
+    carries NO before images (tombstones shadow by id), a COMPACTION folds
+    it (pointer-swap commit), and the delete batch stays a pending delta,
+    so the final probe reads compacted-base ∪ delta minus tombstones."""
     import shutil
     import tempfile
 
@@ -510,9 +504,7 @@ def q_ivf_probe_mor(spark, sf_dir):
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     path = tempfile.mkdtemp(prefix="ivf_mor_")
-    write_ivf_index(
-        emb, path, nlist=8, seed=42, layout="mor", assign_engine="sql"
-    )
+    write_ivf_index(emb, path, nlist=8, seed=42, assign_engine="sql")
     upd = emb.where(F.col("vec_id") % 7 == 0).select(
         "vec_id",
         F.transform(F.col("embedding"), lambda x: -x).alias("embedding"),
@@ -943,8 +935,8 @@ def q_kneser_ney_maintained_mut(spark, sf_dir):
     path is `llm_kneser_ney_maintained`): initialize the state from the
     FULL corpus, apply one changelog batch that rewrites every doc_id%7==0
     document (append ' zz qq') and deletes every doc_id%11==0 one (%7!=0,
-    so each key carries exactly one event), then serve. The before-image
-    subtraction — the turnstile half a stored global count could not
+    so each key carries exactly one event), then serve. The removal of the
+    old grams — the turnstile half a stored global count could not
     replay safely — is thereby oracle-checked: the oracle runs the same
     5-gram KN hierarchy over the post-changelog corpus expressed as a
     CASE/WHERE CTE."""
@@ -989,17 +981,14 @@ def q_kneser_ney_maintained_mut(spark, sf_dir):
 
 
 def q_kneser_ney_mor(spark, sf_dir):
-    """The maintained 5-gram KN LM under the MERGE-ON-READ layout — the
-    O(batch) apply path the round-12 curve measurement motivated (the COW
-    touched-bucket merge touches 64/64 buckets for a 100-doc batch at
-    n=5, i.e. rewrites the corpus; BASELINE.md r12). Same post-changelog
-    corpus as llm_kneser_ney_maintained_mut (append ' zz qq' to every
-    doc_id%7==0 text, delete every %11==0-and-%7!=0 doc), so that row's
-    hierarchy-restatement oracle applies verbatim — but driven through
-    the MOR machinery: the update batch carries NO before images
-    (tombstones shadow by id), a compaction folds it, and the delete
-    batch stays a pending delta, so serving reads compacted-base ∪ delta
-    minus tombstones."""
+    """The maintained 5-gram KN LM through the merge-on-read compaction and
+    sequence-allocation paths. Same post-changelog corpus as
+    llm_kneser_ney_maintained_mut (append ' zz qq' to every doc_id%7==0
+    text, delete every %11==0-and-%7!=0 doc), so that row's
+    hierarchy-restatement oracle applies verbatim — but the update batch
+    carries NO before images (tombstones shadow by id), a compaction folds
+    it, and the delete batch stays a pending delta, so serving reads
+    compacted-base ∪ delta minus tombstones."""
     import shutil
     import tempfile
 
@@ -1013,9 +1002,7 @@ def q_kneser_ney_mor(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     path = tempfile.mkdtemp(prefix="kn_mor_")
     # fixture-sized buckets, same rationale as the _mut sibling
-    write_ngram_state(
-        spark, docs, path, n=5, nbuckets=4, doc_buckets=2, layout="mor"
-    )
+    write_ngram_state(spark, docs, path, n=5, nbuckets=4, doc_buckets=2)
     upd = docs.where(F.pmod(F.col("doc_id"), F.lit(7)) == 0).select(
         "doc_id",
         F.concat(F.col("text"), F.lit(" zz qq")).alias("text"),
@@ -1167,11 +1154,9 @@ def q_bm25_probe(spark, sf_dir):
 
 
 def q_bm25_probe_mor(spark, sf_dir):
-    """The maintained BM25 index under the MERGE-ON-READ layout (round-12:
-    the COW applier touches 64/64 term buckets for a 100-doc batch —
-    an O(corpus) rewrite, measured in BASELINE.md r12; MOR appends
-    O(batch) deltas and keeps the corpus scalars exact via per-batch
-    stats deltas folded behind a through_seq horizon). The index is
+    """The maintained BM25 index through the merge-on-read compaction and
+    minor-fold paths (the corpus scalars stay exact via per-batch stats
+    deltas folded behind a through_seq horizon). The index is
     initialized from a PERTURBED corpus — every doc_id%7==0 text has
     ' zz qq' appended, every %5==0 doc is held out, and a ghost twin
     (doc_id+10M) of every %13==0 doc is planted — and the changelog then
@@ -1204,9 +1189,7 @@ def q_bm25_probe_mor(spark, sf_dir):
         (F.col("doc_id") + F.lit(10_000_000)).alias("doc_id"), "text"
     )
     idx = tempfile.mkdtemp(prefix="bm25_mor_")
-    write_bm25_index(
-        spark, perturbed.unionByName(ghosts), idx, layout="mor"
-    )
+    write_bm25_index(spark, perturbed.unionByName(ghosts), idx)
     restore = docs.where(
         (F.pmod(F.col("doc_id"), F.lit(7)) == 0)
         & (F.pmod(F.col("doc_id"), F.lit(5)) != 0)
@@ -3667,8 +3650,8 @@ def oracle_sql() -> dict[str, str]:
     )
     # Merge-on-read twins (round 12): each MOR row engineers the SAME
     # post-changelog corpus as an existing oracle-checked row, so the
-    # oracle applies verbatim while the Spark side exercises the O(batch)
-    # delta/tombstone/compaction machinery instead of the COW merge.
+    # oracle applies verbatim while the Spark side also exercises
+    # compaction, minor folds and mixed ad-hoc/streamed applies.
     # - llm_kneser_ney_mor: update %7 (+' zz qq'), delete %11&%7!=0 — the
     #   _mut corpus, reached via no-before-image batches + a compaction.
     d["llm_kneser_ney_mor"] = d["llm_kneser_ney_maintained_mut"]

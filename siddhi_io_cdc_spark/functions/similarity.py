@@ -357,19 +357,24 @@ def write_ivf_index(
     id_col: str = "vec_id",
     seed: int = 42,
     centroids=None,
-    mode: str = "overwrite",
-    layout: str = "cow",
     compact_every: int = 16,
     minor_every: int = 0,
     retain_cycles: int = 1,
     assign_engine: str = "numpy",
 ):
     """Materialize the 100 TB IVF layout the probe operators assume: vectors
-    written cell-PARTITIONED (``.../cell=<i>/``) so a probe is a partition-
-    pruned scan — only the probed cells' files are ever opened, which is the
-    property every IVF docstring in this module claims. Stores the codebook
-    alongside the data (``_ivf_centroids.json``) so readers probe with
-    exactly the centroids the index was built with. Returns the centroids.
+    written cell-PARTITIONED (``.../vectors/cell=<i>/``) so a probe is a
+    partition-pruned scan — only the probed cells' files are ever opened,
+    which is the property every IVF docstring in this module claims. Stores
+    the codebook alongside the data (``_ivf_centroids.json``) so readers
+    probe with exactly the centroids the index was built with. Returns the
+    centroids.
+
+    The index is a merge-on-read state (``streaming/mor.py``): a changelog
+    batch appends O(batch) deltas and tombstones, and compaction folds
+    them every ``compact_every`` batches (``minor_every`` and
+    ``retain_cycles`` as in :func:`...streaming.mor.mor_init`). Rewriting
+    an index path starts a new lineage.
 
     The write is one narrow pass (assignment is a projection) — Spark's
     ``partitionBy`` splits each task's output by cell, no shuffle. For a
@@ -382,8 +387,6 @@ def write_ivf_index(
     """
     import json
 
-    if layout not in ("cow", "mor"):
-        raise ValueError(f"layout must be 'cow' or 'mor' (got {layout!r})")
     if assign_engine not in ("sql", "numpy"):
         raise ValueError(
             f"assign_engine must be 'sql' or 'numpy' (got {assign_engine!r})"
@@ -403,35 +406,38 @@ def write_ivf_index(
         if assign_engine == "numpy"
         else df.withColumn("cell", ivf_assign(F.col(vec_col), centroids))
     )
-    spark = df.sparkSession
     base = path.rstrip("/")
-    if layout == "mor":
-        # merge-on-read: vectors live under vectors/ (versioned by
-        # compaction); each changelog batch appends O(batch) deltas +
-        # tombstones instead of rewriting touched cells — see
-        # streaming/mor.py for why that matters once touched-cells ~ nlist
-        from siddhi_io_cdc_spark.streaming.ivf_index import _hadoop_delete
-        from siddhi_io_cdc_spark.streaming.mor import mor_init
-
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(
-            base + "/vectors"
-        )
-        mor_init(
-            spark, base,
-            {"vectors": {"id_col": id_col, "part_col": "cell"}},
-            compact_every=compact_every,
-            minor_every=minor_every,
-            retain_cycles=retain_cycles,
-        )
-        _hadoop_delete(spark, base + "/_batches")
-    else:
-        assigned.write.mode(mode).partitionBy("cell").parquet(path)
+    _write_ivf_vectors(
+        assigned, base, id_col, compact_every, minor_every, retain_cycles
+    )
     _hadoop_write_text(
-        spark,
+        df.sparkSession,
         base + "/_ivf_centroids.json",
         json.dumps([[float(x) for x in c] for c in centroids]),
     )
     return centroids
+
+
+def _write_ivf_vectors(
+    assigned: DataFrame, base: str, id_col: str, compact_every: int,
+    minor_every: int, retain_cycles: int,
+) -> None:
+    """Write the cell-assigned vectors as the base of a fresh merge-on-read
+    ``vectors`` table (versioned by compaction) and drop the previous
+    lineage's batch markers."""
+    from siddhi_io_cdc_spark.streaming.ivf_index import _hadoop_delete
+    from siddhi_io_cdc_spark.streaming.mor import mor_init
+
+    spark = assigned.sparkSession
+    assigned.write.mode("overwrite").partitionBy("cell").parquet(base + "/vectors")
+    mor_init(
+        spark, base,
+        {"vectors": {"id_col": id_col, "part_col": "cell"}},
+        compact_every=compact_every,
+        minor_every=minor_every,
+        retain_cycles=retain_cycles,
+    )
+    _hadoop_delete(spark, base + "/_batches")
 
 
 def _hadoop_write_text(spark, path: str, text: str) -> None:
@@ -499,10 +505,11 @@ def probe_ivf_index(
 
 
 def _ivf_cells(spark, path: str) -> DataFrame:
-    """The IVF vector table under either layout: the cell-partitioned
-    parquet root (cow) or the merge-on-read live view (mor — base ∪ deltas
+    """The IVF vector table: the merge-on-read live view (base ∪ deltas
     minus tombstoned ids; the ``cell`` predicate still prunes partitions
-    on both the base and each delta)."""
+    on both the base and each delta), or the cell-partitioned parquet root
+    of an index written before the indexes were maintained merge-on-read
+    (still probe-able, no longer maintainable)."""
     from siddhi_io_cdc_spark.streaming.mor import is_mor, mor_live
 
     if is_mor(spark, path):
@@ -1330,8 +1337,6 @@ def write_ivfpq_index(
     seed: int = 42,
     centroids=None,
     codebooks=None,
-    mode: str = "overwrite",
-    layout: str = "cow",
     compact_every: int = 16,
     minor_every: int = 0,
     retain_cycles: int = 1,
@@ -1344,9 +1349,9 @@ def write_ivfpq_index(
     ``pq_code`` bytes only, 32x less than the float vectors). Both
     codebooks are stored alongside the data through the Hadoop FS API, so
     the layout works on any Spark-readable path. Returns
-    ``(centroids, codebooks)``. ``layout="mor"`` selects the merge-on-read
-    maintenance strategy (see :func:`write_ivf_index`); the changelog
-    applier stamps upserted rows' PQ codes either way.
+    ``(centroids, codebooks)``. Maintained merge-on-read like
+    :func:`write_ivf_index`; the changelog applier stamps upserted rows'
+    PQ codes.
 
     ``assign_engine="numpy"`` (the default) runs the one-pass BLAS
     cell+code assignment (measured 26.4x at production sizes); pass
@@ -1354,8 +1359,6 @@ def write_ivfpq_index(
     see :func:`write_ivf_index` for the 1-ulp tiebreak caveat."""
     import json
 
-    if layout not in ("cow", "mor"):
-        raise ValueError(f"layout must be 'cow' or 'mor' (got {layout!r})")
     if assign_engine not in ("sql", "numpy"):
         raise ValueError(
             f"assign_engine must be 'sql' or 'numpy' (got {assign_engine!r})"
@@ -1374,31 +1377,18 @@ def write_ivfpq_index(
         ).withColumn("pq_code", pq_assign(F.col(vec_col), codebooks))
     )
     spark = df.sparkSession
-    if layout == "mor":
-        from siddhi_io_cdc_spark.streaming.ivf_index import _hadoop_delete
-        from siddhi_io_cdc_spark.streaming.mor import mor_init
-
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(
-            path.rstrip("/") + "/vectors"
-        )
-        mor_init(
-            spark, path.rstrip("/"),
-            {"vectors": {"id_col": id_col, "part_col": "cell"}},
-            compact_every=compact_every,
-            minor_every=minor_every,
-            retain_cycles=retain_cycles,
-        )
-        _hadoop_delete(spark, path.rstrip("/") + "/_batches")
-    else:
-        assigned.write.mode(mode).partitionBy("cell").parquet(path)
+    base = path.rstrip("/")
+    _write_ivf_vectors(
+        assigned, base, id_col, compact_every, minor_every, retain_cycles
+    )
     _hadoop_write_text(
         spark,
-        path.rstrip("/") + "/_ivf_centroids.json",
+        base + "/_ivf_centroids.json",
         json.dumps([[float(x) for x in c] for c in centroids]),
     )
     _hadoop_write_text(
         spark,
-        path.rstrip("/") + "/_pq_codebooks.json",
+        base + "/_pq_codebooks.json",
         json.dumps([[[float(x) for x in c] for c in book] for book in codebooks]),
     )
     return centroids, codebooks

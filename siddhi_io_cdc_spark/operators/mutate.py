@@ -19,9 +19,10 @@ a new base every 16 batches. The store must be read through
 :func:`read_bucketed_store`, which merges base, deltas and tombstones.
 :func:`swap_partitions` is the one code path that reads, creates and
 rewrites a copy-on-write bucketed store — the changelog store's base, the
-SCD2 history store, the rollup sink and the IVF / BM25 / n-gram indexes
-go through it: it reads only the touched partitions, writes their
-replacement once and swaps each in by rename. On a real lakehouse the same
+SCD2 history store and the rollup sink go through it: it reads only the
+touched partitions, writes their replacement once and swaps each in by
+rename. (The IVF / BM25 / n-gram indexes are merge-on-read states,
+``streaming/mor.py``.) On a real lakehouse the same
 plan feeds ``DeltaTable.merge`` / ``MERGE INTO`` (:func:`merge_into_delta`)
 and the physical commit becomes transactional. Streaming entry points wrap
 the batch logic in ``foreachBatch`` — replay-idempotent because the merge
@@ -181,8 +182,8 @@ def apply_changelog(
 
 
 # ---------------------------------------------------------------------------
-# Bucketed parquet stores (the container has no Delta): every hash- or
-# cell-partitioned copy-on-write store of the package is read, created and
+# Bucketed parquet stores (the container has no Delta): every hash-
+# partitioned copy-on-write store of the package is read, created and
 # rewritten through swap_partitions; the changelog merge store is
 # merge-on-read on top of a base it writes that way. A lakehouse MERGE
 # replaces both in production.

@@ -178,6 +178,50 @@ def _read_file_stats(filesystem, path, column):
         return mn, mx, covered, pf.metadata.num_rows
 
 
+def _zone_filesystem(path):
+    """``(filesystem, root)`` of a landing zone URI or plain local path."""
+    import pyarrow as pa
+    import pyarrow.fs as pafs
+
+    try:
+        return pafs.FileSystem.from_uri(path)
+    except pa.ArrowInvalid:  # a plain local path
+        return pafs.LocalFileSystem(), path
+
+
+def _landing_files(filesystem, root):
+    """The zone's data files, in path order (the order dataset discovery
+    uses), skipping the names discovery skips."""
+    import pyarrow.fs as pafs
+
+    root = root.rstrip("/")
+    infos = filesystem.get_file_info(pafs.FileSelector(root, recursive=True))
+    for info in sorted(infos, key=lambda i: i.path):
+        rel = info.path[len(root) + 1:]
+        if info.type == pafs.FileType.File and not any(
+            part.startswith(_IGNORED_PREFIXES) for part in rel.split("/")
+        ):
+            yield info
+
+
+def _zone_schema(path):
+    """The Arrow schema of the first landed file (footer readable) in
+    listing order — the file dataset discovery would infer from, minus
+    files still being written. Opens one footer in the normal case; a zone
+    with no landed file has the empty schema, as discovery gives it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    filesystem, root = _zone_filesystem(path)
+    for info in _landing_files(filesystem, root):
+        try:
+            with filesystem.open_input_file(info.path) as f:
+                return pq.read_schema(f)
+        except (pa.ArrowInvalid, OSError):
+            continue
+    return pa.schema([])
+
+
 def _outside(st, low, high):
     """True when footer stats prove no row of the file lies in (low, high].
     Stat-less files and incomparable stats are never excluded."""
@@ -240,17 +284,9 @@ class CDCPollStreamReader(DataSourceStreamReader):
         import pyarrow.dataset as ds
 
         return ds.dataset(
-            list(self._zone_stats()), format="parquet", filesystem=self._filesystem()[0]
+            list(self._zone_stats()), format="parquet",
+            filesystem=_zone_filesystem(self.path)[0],
         )
-
-    def _filesystem(self):
-        import pyarrow as pa
-        import pyarrow.fs as pafs
-
-        try:
-            return pafs.FileSystem.from_uri(self.path)
-        except pa.ArrowInvalid:  # a plain local path
-            return pafs.LocalFileSystem(), self.path
 
     def _zone_stats(self) -> dict:
         """Per-file polling-column stats of the landing zone, in path order
@@ -263,19 +299,11 @@ class CDCPollStreamReader(DataSourceStreamReader):
         being written) has not landed: it is left out, and read again on
         the next call."""
         import pyarrow as pa
-        import pyarrow.fs as pafs
 
-        filesystem, root = self._filesystem()
-        root = root.rstrip("/")
+        filesystem, root = _zone_filesystem(self.path)
         old = getattr(self, "_stats_cache", None) or {}
         cache = {}
-        infos = filesystem.get_file_info(pafs.FileSelector(root, recursive=True))
-        for info in sorted(infos, key=lambda i: i.path):
-            rel = info.path[len(root) + 1:]
-            if info.type != pafs.FileType.File or any(
-                part.startswith(_IGNORED_PREFIXES) for part in rel.split("/")
-            ):
-                continue
+        for info in _landing_files(filesystem, root):
             sig = (info.size, info.mtime_ns)
             st = old.get(info.path)
             if st is None or st.sig != sig:
@@ -314,7 +342,7 @@ class CDCPollStreamReader(DataSourceStreamReader):
         if high is not None:
             hf = ds.field(self.column) <= high
             filt = hf if filt is None else (filt & hf)
-        dset = ds.dataset(paths, format="parquet", filesystem=self._filesystem()[0])
+        dset = ds.dataset(paths, format="parquet", filesystem=_zone_filesystem(self.path)[0])
         return dset.to_table(columns=[self.column], filter=filt).column(0)
 
     def _stats_minmax(self):
@@ -723,9 +751,7 @@ class CDCPollDataSource(DataSource):
         return "cdc-poll"
 
     def schema(self):
-        import pyarrow.dataset as ds
-
-        full = _arrow_to_struct(ds.dataset(self.options["path"], format="parquet").schema)
+        full = _arrow_to_struct(_zone_schema(self.options["path"]))
         cols = self.options.get("columns")
         if not cols:
             return full

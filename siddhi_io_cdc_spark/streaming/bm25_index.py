@@ -17,22 +17,18 @@ changelog, composing the house patterns:
   deployment can additionally cache the 1-row result, which replays
   cleanly because it is derived state).
 
-Copy-on-write maintenance per micro-batch touches O(batch's distinct
-term buckets + doc buckets) — which round 12 MEASURED to be O(index) in
+The index is a merge-on-read state (``streaming/mor.py``): a micro-batch
+appends its documents' new postings and lengths plus a tombstone per
+batch document id, O(batch) writes and no index read. (A
+copy-on-write rewrite of the touched term buckets was O(index) in
 practice: a 100-document batch's ~1,000 distinct terms hash into all 64
-buckets, so the "touched-bucket" merge rewrites the postings table
-every batch (BASELINE.md round 12, constant-batch curve growing ~2.4×
-at 20× data). ``write_bm25_index(layout="mor")`` is the production
-answer: merge-on-read deltas + tombstones (``streaming/mor.py``),
-measured flat across 20× data, with the corpus scalars maintained as
-exact per-batch deltas. Under copy-on-write, update/delete ops MUST
-carry the BEFORE image (``before_<text_col>``): an updated document
-may drop terms, and without the old text those postings' buckets are
-unknowable short of an O(index) scan — the flatten operator's update
-projection provides exactly that column. (mor also requires it, but
-only for the stats delta's replaced-length term.) Replay-idempotent: per-bucket
-content is a pure function of {old rows not in batch} ∪ {batch's final
-state}, plus a per-``batch_id`` marker to skip clean re-runs. Filesystem
+buckets — BASELINE.md round 12.) The corpus scalars are maintained as
+exact per-batch deltas. Update/delete ops MUST carry the BEFORE image
+(``before_<text_col>``): the stats delta subtracts the replaced
+document's old length, which only the old text yields without a corpus
+scan — the flatten operator's update projection provides that column.
+Exactly-once per ``batch_id``: a replayed batch reuses its recorded
+sequence, and a per-``batch_id`` marker skips clean re-runs. Filesystem
 metadata ops go through the Hadoop FS API (s3a/hdfs-capable).
 
 The query path restates EXACTLY the expression tree of
@@ -50,8 +46,8 @@ from pyspark.sql import functions as F
 
 from siddhi_io_cdc_spark.functions.text import normalize_text
 from siddhi_io_cdc_spark.functions.similarity import _hadoop_read_text
-from siddhi_io_cdc_spark.operators.mutate import swap_partitions
 from siddhi_io_cdc_spark.streaming.ivf_index import (
+    _fenced_adapter,
     _hadoop_delete,
     _hadoop_exists,
     _hadoop_write_text,
@@ -85,7 +81,6 @@ def write_bm25_index(
     id_col: str = "doc_id",
     nbuckets: int = 64,
     doc_buckets: int = 16,
-    layout: str = "cow",
     compact_every: int = 16,
     minor_every: int = 0,
     retain_cycles: int = 1,
@@ -93,17 +88,12 @@ def write_bm25_index(
     """Materialize the inverted layout from a document corpus: postings
     partitioned by term bucket, doc lengths partitioned by doc bucket.
 
-    ``layout="mor"`` switches maintenance to the merge-on-read strategy
-    (``streaming/mor.py``): a ~100-doc batch's terms hash into ALL 64
-    postings buckets, so the copy-on-write touched-bucket merge degrades
-    to an O(corpus) rewrite per batch (measured, BASELINE.md round 12);
-    MOR appends O(batch) deltas instead and compacts every
+    Maintenance is merge-on-read (``streaming/mor.py``): each changelog
+    batch appends O(batch) deltas, and compaction folds them every
     ``compact_every`` batches. Corpus stats (N docs / total tokens) are
     maintained as per-batch deltas stamped into the delta dirs and folded
     into ``_stats.json`` behind a ``through_seq`` horizon, so the probe's
     scalars stay exact without any corpus scan on the apply path."""
-    if layout not in ("cow", "mor"):
-        raise ValueError(f"layout must be 'cow' or 'mor' (got {layout!r})")
     base = index_path.rstrip("/")
     toks = _doc_terms(df, text_col, id_col)
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -132,33 +122,29 @@ def write_bm25_index(
     )
     _hadoop_write_text(
         spark, base + "/_meta.json",
-        f'{{"nbuckets": {nbuckets}, "doc_buckets": {doc_buckets}, '
-        f'"layout": "{layout}"}}',
+        f'{{"nbuckets": {nbuckets}, "doc_buckets": {doc_buckets}}}',
     )
-    if layout == "mor":
-        from siddhi_io_cdc_spark.streaming.mor import mor_init
+    from siddhi_io_cdc_spark.streaming.mor import mor_init
 
-        mor_init(
-            spark, base,
-            {
-                "postings": {"id_col": "doc_id", "part_col": TBUCKET_COL},
-                "docs": {"id_col": "doc_id", "part_col": DBUCKET_COL},
-            },
-            compact_every=compact_every,
-            minor_every=minor_every,
-            retain_cycles=retain_cycles,
-        )
-        _hadoop_delete(spark, base + "/_batches")
-    else:
-        _hadoop_delete(spark, base + "/_mor.json")
-        _hadoop_delete(spark, base + "/_delta")
-        _hadoop_delete(spark, base + "/_tomb")
+    mor_init(
+        spark, base,
+        {
+            "postings": {"id_col": "doc_id", "part_col": TBUCKET_COL},
+            "docs": {"id_col": "doc_id", "part_col": DBUCKET_COL},
+        },
+        compact_every=compact_every,
+        minor_every=minor_every,
+        retain_cycles=retain_cycles,
+    )
+    _hadoop_delete(spark, base + "/_batches")
     _write_stats(spark, base)
 
 
 def _state_table(spark, base: str, table: str) -> DataFrame:
-    """Read an index table under either layout: plain partitioned parquet
-    (cow) or the live merge-on-read view (mor)."""
+    """Read an index table (BM25 or n-gram state): the live merge-on-read
+    view, or the plain partitioned parquet of a state written before the
+    indexes were maintained merge-on-read (still probe-able, no longer
+    maintainable)."""
     from siddhi_io_cdc_spark.streaming.mor import is_mor, mor_live
 
     if is_mor(spark, base):
@@ -168,12 +154,12 @@ def _state_table(spark, base: str, table: str) -> DataFrame:
 
 def _write_stats(spark, base: str, through_seq: int = 0) -> None:
     """Persist the corpus scalars (N, total tokens) as DERIVED state — a
-    1-row aggregate over the narrow docs table, rewritten after every
-    cow batch, so crash-replay regenerates it and the probe never scans
-    even the doc-length table for its two scalars. Under mor the cache is
-    stamped with ``through_seq``: readers add exactly the pending stats
-    deltas above that horizon, so any crash interleaving of the stats
-    write, the batch append, and compaction still reads exact scalars."""
+    1-row aggregate over the narrow docs table, written at build and
+    after each compaction, so the probe never scans even the doc-length
+    table for its two scalars. The cache is stamped with
+    ``through_seq``: readers add exactly the pending stats deltas above
+    that horizon, so any crash interleaving of the stats write, the batch
+    append, and compaction still reads exact scalars."""
     r = (
         _state_table(spark, base, "docs")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t"))
@@ -188,8 +174,8 @@ def _write_stats(spark, base: str, through_seq: int = 0) -> None:
 
 def read_bm25_stats(spark, index_path: str) -> tuple[int, int]:
     """The exact corpus scalars ``(n_docs, total_tokens)``: the cached
-    aggregate plus (mor only) any per-batch stats deltas the cache has not
-    absorbed yet."""
+    aggregate plus any per-batch stats deltas the cache has not absorbed
+    yet."""
     import json as _json
 
     from siddhi_io_cdc_spark.streaming.mor import is_mor, mor_extras
@@ -214,29 +200,6 @@ def read_bm25_stats(spark, index_path: str) -> tuple[int, int]:
     return n, t
 
 
-def _swap_doc_rows(
-    spark,
-    path: str,
-    part_col: str,
-    touched: DataFrame,
-    batch_ids: DataFrame,
-    id_col: str,
-    new_rows: DataFrame,
-) -> None:
-    """Replace the batch docs' rows in the ``touched`` partitions of
-    ``path``: drop every stored row of the batch's docs (anti-join on the
-    doc id — covers removed terms), add ``new_rows`` (carrying
-    ``part_col``), and swap the partitions in
-    (:func:`...mutate.swap_partitions`)."""
-
-    def rows(current: DataFrame | None) -> DataFrame:
-        if current is None:
-            return new_rows
-        return current.join(F.broadcast(batch_ids), id_col, "left_anti").unionByName(new_rows)
-
-    swap_partitions(spark, path, part_col, touched, rows)
-
-
 def apply_changelog_bm25(
     spark,
     index_path: str,
@@ -248,22 +211,36 @@ def apply_changelog_bm25(
     batch_id=None,
     expect_epoch: int | None = None,
 ) -> int | None:
-    """Apply one micro-batch of flattened CDC events to the inverted index.
+    """Apply one micro-batch of flattened CDC events to the inverted index:
+    O(batch) writes, no index read.
 
     Per key, only the latest event by ``seq_col`` decides the final state
-    (``apply_changelog`` semantics). Update/delete rows must carry
-    ``before_<text_col>`` (non-NULL): dropped terms' postings live in
-    buckets derivable only from the OLD text.
+    (``apply_changelog`` semantics). Tombstones shadow by doc id, so the
+    postings need no before-image bucket math — but update/delete rows
+    must still carry a non-NULL ``before_<text_col>``: the corpus-stats
+    delta (``dn``/``dtok``) adjusts ``total_tokens`` by the replaced
+    documents' lengths, which only the old text yields without a corpus
+    scan. The delta trusts changelog op semantics (insert = row created,
+    delete = row existed; 'read' snapshot rows count as inserts);
+    compaction recomputes the scalars exactly from the live view, so any
+    drift from a lying changelog heals at the next compaction.
 
-    MOR layout: returns the claimed writer epoch (thread back as
-    ``expect_epoch`` next batch to fence alternating writers); COW and
-    marker-skipped replays return None.
+    Returns the claimed writer epoch (thread it back as ``expect_epoch``
+    next batch to fence alternating writers); a marker-skipped replay
+    returns None. An index written before the indexes were maintained
+    merge-on-read (no ``_mor.json``) is refused: rebuild it with
+    ``write_bm25_index``.
     """
     import json as _json
 
     from siddhi_io_cdc_spark.operators.mutate import rekey_deletes
+    from siddhi_io_cdc_spark.streaming.mor import (
+        _read_mor, latest_per_key, mor_append, mor_begin_apply,
+        mor_pending_seqs, require_before_images, require_mor,
+    )
 
     base = index_path.rstrip("/")
+    require_mor(spark, base, "write_bm25_index")
     if batch_id is not None and _hadoop_exists(spark, _marker_path(base, batch_id)):
         return None
     meta = _json.loads(_hadoop_read_text(spark, base + "/_meta.json"))
@@ -273,115 +250,6 @@ def apply_changelog_bm25(
     # DEFAULTS (doc_id would read 0, deleting the wrong document) — re-key
     # deletes from the before image first, same as every other applier.
     batch_df = rekey_deletes(batch_df, [id_col], op_col)
-
-    if meta.get("layout") == "mor":
-        return _apply_bm25_mor(
-            spark, batch_df, base, nbuckets, doc_buckets, text_col, id_col,
-            seq_col, op_col, batch_id, expect_epoch,
-        )
-
-    before_text = f"before_{text_col}"
-    moving_ops = ("update", "delete")
-    movers = batch_df.where(F.col(op_col).isin(*moving_ops))
-    if before_text not in batch_df.columns:
-        if movers.limit(1).count():
-            raise ValueError(
-                f"batch contains {moving_ops} ops but no '{before_text}' column: "
-                "dropped terms' postings buckets are unknowable without the old "
-                "text. Flatten the stream with the update projection."
-            )
-    elif movers.where(F.col(before_text).isNull()).limit(1).count():
-        raise ValueError(
-            f"batch contains {moving_ops} rows with a NULL '{before_text}' "
-            "before image: the old postings are unknowable, so stale rows "
-            "would survive. Emit whole before images."
-        )
-
-    # Final state per key in this batch (latest by seq): one row per doc id
-    # with its op. 'read' snapshot rows upsert like inserts.
-    latest = (
-        batch_df.withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy(F.col(seq_col).desc())
-            ),
-        )
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-    # Term-bucket touched set: terms of after images (upserts) + terms of
-    # before images (update/delete), the same shape as the IVF cell set.
-    after_terms = _doc_terms(
-        latest.where(F.col(op_col) != "delete"), text_col, id_col
-    )
-    touched = after_terms.select(_tbucket(F.col("term"), nbuckets).alias("b"))
-    if before_text in batch_df.columns:
-        # Old-term buckets come from ALL movers in the batch, not just the
-        # latest event per key: in an intra-batch chain (update A->B then
-        # B->C) the latest event's before image is B, but the PRE-BATCH
-        # postings live in buckets derived from A — only the earliest
-        # event's before image covers them. The union of every mover's
-        # before image is a superset of the pre-batch text's buckets
-        # (extra buckets merely widen the touched set), same shape as the
-        # IVF applier's before-image cells.
-        old_terms = _doc_terms(movers, before_text, id_col)
-        touched = touched.unionByName(old_terms.select(_tbucket(F.col("term"), nbuckets).alias("b")))
-    batch_ids = latest.select(F.col(id_col).alias("doc_id")).distinct()
-
-    # New postings for every non-deleted doc in the batch.
-    new_tf = (
-        after_terms.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn(TBUCKET_COL, _tbucket(F.col("term"), nbuckets))
-    )
-    _swap_doc_rows(spark, base + "/postings", TBUCKET_COL, touched, batch_ids, "doc_id", new_tf)
-
-    # docs/ table: replace the batch docs' rows in their doc buckets. Every
-    # upserted doc gets a dl row — LEFT join so a doc updated/inserted with
-    # token-less text lands as dl=0 (it still counts toward N / avgdl).
-    dbucket = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(doc_buckets)).cast("int")
-    upsert_ids = (
-        latest.where(F.col(op_col) != "delete")
-        .select(F.col(id_col).alias("doc_id"))
-    )
-    counted = after_terms.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__c")
-    )
-    new_dl = (
-        upsert_ids.join(counted, "doc_id", "left")
-        .select("doc_id", F.coalesce(F.col("__c"), F.lit(0)).cast("bigint").alias("dl"))
-        .withColumn(DBUCKET_COL, dbucket)
-    )
-    _swap_doc_rows(
-        spark, base + "/docs", DBUCKET_COL, batch_ids.select(dbucket), batch_ids, "doc_id", new_dl
-    )
-
-    _write_stats(spark, base)
-    if batch_id is not None:
-        _hadoop_write_text(spark, _marker_path(base, batch_id), "done")
-
-
-def _apply_bm25_mor(
-    spark, batch_df, base, nbuckets, doc_buckets, text_col, id_col,
-    seq_col, op_col, batch_id, expect_epoch=None,
-) -> int:
-    """Merge-on-read apply: O(batch) writes, no index read.
-
-    Tombstones shadow by doc id, so the postings merge needs NO
-    before-image bucket math — but before images are still REQUIRED here:
-    the corpus-stats delta (``dn``/``dtok``) adjusts ``total_tokens`` by
-    the replaced documents' lengths, which only the old text yields
-    without a corpus scan. The delta trusts changelog op semantics
-    (insert = row created, delete = row existed; 'read' snapshot rows
-    count as inserts); compaction recomputes the scalars exactly from the
-    live view, so any drift from a lying changelog heals at the next
-    compaction.
-    """
-    from siddhi_io_cdc_spark.streaming.mor import (
-        latest_per_key, mor_append, mor_begin_apply, require_before_images,
-    )
-
     before_text = f"before_{text_col}"
     require_before_images(
         batch_df, op_col, before_text,
@@ -465,8 +333,6 @@ def _apply_bm25_mor(
         _hadoop_write_text(spark, _marker_path(base, batch_id), "done")
     # same cadence as mor.maybe_autocompact, but through the bm25 wrappers
     # so the stats cache folds in the right order relative to the fold
-    from siddhi_io_cdc_spark.streaming.mor import _read_mor, mor_pending_seqs
-
     meta_mor = _read_mor(spark, base)
     every = meta_mor.get("compact_every") or 0
     pend_n = len(mor_pending_seqs(spark, base))
@@ -482,7 +348,7 @@ def _apply_bm25_mor(
 
 
 def compact_bm25_index(spark, index_path: str, epoch: int | None = None) -> bool:
-    """Compaction for a mor-layout BM25 index (the applier auto-compacts
+    """Compaction for a BM25 index (the applier auto-compacts
     every ``compact_every`` batches through this path too).
 
     Ordering is the crash-safety point: the pending stats deltas are
@@ -525,7 +391,7 @@ def compact_bm25_index(spark, index_path: str, epoch: int | None = None) -> bool
 def minor_compact_bm25_index(
     spark, index_path: str, epoch: int | None = None, force: bool = False
 ) -> bool:
-    """Size-tiered MINOR compaction for a mor-layout BM25 index: fold the
+    """Size-tiered MINOR compaction for a BM25 index: fold the
     pending deltas into one delta without rewriting the base (see
     ``mor.mor_minor_compact`` and the BASELINE.md round-13 curve — the
     base rewrite dominates the major fold's wall, so ingest-dominant
@@ -599,16 +465,11 @@ def foreach_batch_bm25_index(
     op_col: str = "operation",
 ):
     """``foreachBatch`` adapter: wire a flattened CDC stream into
-    :func:`apply_changelog_bm25`. Exactly-once per ``batch_id`` via the
-    marker file; crash-and-replay converges (per-bucket state is pure).
-    MOR layout: remembers each batch's claimed epoch and passes it back,
-    fencing a foreign writer that alternates between this maintainer's
-    batches."""
-
-    state = {"epoch": None}
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        e = apply_changelog_bm25(
+    :func:`apply_changelog_bm25`. Exactly-once per ``batch_id`` (recorded
+    sequence + marker file); alternating writers are fenced by the
+    threaded epoch."""
+    return _fenced_adapter(
+        lambda batch_df, batch_id, epoch: apply_changelog_bm25(
             spark,
             index_path,
             batch_df,
@@ -617,14 +478,9 @@ def foreach_batch_bm25_index(
             seq_col=seq_col,
             op_col=op_col,
             batch_id=batch_id,
-            expect_epoch=state["epoch"],
+            expect_epoch=epoch,
         )
-        # a marker-skipped replay returns None WITHOUT claiming an epoch;
-        # keep the remembered token so the next live batch stays fenced
-        # (r14 ADVICE: overwriting with None silently degraded the fence)
-        state["epoch"] = e if e is not None else state["epoch"]
-
-    return _apply
+    )
 
 
 def bm25_topk_indexed(
@@ -671,9 +527,8 @@ def bm25_topk_indexed(
         for r in postings.groupBy("term").agg(F.count(F.lit(1)).alias("df")).collect()
     }
     docs = _state_table(spark, base, "docs").select("doc_id", "dl")
-    # derived-state cache maintained by the applier (plus, under mor, the
-    # pending per-batch deltas): same two BIGINTs the aggregate would
-    # produce, so scores stay bit-identical
+    # derived-state cache plus the pending per-batch deltas: same two
+    # BIGINTs the aggregate would produce, so scores stay bit-identical
     n_docs, total_tokens = read_bm25_stats(spark, base)
     stats = spark.createDataFrame(
         [(int(n_docs), int(total_tokens))],

@@ -1,16 +1,16 @@
-"""Merge-on-read (MOR) state layout for the CDC-maintained indexes and
-the bucketed changelog merge store (``operators/mutate.py``).
+"""Merge-on-read (MOR) state layout for the CDC-maintained indexes (IVF,
+IVF-PQ, BM25, n-gram LM) and the bucketed changelog merge store
+(``operators/mutate.py``).
 
-Why this exists — the O(batch) bound the appliers claim. The original
-copy-on-write (COW) layout rewrites every *touched* hash-bucket partition
-per micro-batch. That bound is honest for the IVF index (a batch touches
-at most ``2 * |batch|`` cells), but for token-level state it collapses:
-a ~100-document batch holds thousands of distinct terms / 5-grams, whose
-hashes land in essentially **all** ``nbuckets`` partitions — measured at
-sf0.1 the n-gram applier touches 64/64 buckets for a 100-doc batch, so
-the "touched-bucket" rewrite is a full O(corpus) rewrite and the
-per-batch cost grows linearly with corpus size (see BASELINE.md round 12
-for the measured curve).
+Why this exists — the O(batch) bound the appliers claim. A copy-on-write
+layout rewrites every *touched* hash-bucket partition per micro-batch.
+For token-level state that collapses: a ~100-document batch holds
+thousands of distinct terms / 5-grams, whose hashes land in essentially
+**all** ``nbuckets`` partitions — measured at sf0.1 the n-gram applier
+touched 64/64 buckets for a 100-doc batch, so the "touched-bucket"
+rewrite was a full O(corpus) rewrite and the per-batch cost grew
+linearly with corpus size (see BASELINE.md round 12 for the measured
+curve). The indexes are therefore maintained merge-on-read only.
 
 MOR makes the apply path O(batch) by construction, the same way Delta
 Lake / Iceberg / Hudi merge-on-read tables do:
@@ -52,7 +52,7 @@ Lake / Iceberg / Hudi merge-on-read tables do:
   the ``gc`` list. Idle states (no new commits to age generations out)
   can reclaim space with the explicit :func:`mor_gc` pass. Compaction
   runs automatically every ``compact_every`` batches (default 16),
-  amortizing the rewrite the COW layout paid on every batch.
+  amortizing the base rewrite over that many batches.
 - **minor compact** (:func:`mor_minor_compact`, size-tiered): folds the
   pending deltas into ONE delta without rewriting the base — the fold
   wall of a major compaction is dominated by the corpus-sized base
@@ -130,9 +130,8 @@ water; a streamed batch arriving AFTER an ad-hoc apply allocates above
 both instead of silently overwriting the ad-hoc delta.
 
 Before-image note: MOR does not need before images to bound its work
-(tombstones shadow by id), but the appliers still validate them for
-parity with the COW contract — and the BM25 stats delta genuinely needs
-``before_<text>`` to adjust ``total_tokens`` without a corpus scan.
+(tombstones shadow by id); only the BM25 stats delta needs
+``before_<text>``, to adjust ``total_tokens`` without a corpus scan.
 
 Reference anchor: the changelog event shape this consumes restates the
 reference's update/delete envelope (RdbmsChangeDataCapture.java:86-126);
@@ -179,6 +178,7 @@ __all__ = [
     "mor_take_writer",
     "next_seq",
     "require_before_images",
+    "require_mor",
 ]
 
 
@@ -242,6 +242,19 @@ def is_mor(spark, root: str) -> bool:
     # a state whose pointer write crashed mid-commit is still a MOR state
     # (_read_mor finishes the rename)
     return _hadoop_exists(spark, base) or _hadoop_exists(spark, base + ".tmp")
+
+
+def require_mor(spark, root: str, writer: str) -> None:
+    """Refuse to maintain an index state with no ``_mor.json``: it was
+    written before the indexes were maintained merge-on-read. Such a state
+    still reads (its tables are plain partitioned parquet), but a
+    changelog cannot be applied to it; ``writer`` names the rebuild."""
+    if not is_mor(spark, root):
+        raise ValueError(
+            f"{root} has no {MOR_META}: it was written before the indexes "
+            "were maintained merge-on-read, so a changelog cannot be "
+            f"applied to it. Rebuild it with {writer}."
+        )
 
 
 def _id_cols(spec: dict) -> list[str]:

@@ -13,26 +13,26 @@ update is both. Every lower order (continuation counts, context stats,
 discount tree) derives from ``a[n]`` by vocabulary-sized aggregation at
 serving time, so maintenance only ever touches per-document state.
 
-State layout (same filesystem contract as ``streaming/bm25_index.py``):
+State layout (same filesystem contract as ``streaming/bm25_index.py``), a
+merge-on-read state (``streaming/mor.py``):
 
-- ``grams/`` — one row per (document, distinct n-gram): ``doc_id,
+- ``grams`` — one row per (document, distinct n-gram): ``doc_id,
   w1..wn, tf``, hash-partitioned by ``gbucket = pmod(xxhash64(w1..wn),
-  nbuckets)``. Per-bucket content is a PURE function of {rows whose doc is
-  not in the batch} ∪ {batch docs' rows} — replay after a crash converges,
-  unlike a stored global count, which is a delta and double-applies.
-- ``docs/`` — the roster ``doc_id, n_ngrams`` (0 for sub-``n``-token
+  nbuckets)``. A batch appends its documents' new rows as a delta plus a
+  tombstone per batch document id, so a document's old grams are shadowed
+  wherever their buckets are — no before images, no state read. Stored
+  per-document rows (not a global count, which is a delta and would
+  double-apply) keep replay after a crash convergent.
+- ``docs`` — the roster ``doc_id, n_ngrams`` (0 for sub-``n``-token
   documents), hash-partitioned by doc id: serving left-joins it so short
   documents score NULL exactly like the batch path.
 - ``_batches/<id>`` markers give exactly-once per ``batch_id``.
 
-Per batch the copy-on-write work is O(batch grams + touched buckets) —
-which round 12 MEASURED to be O(corpus) in practice: a 100-document
-batch's ~4,600 distinct 5-grams hash into all 64 buckets, so every
-bucket is "touched" and the merge rewrites the whole gram table
-(BASELINE.md round 12, constant-batch curve growing ~1.7× at 20× data).
-``write_ngram_state(layout="mor")`` is the production answer: the
-merge-on-read layout (``streaming/mor.py``) appends O(batch) deltas +
-tombstones, measured flat across 20× data, and needs no before images.
+Per batch the work is O(batch): a copy-on-write rewrite of the touched
+gram buckets was O(corpus) in practice, because a 100-document batch's
+~4,600 distinct 5-grams hash into all 64 buckets (BASELINE.md round 12).
+Compaction folds the deltas every ``compact_every`` batches.
+
 Serving (``kneser_ney_from_state``) rebuilds the hierarchy from the
 maintained counts with the SAME shared expression tree the batch scorer
 uses (``_kn_lower_orders`` / ``_kn_fixed_ctx_prob`` / ``_kn_lm``), so
@@ -41,17 +41,17 @@ corpus — the equivalence the tests pin (scores are ``round(·, 6)``; the
 only arithmetic difference is double-summation order inside a per-document
 mean, absorbed by the rounding exactly as it is across engines).
 
-Reference semantics: the changelog contract (before-image requirements,
-latest-event-wins, delete re-keying) restates the reference's update/delete
-event shape (RdbmsChangeDataCapture.java:86-126); everything else is the
-LLM-pipeline extension built on it.
+Reference semantics: the changelog contract (latest-event-wins, delete
+re-keying) restates the reference's update/delete event shape
+(RdbmsChangeDataCapture.java:86-126); everything else is the LLM-pipeline
+extension built on it.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from siddhi_io_cdc_spark.functions.export import (
@@ -64,13 +64,14 @@ from siddhi_io_cdc_spark.functions.similarity import (
     _hadoop_read_text,
     _hadoop_write_text,
 )
-from siddhi_io_cdc_spark.streaming.bm25_index import _swap_doc_rows
+from siddhi_io_cdc_spark.streaming.bm25_index import _state_table
 from siddhi_io_cdc_spark.streaming.ivf_index import (
+    _fenced_adapter,
     _hadoop_delete,
     _hadoop_exists,
     _marker_path,
 )
-from siddhi_io_cdc_spark.streaming.mor import _has_parquet
+from siddhi_io_cdc_spark.streaming.mor import _has_parquet, mor_init
 
 GBUCKET_COL = "gbucket"
 DBUCKET_COL = "dbucket"
@@ -110,30 +111,20 @@ def write_ngram_state(
     id_col: str = "doc_id",
     nbuckets: int = 64,
     doc_buckets: int = 16,
-    layout: str = "cow",
     compact_every: int = 16,
     minor_every: int = 0,
     retain_cycles: int = 1,
 ) -> None:
     """Initialize the maintained LM state from a corpus snapshot.
 
-    ``layout`` picks the maintenance strategy:
-
-    - ``"cow"`` (copy-on-write, the original): each batch rewrites the
-      touched gram-bucket partitions. Honest only while the batch's gram
-      hashes MISS most buckets — a ~100-doc batch at n=5 touches all 64,
-      so per-batch cost grows with the corpus (measured, BASELINE.md r12).
-    - ``"mor"`` (merge-on-read, ``streaming/mor.py``): each batch appends
-      O(batch) delta rows + id tombstones; readers reconstruct the live
-      view; compaction folds deltas every ``compact_every`` batches. The
-      apply path is O(batch) regardless of corpus size — the layout to
-      run at 100 TB. Update/delete batches do NOT need before images
-      (tombstones shadow by id).
+    Maintenance is merge-on-read (``streaming/mor.py``): each batch
+    appends O(batch) delta rows + id tombstones; readers reconstruct the
+    live view; compaction folds deltas every ``compact_every`` batches.
+    The apply path is O(batch) regardless of corpus size. Update/delete
+    batches do NOT need before images (tombstones shadow by id).
     """
     if n < 2:
         raise ValueError(f"n must be >= 2 (got {n})")
-    if layout not in ("cow", "mor"):
-        raise ValueError(f"layout must be 'cow' or 'mor' (got {layout!r})")
     base = path.rstrip("/")
     # Re-initializing over an existing path starts a NEW state lineage:
     # old batch markers belong to the previous lineage and would silently
@@ -145,27 +136,19 @@ def write_ngram_state(
         json.dumps(
             {"kind": "ngram", "n": n, "nbuckets": nbuckets,
              "doc_buckets": doc_buckets, "text_col": text_col,
-             "id_col": id_col, "layout": layout}
+             "id_col": id_col}
         ),
     )
-    if layout == "mor":
-        from siddhi_io_cdc_spark.streaming.mor import mor_init
-
-        mor_init(
-            spark, base,
-            {
-                "grams": {"id_col": id_col, "part_col": GBUCKET_COL},
-                "docs": {"id_col": id_col, "part_col": DBUCKET_COL},
-            },
-            compact_every=compact_every,
-            minor_every=minor_every,
-            retain_cycles=retain_cycles,
-        )
-    else:
-        # a cow re-init over a previous mor lineage must drop its pointer
-        _hadoop_delete(spark, base + "/_mor.json")
-        _hadoop_delete(spark, base + "/_delta")
-        _hadoop_delete(spark, base + "/_tomb")
+    mor_init(
+        spark, base,
+        {
+            "grams": {"id_col": id_col, "part_col": GBUCKET_COL},
+            "docs": {"id_col": id_col, "part_col": DBUCKET_COL},
+        },
+        compact_every=compact_every,
+        minor_every=minor_every,
+        retain_cycles=retain_cycles,
+    )
     tf = _doc_gram_tf(df, n, id_col, text_col)
     grams = base + "/grams"
     (
@@ -195,16 +178,6 @@ def write_ngram_state(
     roster.write.mode("overwrite").partitionBy(DBUCKET_COL).parquet(base + "/docs")
 
 
-def _state_table(spark, base: str, table: str) -> DataFrame:
-    """Read a maintained-state table under either layout: plain partitioned
-    parquet (cow) or the live merge-on-read view (mor)."""
-    from siddhi_io_cdc_spark.streaming.mor import is_mor, mor_live
-
-    if is_mor(spark, base):
-        return mor_live(spark, base, table)
-    return spark.read.parquet(base + "/" + table)
-
-
 def read_ngram_counts(spark, path: str) -> DataFrame:
     """The maintained LM count table ``(w1..wn, cnt)`` — equal, row for
     row, to the batch top-order aggregate over the changelog's corpus."""
@@ -227,129 +200,40 @@ def apply_changelog_ngram(
     batch_id=None,
     expect_epoch: int | None = None,
 ) -> int | None:
-    """Apply one flattened-changelog micro-batch to the maintained LM.
+    """Apply one flattened-changelog micro-batch to the maintained LM:
+    O(batch) writes, no state read.
 
     Per key, only the latest event by ``seq_col`` decides the final state
     (``apply_changelog`` semantics); 'read' snapshot rows upsert like
-    inserts. Update/delete rows must carry a non-NULL
-    ``before_<text_col>``: the dropped grams' buckets are derivable only
-    from the OLD text.
+    inserts. Tombstoning every batch key's prior rows makes before images
+    unnecessary: the id shadows the old grams wherever their buckets are,
+    which also covers intra-batch update chains. Sequences come from
+    ``mor_begin_apply``: a streamed batch reuses its recorded seq on
+    replay (byte-idempotent), an ad-hoc apply allocates above the
+    persisted high water.
 
-    MOR layout: returns the writer epoch this apply claimed (thread it
-    back as ``expect_epoch`` on the next batch to fence alternating
-    writers — see :func:`mor.mor_begin_apply`); COW layout and
-    marker-skipped replays return None.
+    Returns the writer epoch this apply claimed (thread it back as
+    ``expect_epoch`` on the next batch to fence alternating writers — see
+    :func:`mor.mor_begin_apply`); a marker-skipped replay returns None. A
+    state written before the states were maintained merge-on-read (no
+    ``_mor.json``) is refused: rebuild it with ``write_ngram_state``.
     """
     from siddhi_io_cdc_spark.operators.mutate import rekey_deletes
+    from siddhi_io_cdc_spark.streaming.mor import (
+        latest_per_key, maybe_autocompact, mor_append, mor_begin_apply,
+        require_mor,
+    )
 
     base = path.rstrip("/")
+    require_mor(spark, base, "write_ngram_state")
     if batch_id is not None and _hadoop_exists(spark, _marker_path(base, batch_id)):
         return None
     meta = json.loads(_hadoop_read_text(spark, base + "/" + _META))
     n, nbuckets = meta["n"], meta["nbuckets"]
     doc_buckets = meta["doc_buckets"]
     text_col, id_col = meta["text_col"], meta["id_col"]
-    before = f"before_{text_col}"
 
     batch_df = rekey_deletes(batch_df, [id_col], op_col)
-    if meta.get("layout") == "mor":
-        return _apply_ngram_mor(
-            spark, batch_df, base, n, nbuckets, doc_buckets, text_col,
-            id_col, seq_col, op_col, batch_id, expect_epoch,
-        )
-    movers = batch_df.where(F.col(op_col).isin("update", "delete"))
-    if before not in batch_df.columns:
-        if movers.limit(1).count():
-            raise ValueError(
-                f"batch contains update/delete ops but no '{before}' column: "
-                "the dropped grams' buckets are unknowable without the old "
-                "text. Flatten the stream with the update projection."
-            )
-    elif movers.where(F.col(before).isNull()).limit(1).count():
-        raise ValueError(
-            f"batch contains update/delete rows with a NULL '{before}' "
-            "before image: the old grams are unknowable, so stale counts "
-            "would survive. Emit whole before images."
-        )
-
-    latest = (
-        batch_df.withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy(F.col(seq_col).desc())
-            ),
-        )
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    batch_ids = latest.select(id_col).distinct()
-
-    # NOT persisted: the gram explode feeds three consumers (the
-    # touched-bucket collect, the partition merge, the roster recount) but
-    # it is narrow per-row work that pipelines into each — measured A/B at
-    # sf0.1 (20%-corpus insert batch): recompute 9.0-11.2 s/batch vs
-    # persist 19.7-21.7 s/batch; materializing the cache costs more than
-    # both recomputations together
-    new_tf = _doc_gram_tf(
-        latest.where(F.col(op_col) != "delete"), n, id_col, text_col
-    ).withColumn(GBUCKET_COL, _gbucket(n, nbuckets))
-
-    # Touched gram buckets: the new grams' buckets plus the buckets of
-    # EVERY mover's before-image grams — in an intra-batch chain (update
-    # A->B then B->C) the pre-batch rows live in buckets derived from A,
-    # which only the earliest before image covers; the union over all
-    # movers is a superset (extra buckets merely widen the replace), the
-    # same shape as the BM25 applier's old-term set.
-    touched = new_tf.select(F.col(GBUCKET_COL).alias("b"))
-    if before in batch_df.columns:
-        old_tf = _doc_gram_tf(movers, n, id_col, before)
-        touched = touched.unionByName(
-            old_tf.select(_gbucket(n, nbuckets).alias("b"))
-        )
-    _swap_doc_rows(spark, base + "/grams", GBUCKET_COL, touched, batch_ids, id_col, new_tf)
-
-    # roster: replace the batch docs' rows in their doc buckets (deletes
-    # simply vanish — their ids are anti-joined out and re-add nothing).
-    upsert_ids = latest.where(F.col(op_col) != "delete").select(id_col)
-    counted = new_tf.groupBy(id_col).agg(
-        F.sum("tf").cast("bigint").alias("__c")
-    )
-    new_roster = (
-        upsert_ids.join(counted, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("__c"), F.lit(0)).cast("bigint").alias("n_ngrams"),
-        )
-        .withColumn(DBUCKET_COL, _dbucket(id_col, doc_buckets))
-    )
-    _swap_doc_rows(
-        spark, base + "/docs", DBUCKET_COL, batch_ids.select(_dbucket(id_col, doc_buckets)),
-        batch_ids, id_col, new_roster,
-    )
-
-    if batch_id is not None:
-        _hadoop_write_text(spark, _marker_path(base, batch_id), "done")
-
-
-def _apply_ngram_mor(
-    spark, batch_df, base, n, nbuckets, doc_buckets, text_col, id_col,
-    seq_col, op_col, batch_id, expect_epoch=None,
-) -> int:
-    """Merge-on-read apply: O(batch) writes, no base-state read.
-
-    Tombstoning every batch key's prior rows makes before images
-    UNNECESSARY here — the id shadows the old grams wherever their buckets
-    are, which also covers intra-batch update chains for free (the COW
-    path needs the earliest mover's before image for its bucket math).
-    Sequences come from ``mor_begin_apply``: a streamed batch reuses its
-    recorded seq on replay (byte-idempotent), an ad-hoc apply allocates
-    above the persisted high water, and the returned writer epoch fences
-    every append/compact against a concurrent maintainer.
-    """
-    from siddhi_io_cdc_spark.streaming.mor import (
-        latest_per_key, maybe_autocompact, mor_append, mor_begin_apply,
-    )
-
     latest = latest_per_key(batch_df, id_col, seq_col)
     batch_ids = latest.select(id_col).distinct()
     upserts = latest.where(F.col(op_col) != "delete")
@@ -440,24 +324,15 @@ def foreach_batch_ngram_lm(
     op_col: str = "operation",
 ):
     """``foreachBatch`` adapter: wire a flattened CDC stream into
-    :func:`apply_changelog_ngram`. Exactly-once per ``batch_id`` via the
-    marker file; crash-and-replay converges (per-bucket state is pure).
-    MOR layout: the adapter remembers the epoch each batch claimed and
-    passes it back, so a foreign writer that claimed the state BETWEEN
-    this maintainer's batches (the alternating-writer gap per-mutation
-    fencing cannot see) fails the next batch loudly."""
-
-    state = {"epoch": None}
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        e = apply_changelog_ngram(
+    :func:`apply_changelog_ngram`. Exactly-once per ``batch_id`` (recorded
+    sequence + marker file). The adapter remembers the epoch each batch
+    claimed and passes it back, so a foreign writer that claimed the state
+    BETWEEN this maintainer's batches (the alternating-writer gap
+    per-mutation fencing cannot see) fails the next batch loudly."""
+    return _fenced_adapter(
+        lambda batch_df, batch_id, epoch: apply_changelog_ngram(
             spark, batch_df, path,
             seq_col=seq_col, op_col=op_col, batch_id=batch_id,
-            expect_epoch=state["epoch"],
+            expect_epoch=epoch,
         )
-        # a marker-skipped replay returns None WITHOUT claiming an epoch;
-        # keep the remembered token so the next live batch stays fenced
-        # (r14 ADVICE: overwriting with None silently degraded the fence)
-        state["epoch"] = e if e is not None else state["epoch"]
-
-    return _apply
+    )

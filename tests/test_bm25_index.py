@@ -12,8 +12,10 @@ from siddhi_io_cdc_spark.functions.retrieval import bm25_topk
 from siddhi_io_cdc_spark.streaming.bm25_index import (
     apply_changelog_bm25,
     bm25_topk_indexed,
+    read_bm25_stats,
     write_bm25_index,
 )
+from siddhi_io_cdc_spark.streaming.mor import mor_live
 
 TERMS = ["spark", "shuffle", "join"]
 
@@ -79,16 +81,15 @@ def test_incremental_apply_matches_fresh_rebuild(spark, index_path):
     assert got == want
 
     # update dropped 'spark' from doc 4: its postings must be gone
-    postings = spark.read.parquet(index_path + "/postings")
+    postings = mor_live(spark, index_path, "postings")
     assert postings.where("doc_id = 4 AND term = 'spark'").count() == 0
     assert postings.where("doc_id = 3").count() == 0  # deleted doc
 
 
 def test_intra_batch_update_chain_drops_pre_batch_postings(spark, index_path):
     """Two updates to one key in one batch: the LATEST event's before image
-    ('gamma ...') is NOT the pre-batch text ('alpha beta ...'), so the
-    pre-batch postings' buckets are derivable only from the EARLIEST
-    mover's before image. The touched set must cover them or stale 'alpha'
+    ('gamma ...') is NOT the pre-batch text ('alpha beta ...'). Every
+    pre-batch posting of the key must still be shadowed, or stale 'alpha'
     postings survive and the probe diverges from a fresh scan."""
     seed = [(0, "alpha beta common"), (1, "common filler text")]
     write_bm25_index(spark, _corpus(spark, seed), index_path, nbuckets=64, doc_buckets=4)
@@ -101,7 +102,7 @@ def test_intra_batch_update_chain_drops_pre_batch_postings(spark, index_path):
     )
     apply_changelog_bm25(spark, index_path, batch, batch_id=1)
 
-    postings = spark.read.parquet(index_path + "/postings")
+    postings = mor_live(spark, index_path, "postings")
     assert postings.where("doc_id = 0 AND term IN ('alpha','beta','gamma')").count() == 0
 
     final_rows = [(0, "delta common"), (1, "common filler text")]
@@ -112,8 +113,8 @@ def test_intra_batch_update_chain_drops_pre_batch_postings(spark, index_path):
 
 
 def test_intra_batch_update_then_delete_chain(spark, index_path):
-    """update A->B then delete(B) for one key in one batch: A's buckets come
-    only from the first mover's before image."""
+    """update A->B then delete(B) for one key in one batch: A's postings,
+    which only the first mover's before image names, must be gone."""
     seed = [(0, "alpha solo"), (1, "spark text")]
     write_bm25_index(spark, _corpus(spark, seed), index_path, nbuckets=64, doc_buckets=4)
     batch = _changelog(
@@ -124,7 +125,7 @@ def test_intra_batch_update_then_delete_chain(spark, index_path):
         ],
     )
     apply_changelog_bm25(spark, index_path, batch, batch_id=1)
-    postings = spark.read.parquet(index_path + "/postings")
+    postings = mor_live(spark, index_path, "postings")
     assert postings.where("doc_id = 0").count() == 0
     want = _ranking(bm25_topk(_corpus(spark, [(1, "spark text")]), ["alpha", "spark"], k=5))
     got = _ranking(bm25_topk_indexed(spark, index_path, ["alpha", "spark"], k=5))
@@ -137,7 +138,7 @@ def test_token_less_documents_count_toward_corpus_stats(spark, index_path):
     docs/ table needs its dl=0 row for probe/scan parity."""
     docs = _corpus(spark, DOCS + [(6, ""), (7, "   ")])
     write_bm25_index(spark, docs, index_path, nbuckets=8, doc_buckets=4)
-    d = spark.read.parquet(index_path + "/docs")
+    d = mor_live(spark, index_path, "docs")
     assert d.count() == 8
     assert d.where("dl = 0").count() == 2
     got = _ranking(bm25_topk_indexed(spark, index_path, TERMS, k=10))
@@ -147,7 +148,7 @@ def test_token_less_documents_count_toward_corpus_stats(spark, index_path):
     # an update TO empty text keeps the doc in the stats with dl=0
     batch = _changelog(spark, [(0, "", DOCS[0][1], "update", 10)])
     apply_changelog_bm25(spark, index_path, batch, batch_id=1)
-    d = spark.read.parquet(index_path + "/docs")
+    d = mor_live(spark, index_path, "docs")
     assert d.where("doc_id = 0 AND dl = 0").count() == 1
     final = [(0, "")] + DOCS[1:] + [(6, ""), (7, "   ")]
     got = _ranking(bm25_topk_indexed(spark, index_path, TERMS, k=10))
@@ -156,6 +157,8 @@ def test_token_less_documents_count_toward_corpus_stats(spark, index_path):
 
 
 def test_replay_is_idempotent(spark, index_path):
+    import os
+
     docs = _corpus(spark, DOCS)
     write_bm25_index(spark, docs, index_path, nbuckets=8, doc_buckets=4)
     batch = _changelog(
@@ -166,8 +169,10 @@ def test_replay_is_idempotent(spark, index_path):
     before = _ranking(bm25_topk_indexed(spark, index_path, TERMS, k=10))
     # clean re-run: marker short-circuits
     apply_changelog_bm25(spark, index_path, batch, batch_id=7)
-    # crash-replay without marker: converges to the same state
-    apply_changelog_bm25(spark, index_path, batch, batch_id=None)
+    # crash-replay without marker: the batch reuses its recorded sequence,
+    # so the postings and the stats delta land once
+    os.remove(os.path.join(index_path, "_batches", "7"))
+    apply_changelog_bm25(spark, index_path, batch, batch_id=7)
     after = _ranking(bm25_topk_indexed(spark, index_path, TERMS, k=10))
     assert after == before
 
@@ -294,12 +299,10 @@ def test_hybrid_from_maintained_indexes(spark, tmp_path):
 
 
 def test_stats_cache_is_exact_derived_state(spark, index_path):
-    """The cached corpus scalars equal the docs-table aggregate after every
-    apply, and deleting the cache changes nothing in probe results (the
-    probe falls back to the aggregate — same two BIGINTs)."""
-    import json as _json
-
-    from siddhi_io_cdc_spark.functions.similarity import _hadoop_read_text
+    """The corpus scalars (the cache plus the pending stats deltas) equal
+    the docs-table aggregate after every apply, and deleting the cache
+    changes nothing in probe results (the probe falls back to the
+    aggregate — same two BIGINTs)."""
     from siddhi_io_cdc_spark.streaming.ivf_index import _hadoop_delete
 
     docs = _corpus(spark, DOCS)
@@ -310,11 +313,11 @@ def test_stats_cache_is_exact_derived_state(spark, index_path):
     )
     apply_changelog_bm25(spark, index_path, batch, batch_id=1)
 
-    cached = _json.loads(_hadoop_read_text(spark, index_path + "/_stats.json"))
-    d = spark.read.parquet(index_path + "/docs")
+    n_docs, total_tokens = read_bm25_stats(spark, index_path)
+    d = mor_live(spark, index_path, "docs")
     agg = d.groupBy().sum("dl").collect()[0][0]
-    assert cached["n_docs"] == d.count() == 6
-    assert cached["total_tokens"] == agg
+    assert n_docs == d.count() == 6
+    assert total_tokens == agg
 
     with_cache = _ranking(bm25_topk_indexed(spark, index_path, TERMS, k=10))
     _hadoop_delete(spark, index_path + "/_stats.json")

@@ -917,9 +917,11 @@ def test_ivf_tied_centroid_dots_probe_identical_cells(spark, tmp_path):
     assert sorted(r.vec_id for r in mat.collect()) == got
 
     # and the probed-cell set itself matches on the materialized layout
+    from siddhi_io_cdc_spark.streaming.mor import mor_live
+
     cells = {
         r.cell
-        for r in spark.read.parquet(path)
+        for r in mor_live(spark, path, "vectors")
         .where(F.col("vec_id").isin(got))
         .select("cell")
         .collect()

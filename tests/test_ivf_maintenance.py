@@ -17,6 +17,7 @@ from siddhi_io_cdc_spark.streaming.ivf_index import (
     foreach_batch_ivf_index,
     load_codebook,
 )
+from siddhi_io_cdc_spark.streaming.mor import mor_live
 
 DIM, NLIST = 8, 8
 
@@ -30,16 +31,21 @@ def _vecs(spark, lo, hi, gen=0):
     )
 
 
+def _live(spark, path):
+    return mor_live(spark, path, "vectors")
+
+
 def _state(spark, path):
     return {
         (r.vec_id, tuple(round(float(x), 5) for x in r.embedding))
-        for r in spark.read.parquet(path).drop("cell").collect()
+        for r in _live(spark, path).drop("cell").collect()
     }
 
 
 def _changelog(upserts, deletes=None, op="insert", old=None, ts=1):
-    """Flattened multi-op events: upserts with op, optional deletes carrying
-    the before image from `old` (required for cell discovery)."""
+    """Flattened multi-op events, shaped as flatten emits them: upserts
+    with op and the before image from `old`, optional deletes carrying
+    theirs."""
     ev = upserts.select(
         "vec_id", "embedding",
         F.lit(op).alias("operation"), F.lit(ts).cast("long").alias("ts_ms"),
@@ -122,45 +128,28 @@ def test_ivf_maintenance_replay_idempotent_and_marker(spark, tmp_path):
 
 
 def test_ivf_maintenance_crash_half_committed_converges(spark, tmp_path):
-    """Simulate a crash where the partition swap committed only SOME
-    touched cells (no marker): restore a subset of cell dirs from a
-    pre-batch snapshot, replay, assert convergence to the fully-applied
-    state."""
+    """Simulate a crash where the apply committed its delta but not its
+    tombstones or marker: the old images of the deleted keys are live
+    again. Replaying the batch id reuses its recorded sequence and
+    converges to the fully-applied state."""
     import shutil
 
     path = str(tmp_path / "ivf")
     write_ivf_index(_vecs(spark, 0, 150), path, nlist=NLIST)
-    pre = str(tmp_path / "pre")
-    shutil.copytree(path, pre)
-
     batch = _changelog(
         _vecs(spark, 150, 180), op="insert",
         deletes=_vecs(spark, 20, 40), ts=9,
     )
-    apply_changelog_ivf(spark, path, batch, batch_id=None)
+    apply_changelog_ivf(spark, path, batch, batch_id=77)
     want = _state(spark, path)
 
-    # "crash": half the cell partitions revert to their pre-batch content
-    cells = sorted(d for d in os.listdir(path) if d.startswith("cell="))
-    for d in cells[: len(cells) // 2]:
-        shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-        if os.path.isdir(os.path.join(pre, d)):
-            shutil.copytree(os.path.join(pre, d), os.path.join(path, d))
+    # "crash": the tombstone write and the marker never landed
+    shutil.rmtree(os.path.join(path, "_tomb"))
+    os.remove(os.path.join(path, "_batches", "77"))
     assert _state(spark, path) != want  # genuinely half-applied
 
     apply_changelog_ivf(spark, path, batch, batch_id=77)  # replay
     assert _state(spark, path) == want
-
-
-def test_ivf_maintenance_requires_before_image(spark, tmp_path):
-    path = str(tmp_path / "ivf")
-    write_ivf_index(_vecs(spark, 0, 50), path, nlist=NLIST)
-    bad = _vecs(spark, 0, 5).select(
-        "vec_id", "embedding",
-        F.lit("update").alias("operation"), F.lit(1).cast("long").alias("ts_ms"),
-    )
-    with pytest.raises(ValueError, match="before_embedding"):
-        apply_changelog_ivf(spark, path, bad)
 
 
 def test_foreach_batch_ivf_index_stream(spark, tmp_path):
@@ -283,7 +272,7 @@ def test_rag_ingest_changelog_matches_rebuild(spark, tmp_path):
     # the shortened docs really did shrink (stale-chunk deletion exercised)
     per_doc = {
         r.d: r.n
-        for r in spark.read.parquet(path)
+        for r in _live(spark, path)
         .groupBy(F.floor(F.col("vec_id") / 10_000).alias("d"))
         .agg(F.count("*").alias("n")).collect()
     }
@@ -303,21 +292,6 @@ def test_rag_ingest_requires_before_text(spark, tmp_path):
                     F.lit(1).cast("long").alias("ts_ms"))
     with pytest.raises(ValueError, match="before_text"):
         chunk_embedding_changelog(bad)
-
-
-def test_ivf_maintenance_rejects_null_before_image(spark, tmp_path):
-    """A moving op whose before_<vec> VALUE is NULL (column present) must
-    raise, not silently leave the stale row in its old cell — the
-    probe-parity-with-rebuild contract depends on knowing the old cell."""
-    path = str(tmp_path / "ivf")
-    write_ivf_index(_vecs(spark, 0, 50), path, nlist=NLIST)
-    bad = _vecs(spark, 0, 5, gen=1).select(
-        "vec_id", "embedding",
-        F.lit("update").alias("operation"), F.lit(1).cast("long").alias("ts_ms"),
-        F.lit(None).cast("array<float>").alias("before_embedding"),
-    )
-    with pytest.raises(ValueError, match="NULL"):
-        apply_changelog_ivf(spark, path, bad)
 
 
 def test_rag_chunk_id_stride_overflow_raises(spark, tmp_path):

@@ -13,6 +13,7 @@ from siddhi_io_cdc_spark.functions.similarity import (
     probe_ivfpq_index,
     write_ivfpq_index,
 )
+from siddhi_io_cdc_spark.streaming.mor import mor_live
 
 
 @pytest.fixture(scope="module")
@@ -88,7 +89,7 @@ def test_codebooks_round_trip(spark, index):
 
 def test_stored_cells_match_ivf_assign(spark, index):
     path, centroids, _codebooks, emb = index
-    stored = spark.read.parquet(path).select("vec_id", "cell")
+    stored = mor_live(spark, path, "vectors").select("vec_id", "cell")
     recomputed = emb.select(
         "vec_id", ivf_assign(F.col("embedding"), centroids).alias("cell2")
     )
@@ -142,7 +143,7 @@ def test_changelog_maintains_pq_codes(spark, tmp_path):
     batch = ev_u.unionByName(ev_i).unionByName(ev_d)
     apply_changelog_ivf(spark, path, batch, batch_id=1)
 
-    stored = spark.read.parquet(path)
+    stored = mor_live(spark, path, "vectors")
     assert stored.where(F.col("pq_code").isNull()).count() == 0
     bad = stored.where(
         F.col("pq_code") != pq_assign(F.col("embedding"), codebooks)

@@ -1,13 +1,12 @@
 """Merge-on-read state layout (streaming/mor.py): the O(batch) apply path
-for the three CDC-maintained indexes.
+of the CDC-maintained indexes.
 
-Each applier's MOR mode must agree exactly with a fresh rebuild over the
+Each applier must agree exactly with a fresh rebuild over the
 post-changelog corpus — through update chains, transient insert-then-
-delete keys, missing before images (legal under mor except bm25), the
-compaction pointer swap, and crash-replay. The COW twins of these
-equivalences live in test_bm25_index.py / test_ngram_lm_stream.py /
-test_ivf_maintenance.py; this file pins that the layouts are
-interchangeable to every reader.
+delete keys, missing before images (legal except for bm25), the
+compaction pointer swap, and crash-replay. An index written before the
+indexes were maintained merge-on-read (no ``_mor.json``) stays readable
+and is refused by the appliers.
 """
 
 import random
@@ -75,7 +74,6 @@ def test_ngram_mor_apply_equals_rebuild(spark, tmp_path):
     state, fresh = str(tmp_path / "mor"), str(tmp_path / "fresh")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     apply_changelog_ngram(
         spark, spark.createDataFrame(CHANGELOG, SCHEMA), state, batch_id=0
@@ -92,13 +90,12 @@ def test_ngram_mor_apply_equals_rebuild(spark, tmp_path):
 
 
 def test_ngram_mor_accepts_batches_without_before_images(spark, tmp_path):
-    """Tombstones shadow by id, so MOR (unlike COW) needs no before image —
+    """Tombstones shadow by id, so the applier needs no before image —
     an update/delete-only stream from a source that cannot emit old rows
     still maintains exact state."""
     state, fresh = str(tmp_path / "mor"), str(tmp_path / "fresh")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     batch = spark.createDataFrame(
         [(3, "brand new text row", "update", 10), (4, None, "delete", 11)],
@@ -120,7 +117,6 @@ def test_ngram_mor_compaction_and_replay(spark, tmp_path):
     state = str(tmp_path / "mor")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     batch = spark.createDataFrame(CHANGELOG, SCHEMA)
     apply_changelog_ngram(spark, batch, state, batch_id=0)
@@ -141,7 +137,7 @@ def test_ngram_mor_autocompacts_at_threshold(spark, tmp_path):
     state = str(tmp_path / "mor")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=2,
+        compact_every=2,
     )
     b1 = spark.createDataFrame(
         [(41, "one new doc", None, "insert", 1)], SCHEMA
@@ -170,7 +166,6 @@ def test_bm25_mor_probe_and_stats_match_rebuild(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     write_bm25_index(
         spark, _corpus(spark, DOCS), idx, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     apply_changelog_bm25(
         spark, idx, spark.createDataFrame(CHANGELOG, SCHEMA), batch_id=0
@@ -192,7 +187,6 @@ def test_bm25_mor_stats_survive_chains_and_transients(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     write_bm25_index(
         spark, _corpus(spark, DOCS), idx, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     batch = spark.createDataFrame(
         [
@@ -216,7 +210,6 @@ def test_bm25_mor_compaction_folds_stats(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     write_bm25_index(
         spark, _corpus(spark, DOCS), idx, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     apply_changelog_bm25(
         spark, idx, spark.createDataFrame(CHANGELOG, SCHEMA), batch_id=0
@@ -237,7 +230,6 @@ def test_bm25_mor_still_requires_before_images(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     write_bm25_index(
         spark, _corpus(spark, DOCS), idx, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     batch = spark.createDataFrame(
         [(3, "new text", "update", 10)],
@@ -261,7 +253,7 @@ def vecs():
 def test_ivf_mor_probe_matches_rebuild(spark, tmp_path, vecs):
     emb = spark.createDataFrame(vecs, "vec_id LONG, embedding ARRAY<FLOAT>")
     idx, fresh = str(tmp_path / "ivf"), str(tmp_path / "fresh")
-    write_ivf_index(emb, idx, nlist=6, seed=42, layout="mor")
+    write_ivf_index(emb, idx, nlist=6, seed=42)
 
     rows = (
         [(i, [-x for x in vecs[i][1]], "update", 10 + i) for i in range(10)]
@@ -302,7 +294,7 @@ def test_ivf_mor_delta_probe_is_partition_pruned(spark, tmp_path, vecs):
     the delta scans must show partition filters on `cell`."""
     emb = spark.createDataFrame(vecs, "vec_id LONG, embedding ARRAY<FLOAT>")
     idx = str(tmp_path / "ivf")
-    write_ivf_index(emb, idx, nlist=6, seed=42, layout="mor")
+    write_ivf_index(emb, idx, nlist=6, seed=42)
     batch = spark.createDataFrame(
         [(300, vecs[0][1], "insert", 1)],
         "vec_id LONG, embedding ARRAY<FLOAT>, operation STRING, ts_ms LONG",
@@ -323,12 +315,11 @@ def test_ivf_mor_delta_probe_is_partition_pruned(spark, tmp_path, vecs):
 
 def test_ivf_mor_rekeys_multiop_flatten_deletes(spark, tmp_path, vecs):
     """Multi-op flatten fills a delete's after image with type defaults
-    (vec_id=0): the mor applier must tombstone the BEFORE-image key, not
-    key 0 — the cow path inherits this from apply_changelog's internal
-    re-keying, the mor path re-keys explicitly."""
+    (vec_id=0): the applier must tombstone the BEFORE-image key, not
+    key 0."""
     emb = spark.createDataFrame(vecs, "vec_id LONG, embedding ARRAY<FLOAT>")
     idx = str(tmp_path / "ivf")
-    write_ivf_index(emb, idx, nlist=6, seed=42, layout="mor")
+    write_ivf_index(emb, idx, nlist=6, seed=42)
     batch = spark.createDataFrame(
         [(0, None, 7, vecs[7][1], "delete", 1)],  # after-image key = default 0
         "vec_id LONG, embedding ARRAY<FLOAT>, before_vec_id LONG, "
@@ -343,13 +334,46 @@ def test_ivf_mor_rekeys_multiop_flatten_deletes(spark, tmp_path, vecs):
 # ---------------------------------------------------- crash interleavings
 
 
+def test_index_written_before_mor_probes_but_is_not_maintained(spark, tmp_path, vecs):
+    """An index directory with no _mor.json (the plain cell-partitioned
+    layout of an index written before the indexes were maintained
+    merge-on-read) still probes; every applier refuses it and names the
+    rebuild."""
+    import json
+
+    from siddhi_io_cdc_spark.functions.similarity import ivf_assign
+
+    emb = spark.createDataFrame(vecs, "vec_id LONG, embedding ARRAY<FLOAT>")
+    old, fresh = str(tmp_path / "old"), str(tmp_path / "fresh")
+    cents = write_ivf_index(emb, fresh, nlist=6, seed=42, assign_engine="sql")
+    emb.withColumn("cell", ivf_assign(F.col("embedding"), cents)).write.partitionBy(
+        "cell"
+    ).parquet(old)
+    with open(old + "/_ivf_centroids.json", "w") as f:
+        json.dump([[float(x) for x in c] for c in cents], f)
+    q = vecs[3][1]
+    got = sorted(map(tuple, probe_ivf_index(spark, old, q, k=5, nprobe=3).collect()))
+    want = sorted(map(tuple, probe_ivf_index(spark, fresh, q, k=5, nprobe=3).collect()))
+    assert got == want and len(got) == 5
+
+    batch = spark.createDataFrame(
+        [(100, vecs[0][1], "insert", 1)],
+        "vec_id LONG, embedding ARRAY<FLOAT>, operation STRING, ts_ms LONG",
+    )
+    with pytest.raises(ValueError, match="no _mor.json.*write_ivf_index"):
+        apply_changelog_ivf(spark, old, batch)
+    with pytest.raises(ValueError, match="write_bm25_index"):
+        apply_changelog_bm25(spark, old, batch)
+    with pytest.raises(ValueError, match="write_ngram_state"):
+        apply_changelog_ngram(spark, batch, old)
+
+
 def test_mor_compact_survives_orphan_from_crashed_attempt(spark, tmp_path):
     """Crash BEFORE the pointer write leaves a half-written versioned dir;
     the next compaction must clobber the orphan, not absorb it."""
     state = str(tmp_path / "mor")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     apply_changelog_ngram(
         spark, spark.createDataFrame(CHANGELOG, SCHEMA), state, batch_id=0
@@ -373,7 +397,6 @@ def test_mor_reader_ignores_stale_dirs_after_pointer_swap(spark, tmp_path):
     state = str(tmp_path / "mor")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     apply_changelog_ngram(
         spark, spark.createDataFrame(CHANGELOG, SCHEMA), state, batch_id=0
@@ -410,7 +433,6 @@ def test_foreach_batch_ngram_mor_stream(spark, tmp_path):
     state = str(tmp_path / "mor")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     src = str(tmp_path / "events")
     os.makedirs(src)
@@ -467,7 +489,7 @@ def test_ivfpq_mor_probe_matches_rebuild(spark, tmp_path, vecs):
 
     emb = spark.createDataFrame(vecs, "vec_id LONG, embedding ARRAY<FLOAT>")
     idx, fresh = str(tmp_path / "pq"), str(tmp_path / "pqf")
-    write_ivfpq_index(emb, idx, nlist=6, pq_m=4, pq_k=8, seed=42, layout="mor")
+    write_ivfpq_index(emb, idx, nlist=6, pq_m=4, pq_k=8, seed=42)
     rows = (
         [(i, [-x for x in vecs[i][1]], "update", 10 + i) for i in range(8)]
         + [(i, None, "delete", 30 + i) for i in range(8, 12)]
@@ -502,7 +524,6 @@ def test_mor_compaction_of_fully_emptied_table(spark, tmp_path):
     seed = DOCS[:4]
     write_ngram_state(
         spark, _corpus(spark, seed), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     wipe = spark.createDataFrame(
         [(i, None, t, "delete", 10 + i) for i, t in seed], SCHEMA
@@ -577,7 +598,6 @@ def test_bm25_mor_stats_fold_crash_window(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     write_bm25_index(
         spark, _corpus(spark, DOCS), idx, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     apply_changelog_bm25(
         spark, idx, spark.createDataFrame(CHANGELOG, SCHEMA), batch_id=0
@@ -603,7 +623,7 @@ def test_bm25_mor_autocompact_keeps_stats_exact(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     write_bm25_index(
         spark, _corpus(spark, DOCS), idx, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=2,
+        compact_every=2,
     )
     b1 = spark.createDataFrame([(70, "first new doc here", None, "insert", 1)], SCHEMA)
     b2 = spark.createDataFrame([(71, "second new doc", None, "insert", 2)], SCHEMA)
@@ -679,7 +699,7 @@ def test_ngram_mor_string_doc_ids(spark, tmp_path):
     corpus = spark.createDataFrame(docs, "doc_id STRING, text STRING")
     state, fresh = str(tmp_path / "mor"), str(tmp_path / "fresh")
     write_ngram_state(
-        spark, corpus, state, n=3, nbuckets=8, doc_buckets=4, layout="mor"
+        spark, corpus, state, n=3, nbuckets=8, doc_buckets=4
     )
     batch = spark.createDataFrame(
         [("doc-2", "replacement text row", "update", 1),
@@ -745,7 +765,7 @@ def test_ngram_mor_without_batch_id_allocates_next_seq(spark, tmp_path):
     state, fresh = str(tmp_path / "mor"), str(tmp_path / "fresh")
     write_ngram_state(
         spark, _corpus(spark, DOCS[:6]), state, n=3, nbuckets=8,
-        doc_buckets=4, layout="mor",
+        doc_buckets=4,
     )
     b1 = spark.createDataFrame(
         [(50, "first ad hoc doc", None, "insert", 1)], SCHEMA

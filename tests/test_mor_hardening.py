@@ -76,7 +76,7 @@ def test_adhoc_then_streamed_apply_do_not_collide(spark, tmp_path):
     state, fresh = str(tmp_path / "mor"), str(tmp_path / "fresh")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=0,
+        compact_every=0,
     )
     b0 = spark.createDataFrame([(30, "aa bb cc dd", None, "insert", 1)], SCHEMA)
     adhoc = spark.createDataFrame([(31, "ee ff gg hh", None, "insert", 2)], SCHEMA)
@@ -101,7 +101,7 @@ def test_streamed_replay_reuses_recorded_seq(spark, tmp_path):
     state = str(tmp_path / "mor")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=0,
+        compact_every=0,
     )
     b0 = spark.createDataFrame([(30, "aa bb cc dd", None, "insert", 1)], SCHEMA)
     apply_changelog_ngram(spark, b0, state, batch_id=0)
@@ -270,7 +270,6 @@ def test_bm25_mor_insert_only_batch_without_before_column(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     write_bm25_index(
         spark, _corpus(spark, DOCS), idx, nbuckets=8, doc_buckets=4,
-        layout="mor",
     )
     batch = spark.createDataFrame(
         [
@@ -375,7 +374,7 @@ def test_minor_then_major_equals_rebuild(spark, tmp_path):
     state, fresh = str(tmp_path / "mor"), str(tmp_path / "fresh")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=0,
+        compact_every=0,
     )
     b0 = spark.createDataFrame(
         [(5, "aa bb cc dd ee", DOCS[5][1], "update", 10)], SCHEMA
@@ -427,7 +426,7 @@ def test_bm25_minor_compact_stats_and_probe(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     write_bm25_index(
         spark, _corpus(spark, DOCS), idx, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=0,
+        compact_every=0,
     )
     ch1 = spark.createDataFrame(
         [(5, "aa bb cc dd ee", DOCS[5][1], "update", 10)], SCHEMA
@@ -529,7 +528,7 @@ def test_autocompact_minor_between_majors_ngram(spark, tmp_path):
     state, fresh = str(tmp_path / "mor"), str(tmp_path / "fresh")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=4, minor_every=2,
+        compact_every=4, minor_every=2,
     )
     final = list(DOCS)
     for i in range(4):
@@ -560,7 +559,7 @@ def test_autocompact_minor_bm25_keeps_stats_exact(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     write_bm25_index(
         spark, _corpus(spark, DOCS), idx, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=0, minor_every=2,
+        compact_every=0, minor_every=2,
     )
     final = list(DOCS)
     for i in range(4):
@@ -593,7 +592,7 @@ def test_foreach_batch_stream_with_auto_minor_folds(spark, tmp_path):
     state = str(tmp_path / "mor")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=64, minor_every=2,
+        compact_every=64, minor_every=2,
     )
     src = str(tmp_path / "events")
     os.makedirs(src)
@@ -648,7 +647,7 @@ def test_autocompact_minor_ivf_probe_exact(spark, tmp_path):
     emb = spark.createDataFrame(vecs, "vec_id LONG, embedding ARRAY<DOUBLE>")
     idx = str(tmp_path / "ivf")
     cents = write_ivf_index(
-        emb, idx, nlist=6, seed=42, layout="mor",
+        emb, idx, nlist=6, seed=42,
         compact_every=0, minor_every=2, assign_engine="sql",
     )
     final = dict(vecs)
@@ -683,7 +682,7 @@ def test_adhoc_apply_crash_between_tables_heals_on_rerun(spark, tmp_path):
     state, fresh = str(tmp_path / "mor"), str(tmp_path / "fresh")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=0,
+        compact_every=0,
     )
     # simulate the crashed first attempt: ONLY the grams table got its
     # delta (the applier writes grams, then docs) — build the same rows
@@ -978,7 +977,7 @@ def test_alternating_second_maintainer_is_fenced(spark, tmp_path):
     state = str(tmp_path / "mor")
     write_ngram_state(
         spark, _corpus(spark, DOCS), state, n=3, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=0,
+        compact_every=0,
     )
     apply_a = foreach_batch_ngram_lm(spark, state)
     apply_a(spark.createDataFrame(
@@ -1008,6 +1007,33 @@ def test_alternating_second_maintainer_is_fenced(spark, tmp_path):
         [(50, "uu vv ww xx", None, "insert", 6)], SCHEMA), 200)
 
 
+def test_alternating_rag_ingest_maintainer_is_fenced(spark, tmp_path):
+    """The RAG-ingest adapter threads the epoch like the index adapters: a
+    second maintainer's batch between two of this maintainer's batches
+    fails the next one loudly."""
+    from siddhi_io_cdc_spark.functions.similarity import write_ivf_index
+    from siddhi_io_cdc_spark.streaming.ivf_index import foreach_batch_rag_ingest
+
+    idx = str(tmp_path / "rag")
+    emb = spark.range(8).selectExpr(
+        "id AS vec_id",
+        "transform(sequence(1, 16), j -> CAST(hash(id, j) % 100 AS DOUBLE)) AS embedding",
+    )
+    write_ivf_index(emb, idx, nlist=2, compact_every=0)
+
+    def docs(doc_id, ts):
+        return spark.createDataFrame(
+            [(doc_id, f"doc {doc_id} text here", None, "insert", ts)], SCHEMA
+        )
+
+    apply_a = foreach_batch_rag_ingest(spark, idx)
+    apply_a(docs(1, 1), 0)
+    apply_b = foreach_batch_rag_ingest(spark, idx)
+    apply_b(docs(2, 2), 100)
+    with pytest.raises(MorWriterFenced, match="between this maintainer's"):
+        apply_a(docs(3, 3), 1)
+
+
 def test_bm25_minor_fold_refuses_over_in_flight_batch(spark, tmp_path):
     """An out-of-band minor fold racing a crashed-but-unreplayed streamed
     batch must refuse instead of folding it: the fold's stats horizon
@@ -1021,7 +1047,7 @@ def test_bm25_minor_fold_refuses_over_in_flight_batch(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     write_bm25_index(
         spark, _corpus(spark, DOCS), idx, nbuckets=8, doc_buckets=4,
-        layout="mor", compact_every=0,
+        compact_every=0,
     )
     b0 = spark.createDataFrame(
         [(30, "aa bb cc dd", None, "insert", 1)], SCHEMA)

@@ -7,7 +7,7 @@ n-gram counts equal to a fresh build over the model corpus.
 The model is a plain Python dict folded with the same semantics the
 appliers document: per batch, the latest event per key wins; insert/
 update set the text, delete removes the key. Each drawn program is
-applied through ``apply_changelog_ngram`` against a ``layout="mor"``
+applied through ``apply_changelog_ngram`` against a maintained
 state and compared to ``write_ngram_state`` over the final dict — the
 incremental==rebuild equivalence as a law, not an example. Round 13
 widened the program space with the two features that round added:
@@ -72,7 +72,7 @@ def test_mor_random_programs_match_rebuild(spark, program, tmp_path_factory):
         list(model.items()), "doc_id LONG, text STRING"
     )
     write_ngram_state(
-        spark, corpus, state, n=2, nbuckets=4, doc_buckets=2, layout="mor"
+        spark, corpus, state, n=2, nbuckets=4, doc_buckets=2
     )
 
     for batch_no, (events, after_step, adhoc) in enumerate(program):
@@ -105,7 +105,7 @@ def test_mor_random_programs_match_rebuild(spark, program, tmp_path_factory):
             mor_minor_compact(spark, state)
 
     if not model:
-        # fully-emptied corpus: a COW rebuild over zero docs writes no
+        # fully-emptied corpus: a rebuild over zero docs writes no
         # parquet (pre-existing empty-corpus edge), so assert directly
         assert read_ngram_counts(spark, state).count() == 0
         return
@@ -207,7 +207,7 @@ def test_mor_crash_programs_match_rebuild(spark, program, tmp_path_factory):
         list(model.items()), "doc_id LONG, text STRING"
     )
     write_ngram_state(
-        spark, corpus, state, n=2, nbuckets=4, doc_buckets=2, layout="mor"
+        spark, corpus, state, n=2, nbuckets=4, doc_buckets=2
     )
 
     for batch_no, (events, after_step, adhoc) in enumerate(program):

@@ -1,6 +1,6 @@
 """CDC-maintained Kneser-Ney n-gram LM: maintained counts == rebuild,
-maintained scoring == batch scorer, replay idempotence, before-image
-guards, short-document NULL parity."""
+maintained scoring == batch scorer, replay idempotence, short-document
+NULL parity."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,8 +42,7 @@ def _batches(spark):
         SCHEMA,
     )
     # intra-batch chain: doc 5 inserted then updated in the same batch —
-    # only the latest event survives; the old grams' buckets come from the
-    # union of every mover's before image
+    # only the latest event survives
     b2 = spark.createDataFrame(
         [
             (5, "iota iota kappa", None, "insert", 20),
@@ -116,22 +115,6 @@ def test_replay_is_idempotent(spark, corpus0, tmp_path):
     write_ngram_state(spark, corpus0, path, n=2, nbuckets=8, doc_buckets=4)
     apply_changelog_ngram(spark, b1, path, batch_id=7)
     assert _counts(spark, path) == before
-
-
-def test_before_image_guard(spark, corpus0, tmp_path):
-    path = str(tmp_path / "lm")
-    write_ngram_state(spark, corpus0, path, n=2, nbuckets=8, doc_buckets=4)
-    null_before = spark.createDataFrame(
-        [(2, "changed text here", None, "update", 30)], SCHEMA
-    )
-    with pytest.raises(ValueError, match="NULL"):
-        apply_changelog_ngram(spark, null_before, path, batch_id=8)
-    missing_col = spark.createDataFrame(
-        [(2, "changed text here", "update", 30)],
-        "doc_id bigint, text string, operation string, ts_ms bigint",
-    )
-    with pytest.raises(ValueError, match="no 'before_text' column"):
-        apply_changelog_ngram(spark, missing_col, path, batch_id=9)
 
 
 def test_update_below_n_tokens_and_foreach_adapter(spark, corpus0, tmp_path):

@@ -739,6 +739,49 @@ def test_file_still_being_written_is_not_landed_yet(tmp_path, ordered):
     assert trigger_rows() == ({"last": 9}, [7, 8, 9])
 
 
+def test_query_starts_while_first_listed_file_is_empty(spark, tmp_path):
+    """The table schema comes from the first landed file: a zone whose
+    first-listed file is still empty (being written) starts, and the rows
+    of its complete file are delivered."""
+    path = tmp_path / "zone"
+    path.mkdir()
+    (path / "a.parquet").write_bytes(b"")
+    _write_rows(str(path), [1, 2, 3], "b.parquet")
+
+    df = _read_stream(spark, str(path), startFrom="earliest")
+    q = _memory_query(spark, df, "first_empty_sink", str(tmp_path / "ck"))
+    try:
+        q.processAllAvailable()
+        rows = spark.sql("select id, name from first_empty_sink order by id").collect()
+        assert [(r.id, r.name) for r in rows] == [(1, "n1"), (2, "n2"), (3, "n3")]
+    finally:
+        q.stop()
+
+
+def test_schema_reads_one_footer(tmp_path, monkeypatch):
+    """Schema inference opens the first landed file's footer only, however
+    many files the zone holds."""
+    import pyarrow.parquet as pq
+
+    from siddhi_io_cdc_spark.sources.polling import CDCPollDataSource
+
+    path = str(tmp_path / "zone")
+    os.makedirs(path)
+    for i in range(5):
+        _write_rows(path, [i], f"f{i}.parquet")
+    opened = []
+    orig = pq.read_schema
+
+    def spy(source, *a, **kw):
+        opened.append(source)
+        return orig(source, *a, **kw)
+
+    monkeypatch.setattr(pq, "read_schema", spy)
+    schema = CDCPollDataSource({"path": path, "pollingColumn": "id"}).schema()
+    assert schema.fieldNames() == ["id", "name"]
+    assert len(opened) == 1
+
+
 def test_gap_scan_reads_only_overlapping_files(tmp_path, monkeypatch):
     """The gap-wait contiguity scan opens only files whose cached [min, max]
     can overlap the window, plus every stat-less file."""

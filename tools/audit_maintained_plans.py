@@ -6,11 +6,10 @@ trees, so `tools/plan_audit.py` over `queries()` would only see a
 LocalTableScan. This tool builds each index shape at sf0.01 and audits
 the LIVE probe/serve plan instead — the plan a production reader runs:
 
-- cow IVF probe: `cell IN (...)` must be a PartitionFilter;
-- mor IVF probe: the live view (base ∪ delta − tombstones) must STILL
-  show cell PartitionFilters on every file scan, no Python nodes;
-- mor BM25 probe: term-bucket PartitionFilters on base+delta postings;
-- mor KN serve: broadcast-join chain, zero Python nodes.
+- IVF probe: the live view (base ∪ delta − tombstones) must show
+  `cell IN (...)` PartitionFilters on every file scan, no Python nodes;
+- BM25 probe: term-bucket PartitionFilters on base+delta postings;
+- KN serve: broadcast-join chain, zero Python nodes.
 
 Usage: PYTHONPATH=/root/repo python tools/audit_maintained_plans.py
 """
@@ -88,12 +87,8 @@ def main() -> int:
         F.lit(1).cast("bigint").alias("ts_ms"),
     )
 
-    cow_ivf = tempfile.mkdtemp(prefix="audit_ivf_cow_")
-    write_ivf_index(emb, cow_ivf, nlist=8, seed=42)
-    _audit("probe_ivf_index (cow)", probe_ivf_index(spark, cow_ivf, q, k=10, nprobe=4))
-
     mor_ivf = tempfile.mkdtemp(prefix="audit_ivf_mor_")
-    write_ivf_index(emb, mor_ivf, nlist=8, seed=42, layout="mor")
+    write_ivf_index(emb, mor_ivf, nlist=8, seed=42)
     apply_changelog_ivf(spark, mor_ivf, ins_vecs, batch_id=0)
     _audit(
         "probe_ivf_index (mor: base+delta-tombstones)",
@@ -101,9 +96,7 @@ def main() -> int:
     )
 
     mor_bm25 = tempfile.mkdtemp(prefix="audit_bm25_mor_")
-    write_bm25_index(
-        spark, docs.where(F.col("doc_id") % 5 != 0), mor_bm25, layout="mor"
-    )
+    write_bm25_index(spark, docs.where(F.col("doc_id") % 5 != 0), mor_bm25)
     apply_changelog_bm25(spark, mor_bm25, ins_docs, batch_id=0)
     _audit(
         "bm25_topk_indexed (mor)",
@@ -134,14 +127,14 @@ def main() -> int:
     mor_kn = tempfile.mkdtemp(prefix="audit_kn_mor_")
     write_ngram_state(
         spark, docs.where(F.col("doc_id") % 5 != 0), mor_kn,
-        n=5, nbuckets=4, doc_buckets=2, layout="mor",
+        n=5, nbuckets=4, doc_buckets=2,
     )
     apply_changelog_ngram(spark, ins_docs, mor_kn, batch_id=0)
     _audit("kneser_ney_from_state (mor)", kneser_ney_from_state(spark, mor_kn))
 
     import shutil
 
-    for p in (cow_ivf, mor_ivf, mor_bm25, mor_kn):
+    for p in (mor_ivf, mor_bm25, mor_kn):
         shutil.rmtree(p, ignore_errors=True)
     return 0
 

@@ -1,15 +1,13 @@
 """O(batch) evidence for the maintained appliers: apply a CONSTANT-size
 changelog batch to each maintained index (Kneser-Ney n-gram LM, BM25
 inverted index, IVF ANN index) at increasing corpus scale and record the
-per-batch apply wall-time plus the touched-partition counts.
+per-batch apply wall-time.
 
-This is the measurement VERDICT r10/r11 asked for: the appliers claim
-O(batch + touched buckets) per micro-batch. A ~100-doc batch at n=5
-produces thousands of distinct grams/terms, so the touched set can
-approach ALL buckets — in the copy-on-write merge that degrades to an
-O(corpus) partition rewrite. A flat curve across sf0.1 -> sf1 -> sf2
-proves the bound; a linear curve falsifies it (and the fix, not the
-assertion, is what ships).
+The appliers claim O(batch) per micro-batch (merge-on-read deltas and
+tombstones). A flat curve across sf0.1 -> sf1 -> sf2 proves the bound; a
+linear curve falsifies it. The copy-on-write appliers this replaced
+touched all 64 buckets per ~100-doc batch and grew with the corpus
+(committed as BENCH_apply_curve_cow_clean_r12.json).
 
 Batch shape (constant across scale points): 40 inserts (new ids past the
 corpus max) + 40 updates + 20 deletes, texts/vectors drawn from the
@@ -20,7 +18,7 @@ workload is identical at every point.
 
 Usage:
     python tools/bench_apply_curve.py --sf /root/testdata/sf0.1 \
-        [--appliers ngram,bm25,ivf] [--batches 3] [--mode cow|mor]
+        [--appliers ngram,bm25,ivf] [--batches 3] [--compact-end]
 Prints one JSON line per applier.
 """
 
@@ -127,94 +125,68 @@ def _vec_batch(spark, sf_dir: str, b: int):
     return spark.createDataFrame(rows, lazy.schema)
 
 
-def run_ngram(spark, sf_dir: str, batches: int, mode: str) -> dict:
-    from pyspark.sql import functions as F
-
+def run_ngram(spark, sf_dir: str, batches: int) -> dict:
     from siddhi_io_cdc_spark.streaming.ngram_lm import (
-        _doc_gram_tf, _gbucket, apply_changelog_ngram, write_ngram_state,
+        apply_changelog_ngram, write_ngram_state,
     )
 
     path = tempfile.mkdtemp(prefix="curve_ngram_")
     docs = spark.read.parquet(sf_dir.rstrip("/") + "/documents.parquet")
-    kw = {"layout": "mor"} if mode == "mor" else {}
     t0 = time.monotonic()
-    write_ngram_state(spark, docs, path, n=5, nbuckets=64, doc_buckets=16, **kw)
+    write_ngram_state(spark, docs, path, n=5, nbuckets=64, doc_buckets=16)
     build = time.monotonic() - t0
-    out = {"applier": "ngram_lm", "mode": mode, "build_sec": round(build, 3),
-           "apply_sec": [], "touched_buckets": []}
+    out = {"applier": "ngram_lm", "build_sec": round(build, 3), "apply_sec": []}
     for b in range(batches):
         batch = _doc_batch(spark, sf_dir, b)
-        tb = _doc_gram_tf(
-            batch.where(F.col("operation") != "delete"), 5, "doc_id", "text"
-        ).select(_gbucket(5, 64).alias("g")).unionByName(
-            _doc_gram_tf(
-                batch.where(F.col("operation").isin("update", "delete")),
-                5, "doc_id", "before_text",
-            ).select(_gbucket(5, 64).alias("g"))
-        ).distinct().count()
         t0 = time.monotonic()
         apply_changelog_ngram(spark, batch, path, batch_id=b + 1)
         out["apply_sec"].append(round(time.monotonic() - t0, 3))
-        out["touched_buckets"].append(int(tb))
-    _maybe_compact_end(spark, path, mode, out)
+    _maybe_compact_end(spark, path, out)
     shutil.rmtree(path, ignore_errors=True)
     return out
 
 
-def _maybe_compact_end(spark, path: str, mode: str, out: dict) -> None:
+def _maybe_compact_end(spark, path: str, out: dict, compact=None) -> None:
     """With --compact-end, time the compaction fold after the batches —
-    the amortized rewrite a mor state pays every compact_every batches
+    the amortized rewrite a state pays every compact_every batches
     (expected to scale with the corpus; that is the point: it is paid
     once per 16 batches instead of on every one)."""
-    if mode == "mor" and COMPACT_END:
-        from siddhi_io_cdc_spark.streaming.mor import mor_compact
+    if COMPACT_END:
+        if compact is None:
+            from siddhi_io_cdc_spark.streaming.mor import mor_compact as compact
 
         t0 = time.monotonic()
-        mor_compact(spark, path)
+        compact(spark, path)
         out["compact_sec"] = round(time.monotonic() - t0, 3)
 
 
 COMPACT_END = False
 
 
-def run_bm25(spark, sf_dir: str, batches: int, mode: str) -> dict:
+def run_bm25(spark, sf_dir: str, batches: int) -> dict:
     from siddhi_io_cdc_spark.streaming.bm25_index import (
-        apply_changelog_bm25, write_bm25_index,
+        apply_changelog_bm25, compact_bm25_index, write_bm25_index,
     )
 
     path = tempfile.mkdtemp(prefix="curve_bm25_")
     docs = spark.read.parquet(sf_dir.rstrip("/") + "/documents.parquet")
-    kw = {"layout": "mor"} if mode == "mor" else {}
     t0 = time.monotonic()
-    write_bm25_index(spark, docs, path, nbuckets=64, doc_buckets=16, **kw)
+    write_bm25_index(spark, docs, path, nbuckets=64, doc_buckets=16)
     build = time.monotonic() - t0
-    out = {"applier": "bm25", "mode": mode, "build_sec": round(build, 3),
-           "apply_sec": [], "touched_buckets": []}
+    out = {"applier": "bm25", "build_sec": round(build, 3), "apply_sec": []}
     for b in range(batches):
         batch = _doc_batch(spark, sf_dir, b)
         t0 = time.monotonic()
         apply_changelog_bm25(spark, path, batch, batch_id=b + 1)
         out["apply_sec"].append(round(time.monotonic() - t0, 3))
-        out["touched_buckets"].append(64)
-    if mode == "mor" and COMPACT_END:
-        from siddhi_io_cdc_spark.streaming.bm25_index import compact_bm25_index
-
-        t0 = time.monotonic()
-        compact_bm25_index(spark, path)
-        out["compact_sec"] = round(time.monotonic() - t0, 3)
+    _maybe_compact_end(spark, path, out, compact_bm25_index)
     shutil.rmtree(path, ignore_errors=True)
     return out
 
 
-def run_ivf(spark, sf_dir: str, batches: int, mode: str) -> dict:
-    from pyspark.sql import functions as F
-
-    from siddhi_io_cdc_spark.functions.similarity import (
-        ivf_assign, write_ivf_index,
-    )
-    from siddhi_io_cdc_spark.streaming.ivf_index import (
-        apply_changelog_ivf, load_codebook,
-    )
+def run_ivf(spark, sf_dir: str, batches: int) -> dict:
+    from siddhi_io_cdc_spark.functions.similarity import write_ivf_index
+    from siddhi_io_cdc_spark.streaming.ivf_index import apply_changelog_ivf
 
     path = tempfile.mkdtemp(prefix="curve_ivf_")
     emb = spark.read.parquet(sf_dir.rstrip("/") + "/embeddings.parquet").select(
@@ -222,30 +194,17 @@ def run_ivf(spark, sf_dir: str, batches: int, mode: str) -> dict:
     )
     n = emb.count()
     nlist = max(8, int(math.sqrt(n)))  # the docstring's nlist ~= sqrt(N)
-    kw = {"layout": "mor"} if mode == "mor" else {}
     t0 = time.monotonic()
-    write_ivf_index(emb, path, nlist=nlist, seed=42, **kw)
+    write_ivf_index(emb, path, nlist=nlist, seed=42)
     build = time.monotonic() - t0
-    centroids = load_codebook(spark, path)
-    out = {"applier": "ivf", "mode": mode, "nlist": nlist,
-           "build_sec": round(build, 3), "apply_sec": [],
-           "touched_buckets": []}
+    out = {"applier": "ivf", "nlist": nlist, "build_sec": round(build, 3),
+           "apply_sec": []}
     for b in range(batches):
         batch = _vec_batch(spark, sf_dir, b)
-        tb = (
-            batch.where(F.col("operation") != "delete")
-            .select(ivf_assign(F.col("embedding"), centroids).alias("c"))
-            .unionByName(
-                batch.where(F.col("operation").isin("update", "delete"))
-                .select(ivf_assign(F.col("before_embedding"), centroids).alias("c"))
-            )
-            .distinct().count()
-        )
         t0 = time.monotonic()
         apply_changelog_ivf(spark, path, batch, batch_id=b + 1)
         out["apply_sec"].append(round(time.monotonic() - t0, 3))
-        out["touched_buckets"].append(int(tb))
-    _maybe_compact_end(spark, path, mode, out)
+    _maybe_compact_end(spark, path, out)
     shutil.rmtree(path, ignore_errors=True)
     return out
 
@@ -255,9 +214,8 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--appliers", default="ngram,bm25,ivf")
     ap.add_argument("--batches", type=int, default=3)
-    ap.add_argument("--mode", default="cow", choices=["cow", "mor"])
     ap.add_argument("--compact-end", action="store_true",
-                    help="after the batches, time a mor compaction fold")
+                    help="after the batches, time a compaction fold")
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     args = ap.parse_args()
     global COMPACT_END
@@ -275,7 +233,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     runners = {"ngram": run_ngram, "bm25": run_bm25, "ivf": run_ivf}
     for name in args.appliers.split(","):
-        r = runners[name](spark, args.sf, args.batches, args.mode)
+        r = runners[name](spark, args.sf, args.batches)
         r["sf_dir"] = args.sf
         r["batch_docs"] = BATCH_DOCS
         print(json.dumps(r), flush=True)

@@ -77,7 +77,7 @@ emb = spark.createDataFrame(
     "vec_id long, embedding array<double>",
 )
 ivf_root = f"{root}/ivf"
-write_ivf_index(emb, ivf_root, nlist=4, layout="mor")
+write_ivf_index(emb, ivf_root, nlist=4)
 delta = spark.createDataFrame(
     [("insert", i, [random.random() for _ in range(8)], i) for i in range(200, 240)],
     "operation string, vec_id long, embedding array<double>, ts_ms long",
@@ -87,7 +87,7 @@ qvec = [random.random() for _ in range(8)]
 served = probe_ivf_index(spark, ivf_root, qvec, k=5, nprobe=4).collect()
 all_emb = emb.unionByName(delta.select("vec_id", "embedding"))
 fresh_root = f"{root}/ivf_fresh"
-write_ivf_index(all_emb, fresh_root, nlist=4, layout="mor")
+write_ivf_index(all_emb, fresh_root, nlist=4)
 rebuilt = probe_ivf_index(spark, fresh_root, qvec, k=5, nprobe=4).collect()
 check("mor probe == rebuild",
       sorted(r.vec_id for r in served) == sorted(r.vec_id for r in rebuilt),
